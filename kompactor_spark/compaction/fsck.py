@@ -11,7 +11,7 @@ import glob
 import os
 from dataclasses import dataclass, field
 
-from kompactor_spark.compaction.metadata import read_snapshot
+from kompactor_spark.compaction.metadata import footer_time_stats, read_snapshot, snapshot_paths
 
 
 @dataclass
@@ -36,11 +36,9 @@ class FsckReport:
 
 
 def fsck_host(data_dir: str, host: str, time_col: str = "time") -> FsckReport:
-    import pyarrow.parquet as pq
-
     report = FsckReport(host=host)
     cataloged: dict[str, object] = {}
-    for sp in sorted(glob.glob(os.path.join(data_dir, host, "snapshots", "*.info.json"))):
+    for sp in snapshot_paths(data_dir, host):
         for _db, _tbl, f in read_snapshot(sp).all_files():
             cataloged[f.path] = f
 
@@ -56,21 +54,13 @@ def fsck_host(data_dir: str, host: str, time_col: str = "time") -> FsckReport:
             continue
         report.files_checked += 1
         abs_path = os.path.join(data_dir, rel)
-        md = pq.ParquetFile(abs_path).metadata
+        rows, tmin, tmax = footer_time_stats(abs_path, time_col)
         problems = []
-        if md.num_rows != info.row_count:
-            problems.append(f"rows {md.num_rows} != {info.row_count}")
+        if rows != info.row_count:
+            problems.append(f"rows {rows} != {info.row_count}")
         if os.path.getsize(abs_path) != info.size_bytes:
             problems.append(f"size {os.path.getsize(abs_path)} != {info.size_bytes}")
-        tmin = tmax = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == time_col and col.statistics is not None and col.statistics.has_min_max:
-                    s = col.statistics
-                    tmin = s.min if tmin is None else min(tmin, s.min)
-                    tmax = s.max if tmax is None else max(tmax, s.max)
-        if tmin is not None and (tmin != info.min_time or tmax != info.max_time):
+        if rows and (tmin != info.min_time or tmax != info.max_time):
             problems.append(f"time [{tmin},{tmax}] != [{info.min_time},{info.max_time}]")
         if problems:
             report.stat_mismatches.append(f"{rel}: {'; '.join(problems)}")

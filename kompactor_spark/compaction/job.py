@@ -34,7 +34,10 @@ from pyspark.sql import functions as F
 from kompactor_spark.compaction.metadata import (
     ParquetFileInfo,
     SnapshotMetadata,
+    _remove_empty_dirs_upward,
+    footer_time_stats,
     read_snapshot,
+    snapshot_paths,
     write_snapshot_atomic,
 )
 from kompactor_spark.compaction.planner import (
@@ -111,9 +114,6 @@ class CompactionJob:
                 if not os.path.isdir(p):
                     raise FileNotFoundError(f"required dir missing: {p}")
 
-    def snapshot_paths(self, host: str) -> list[str]:
-        return sorted(glob.glob(os.path.join(self.data_dir, host, "snapshots", "*.info.json")))
-
     # -- execution ---------------------------------------------------------
     def run(self, before_hour_ns: int | None = None) -> list[CompactionReport]:
         self.validate_directories()
@@ -134,7 +134,7 @@ class CompactionJob:
         now_ns: int | None = None,
         before_hour_ns: int | None = None,
     ) -> CompactionReport:
-        snap_paths = self.snapshot_paths(host)
+        snap_paths = snapshot_paths(self.data_dir, host)
         snapshots = [read_snapshot(p) for p in snap_paths]
         if level == "generation":
             plan = plan_generation(host, snapshots, self.config, now_ns=now_ns)
@@ -261,9 +261,7 @@ class CompactionJob:
         with self._meta_lock:
             # metadata rewrite (atomic, BEFORE deletion — B7)
             compacted_paths = {f.path for f in existing}
-            new_infos = self._new_file_infos(
-                snap_paths, final_rel_paths, part_stats, existing, rows, tmin, tmax
-            )
+            new_infos = self._new_file_infos(snap_paths, final_rel_paths, part_stats, existing)
             for sp in snap_paths:
                 snap = read_snapshot(sp)
                 if self._rewrite_snapshot(snap, compacted_paths, new_infos):
@@ -272,7 +270,7 @@ class CompactionJob:
             # delete originals + prune (C14)
             for p in input_abs:
                 os.unlink(p)
-                self._remove_empty_dirs_upward(os.path.dirname(p))
+                _remove_empty_dirs_upward(os.path.dirname(p), self.data_dir)
 
         return GroupResult(
             key=(host, group.key.db_seg, group.key.table_seg, group.key.date, group.key.hour),
@@ -290,9 +288,6 @@ class CompactionJob:
         final_rel_paths: list[str],
         part_stats: list[tuple[str, int]],
         inputs: list[ParquetFileInfo],
-        rows: int,
-        tmin: int,
-        tmax: int,
     ) -> list[ParquetFileInfo]:
         """Fresh ids (B6: the reference reused sortedFiles[0].id), real
         sizes, per-part exact time stats from the parquet footers."""
@@ -301,16 +296,19 @@ class CompactionJob:
             next_id = max(next_id, read_snapshot(sp).max_file_id())
         infos = []
         for i, (rel, (abs_path, size)) in enumerate(zip(final_rel_paths, part_stats)):
-            p_rows, p_min, p_max = _footer_stats(abs_path, self.time_col)
+            p_rows, p_min, p_max = footer_time_stats(abs_path, self.time_col)
+            if p_rows == 0:  # a split part no row fell into: no range of its own
+                p_min = min(f.min_time for f in inputs)
+                p_max = max(f.max_time for f in inputs)
             infos.append(
                 ParquetFileInfo(
                     id=next_id + 1 + i,
                     path=rel,
                     size_bytes=size,
-                    row_count=p_rows if p_rows is not None else rows,
+                    row_count=p_rows,
                     chunk_time=inputs[0].chunk_time,
-                    min_time=p_min if p_min is not None else tmin,
-                    max_time=p_max if p_max is not None else tmax,
+                    min_time=p_min,
+                    max_time=p_max,
                 )
             )
         return infos
@@ -335,36 +333,3 @@ class CompactionJob:
         if changed:
             snap.recompute_totals()
         return changed
-
-    def _remove_empty_dirs_upward(self, d: str) -> None:
-        """kompactor.ts:5-17 semantics, stopping at the data dir."""
-        root = os.path.abspath(self.data_dir)
-        d = os.path.abspath(d)
-        while d.startswith(root) and d != root:
-            try:
-                os.rmdir(d)  # fails (caught) if non-empty
-            except OSError:
-                return
-            d = os.path.dirname(d)
-
-
-def _footer_stats(parquet_path: str, time_col: str):
-    """Exact per-file (rows, min, max) from Parquet footer statistics —
-    no data scan, int-exact (B3)."""
-    try:
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(parquet_path).metadata
-        rows = md.num_rows
-        tmin = tmax = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == time_col and col.statistics is not None:
-                    s = col.statistics
-                    if s.has_min_max:
-                        tmin = s.min if tmin is None else min(tmin, s.min)
-                        tmax = s.max if tmax is None else max(tmax, s.max)
-        return rows, tmin, tmax
-    except Exception:  # pragma: no cover — footer stats are an optimization
-        return None, None, None

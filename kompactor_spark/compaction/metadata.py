@@ -142,6 +142,53 @@ def write_snapshot_atomic(meta: SnapshotMetadata, path: str) -> None:
             os.unlink(tmp)
 
 
+def snapshot_paths(data_dir: str, host: str) -> list[str]:
+    """Sorted ``*.info.json`` snapshot paths of a host; [] when the
+    host has no ``snapshots/`` directory."""
+    snap_dir = os.path.join(data_dir, host, "snapshots")
+    if not os.path.isdir(snap_dir):
+        return []
+    return sorted(
+        os.path.join(snap_dir, n) for n in os.listdir(snap_dir) if n.endswith(".info.json")
+    )
+
+
+def footer_time_stats(path: str, time_col: str = "time") -> tuple[int, int | None, int | None]:
+    """(row_count, min, max) of ``time_col`` from the Parquet footer —
+    a metadata read, int-exact (B3). Reads the one column only when a
+    row group lacks statistics, so a stats-less file still gets its
+    true range; min/max are None only for a file with no rows."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    col_idx = next(
+        (i for i in range(md.num_columns) if md.schema.column(i).path == time_col), None
+    )
+    if col_idx is None:
+        raise ValueError(f"{path}: no {time_col!r} column")
+    if md.num_rows == 0:
+        return 0, None, None
+    stats = [md.row_group(rg).column(col_idx).statistics for rg in range(md.num_row_groups)]
+    if all(st is not None and st.has_min_max for st in stats):
+        return md.num_rows, min(int(st.min) for st in stats), max(int(st.max) for st in stats)
+    col = pf.read(columns=[time_col]).column(time_col)
+    return md.num_rows, int(pc.min(col).as_py()), int(pc.max(col).as_py())
+
+
+def _remove_empty_dirs_upward(d: str, stop: str) -> None:
+    """Delete empty dirs from d upward, never past stop
+    (kompactor.ts:5-17, C14 semantics)."""
+    d, stop = os.path.abspath(d), os.path.abspath(stop)
+    while d.startswith(stop) and d != stop:
+        try:
+            os.rmdir(d)  # fails (caught) if non-empty
+        except OSError:
+            return
+        d = os.path.dirname(d)
+
+
 def bootstrap_snapshot(
     data_dir: str,
     host: str,
@@ -157,8 +204,6 @@ def bootstrap_snapshot(
     import glob as _glob
     import re as _re
 
-    import pyarrow.parquet as pq
-
     files: list[tuple[int, int, ParquetFileInfo]] = []
     next_id = 1
     base = os.path.join(data_dir, host, "dbs")
@@ -168,15 +213,7 @@ def bootstrap_snapshot(
         if not m:
             continue
         db_id, table_id = int(m.group(1)), int(m.group(2))
-        md = pq.ParquetFile(p).metadata
-        tmin = tmax = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                if col.path_in_schema == time_col and col.statistics is not None and col.statistics.has_min_max:
-                    s = col.statistics
-                    tmin = s.min if tmin is None else min(tmin, s.min)
-                    tmax = s.max if tmax is None else max(tmax, s.max)
+        rows, tmin, tmax = footer_time_stats(p, time_col)
         files.append(
             (
                 db_id,
@@ -185,8 +222,8 @@ def bootstrap_snapshot(
                     id=next_id,
                     path=rel,
                     size_bytes=os.path.getsize(p),
-                    row_count=md.num_rows,
-                    chunk_time=tmin or 0,
+                    row_count=rows,
+                    chunk_time=tmin or 0,  # 0 only for a file with no rows
                     min_time=tmin or 0,
                     max_time=tmax or 0,
                 ),

@@ -24,16 +24,18 @@ path stays a plain columnar parquet scan with pushdown intact.
 
 from __future__ import annotations
 
-import glob
 import os
 
-from kompactor_spark.compaction.metadata import ParquetFileInfo, read_snapshot
+from kompactor_spark.compaction.metadata import ParquetFileInfo, read_snapshot, snapshot_paths
+
+
+def _snapshot_id(path: str) -> int:
+    return int(os.path.basename(path).split(".")[0])
 
 
 def snapshot_ids(data_dir: str, host: str) -> list[int]:
     """Sorted numeric ids of the host's committed snapshots."""
-    paths = glob.glob(os.path.join(data_dir, host, "snapshots", "*.info.json"))
-    return sorted(int(os.path.basename(p).split(".")[0]) for p in paths)
+    return sorted(_snapshot_id(p) for p in snapshot_paths(data_dir, host))
 
 
 def files_as_of(
@@ -52,11 +54,9 @@ def files_as_of(
     Later snapshots win on path collisions (same dedup rule as the
     compaction planner's cross-snapshot merge).
     """
-    snap_dir = os.path.join(data_dir, host, "snapshots")
     by_path: dict[str, ParquetFileInfo] = {}
-    for sp in sorted(glob.glob(os.path.join(snap_dir, "*.info.json"))):
-        sid = int(os.path.basename(sp).split(".")[0])
-        if as_of is not None and sid > as_of:
+    for sp in snapshot_paths(data_dir, host):
+        if as_of is not None and _snapshot_id(sp) > as_of:
             continue
         for db_id, table_id, f in read_snapshot(sp).all_files():
             if db is not None and db_id != db:
@@ -138,8 +138,7 @@ def expire_snapshots(data_dir: str, host: str) -> dict:
         write_snapshot_atomic,
     )
 
-    snap_dir = os.path.join(data_dir, host, "snapshots")
-    paths = sorted(glob.glob(os.path.join(snap_dir, "*.info.json")))
+    paths = snapshot_paths(data_dir, host)
     if len(paths) <= 1:
         return {"merged": 0, "kept": len(paths)}
     by_path: dict = {}
@@ -161,8 +160,8 @@ def expire_snapshots(data_dir: str, host: str) -> dict:
         databases=[(d, t) for d, t in sorted(dbs.items())],
     )
     merged.recompute_totals()
-    new_id = max(int(os.path.basename(p).split(".")[0]) for p in paths) + 1
-    out = os.path.join(snap_dir, f"{new_id:04d}.info.json")
+    new_id = max(_snapshot_id(p) for p in paths) + 1
+    out = os.path.join(data_dir, host, "snapshots", f"{new_id:04d}.info.json")
     write_snapshot_atomic(merged, out)
     for sp in paths:
         os.remove(sp)

@@ -27,7 +27,12 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from kompactor_spark.compaction.metadata import read_snapshot, write_snapshot_atomic
+from kompactor_spark.compaction.metadata import (
+    _remove_empty_dirs_upward,
+    read_snapshot,
+    snapshot_paths,
+    write_snapshot_atomic,
+)
 
 
 @dataclass
@@ -46,26 +51,6 @@ class RetentionReport:
             f"{self.host}: {mode} {len(self.pruned_paths)}/{self.examined_files} files, "
             f"{self.freed_bytes} bytes freed (cutoff={self.cutoff_ns})"
         )
-
-
-def _snapshot_paths(data_dir: str, host: str) -> list[str]:
-    snap_dir = os.path.join(data_dir, host, "snapshots")
-    if not os.path.isdir(snap_dir):
-        return []
-    return sorted(
-        os.path.join(snap_dir, n) for n in os.listdir(snap_dir) if n.endswith(".info.json")
-    )
-
-
-def _remove_empty_dirs_upward(d: str, stop: str) -> None:
-    """Delete empty dirs from d upward, never past stop (C14 semantics)."""
-    d, stop = os.path.abspath(d), os.path.abspath(stop)
-    while d.startswith(stop) and d != stop:
-        try:
-            os.rmdir(d)
-        except OSError:
-            return
-        d = os.path.dirname(d)
 
 
 def enforce_retention(
@@ -87,7 +72,7 @@ def enforce_retention(
         # Pass 1 — plan: collect expired entries per snapshot (metadata only).
         plans = []  # (snap_path, meta, expired_infos)
         expired_paths: dict[str, int] = {}  # rel path -> size (deduped across snapshots)
-        for snap_path in _snapshot_paths(data_dir, host):
+        for snap_path in snapshot_paths(data_dir, host):
             meta = read_snapshot(snap_path)
             expired = [f for _, _, f in meta.all_files() if f.max_time < cutoff_ns]
             rep.examined_files += sum(1 for _ in meta.all_files())

@@ -234,25 +234,6 @@ _FUSED_PAIRS_MAX_TEXT_BYTES = 64 << 20
 # pair-instance chunk size for the kernel's vectorized counting: caps
 # peak memory at ~2 arrays x chunk int64 regardless of shingle skew
 _KERNEL_PAIR_CHUNK = 1 << 24
-# Python-boundary flavor for the fused pair kernel (round 15, the
-# deferred VERDICT r14 #4 A/B): "arrow" = mapInArrow (the shipped
-# default since round 15), "pandas" = mapInPandas (the pre-r15 shape,
-# kept for A/Bs). Same numpy core either way; the arrow wrapper skips
-# the pandas conversion on BOTH sides of the boundary. Measured on the
-# graded l2_containment_collapsed row, interleaved identity-gated sf1
-# (scripts/r15_pairs_boundary_ab_out.json): eager 2.17 s -> 1.14 s
-# median (ratio vs the same-window DuckDB control 3.39x -> 1.78x) —
-# the pandas Series materialization of the text column and the
-# DataFrame->Arrow output conversion were most of the row's Python
-# boundary, the same lesson as the round-13 ANN kernel move. Read at
-# plan-construction time, like the dim_broadcast / staging knobs.
-_KERNEL_BOUNDARY_DEFAULT = "arrow"
-
-
-def _kernel_boundary() -> str:
-    import os
-
-    return os.environ.get("KOMPACTOR_PAIRS_BOUNDARY", _KERNEL_BOUNDARY_DEFAULT)
 
 
 def _pairs_small_input(df, id_col, text_col) -> bool:
@@ -405,10 +386,9 @@ def _pairs_kernel(
         out_schema += ", n_copies_a bigint, n_copies_b bigint"
 
     def compute(ids, copies, texts):
-        """numpy core shared by the pandas and arrow boundary wrappers
-        (round 15): ids/copies are numpy arrays, texts an iterable of
-        str|None; returns a dict of numpy output columns, or None when
-        no pair survives. Byte-identical math either way."""
+        """numpy core of the kernel: ids/copies are numpy arrays, texts
+        an iterable of str|None; returns a dict of numpy output columns,
+        or None when no pair survives."""
         from collections import defaultdict
 
         import numpy as np
@@ -507,21 +487,6 @@ def _pairs_kernel(
         return out
 
     def run(batches):
-        import pandas as pd
-
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
-        out = compute(
-            pdf[id_col].to_numpy(),
-            pdf[copies_col].to_numpy() if copies_col else None,
-            pdf[text_col],
-        )
-        if out is not None:
-            yield pd.DataFrame(out)
-
-    def run_arrow(batches):
         import pyarrow as pa
 
         parts = [b for b in batches if b.num_rows]
@@ -537,10 +502,11 @@ def _pairs_kernel(
             yield pa.RecordBatch.from_pydict(out)
 
     cols = [id_col, text_col] + ([copies_col] if copies_col else [])
-    src = df.select(*cols).coalesce(1)
-    if _kernel_boundary() == "arrow":
-        return src.mapInArrow(run_arrow, out_schema)
-    return src.mapInPandas(run, out_schema)
+    # mapInArrow, not mapInPandas (round 15): skipping the pandas
+    # conversion on both sides took the graded l2_containment_collapsed
+    # row from 2.17 s to 1.14 s median at sf1
+    # (scripts/r15_pairs_boundary_ab_out.json)
+    return df.select(*cols).coalesce(1).mapInArrow(run, out_schema)
 
 
 def jaccard_pairs(

@@ -148,28 +148,13 @@ def _compact_input(vals: DataFrame) -> bool:
     return n <= _SMALL_MAX_ROWS
 
 
-def _medium_staging() -> str:
-    """Medium-tier materialization strategy, env-switchable so the
-    choice is a measured config, not a code fork (VERDICT r8 #2: a22's
-    two-window sf10 spread tracked localCheckpoint block-store health;
-    the A/B in scripts/a22_staging_ab.py picks the default).
-
-    - ``checkpoint``: fan_out + lazy localCheckpoint (one
-      materialization into block storage, memory-local re-reads).
-    - ``rescan``: fan_out only — each of the pipeline's 2-3 passes
-      re-reads the source scan (immune to block-store health; pays
-      repeated decompression).
-    """
-    import os
-
-    return os.environ.get("KOMPACTOR_QUANTILE_MEDIUM_STAGING", "checkpoint")
-
-
 def _medium_stage(vals: DataFrame) -> DataFrame:
+    """Medium-tier materialization: fan_out + lazy localCheckpoint (one
+    materialization into block storage, memory-local re-reads). It beat
+    re-scanning the source on every pass in every A/B round, e.g.
+    6.15 s vs 8.33 s at sf10 (SCALE.md §7d addendum)."""
     from kompactor_spark.tables import fan_out
 
-    if _medium_staging() == "rescan":
-        return fan_out(vals)
     return fan_out(vals).localCheckpoint(eager=False)
 
 

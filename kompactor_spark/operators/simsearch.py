@@ -316,7 +316,7 @@ def batch_cosine_candidates(
     values buffer into the (n, d) matrix in one numpy call and take the
     output columns zero-copy. Same batch sizing (Arrow
     maxRecordsPerBatch), same semantics; measured interleaved A/B in
-    scripts/ann_fuse_ab.py.
+    scripts/ann_fuse_ab_out.json.
 
     Why not the JVM fold: at dim 64 the ``aggregate(zip_with(...))``
     lambdas are interpreted per element (the measured _UNROLL_MAX_DIM

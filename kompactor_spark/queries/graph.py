@@ -27,7 +27,7 @@ NS_PER_HOUR = 3_600_000_000_000
 # (hour, event_type) buckets where BOTH users were active, kept when
 # >= 2 (a single shared bucket is noise).
 #
-# Shape (round 11, the measured g1 A/B — scripts/g1_shapes_ab.py,
+# Shape (round 11, the measured g1 A/B — SCALE.md "Round-11: g1 settled",
 # VERDICT r10 #1): ONE shuffle builds per-bucket distinct user sets
 # (collect_set folds the dedup into the aggregation, partial sets merge
 # map-side), then an Arrow kernel expands each bucket's pairs in numpy
@@ -58,19 +58,6 @@ _G1_MAX_BUCKET_PAIRS = 50_000_000
 #: flush grain invisible to results.
 _G1_FLUSH_PAIRS = 4_000_000
 _PAIR_PACK_BITS = 32  # pair key = u << 32 | v; requires 0 <= id < 2^31
-# Python-boundary flavor for the pair-count kernel (round 15, the same
-# A/B class as operators/dedup._kernel_boundary): "pandas" =
-# mapInPandas (pre-r15; pandas materializes one object ndarray per
-# bucket for the list column), "arrow" = mapInArrow (zero-copy int64
-# views over the Arrow list offsets/values). Default set by the
-# measured A/B in scripts/r15_g1_boundary_ab.py.
-_PAIRKERNEL_BOUNDARY_DEFAULT = "pandas"
-
-
-def _pairkernel_boundary() -> str:
-    import os
-
-    return os.environ.get("KOMPACTOR_PAIRKERNEL_BOUNDARY", _PAIRKERNEL_BOUNDARY_DEFAULT)
 
 
 def _pair_count_kernel(buckets, out_min_w: int):
@@ -80,12 +67,9 @@ def _pair_count_kernel(buckets, out_min_w: int):
     exchange, never their sum); packing is int64-exact (ids bounded
     below 2^31, checked loudly per batch).
 
-    Round 15: the numpy expansion core is shared by two boundary
-    wrappers — mapInPandas (the pre-r15 shape: pandas materializes an
-    ndarray-of-ndarrays for the list column, one object per bucket) and
-    mapInArrow (list offsets + flat values read directly from the Arrow
-    batch; each bucket is a zero-copy int64 view). Selected by
-    KOMPACTOR_PAIRKERNEL_BOUNDARY at plan-construction time."""
+    The boundary is mapInPandas: int-list columns are cheap to cross,
+    and mapInArrow measured a tie (g1 1.83 s vs 1.91 s, m11 3.82 s vs
+    4.05 s at sf1, scripts/r15_g1_boundary_ab_out.json)."""
 
     # captured by VALUE into the task closure (module globals would be
     # re-imported fresh on the python workers, defeating test overrides)
@@ -165,7 +149,7 @@ def _pair_count_kernel(buckets, out_min_w: int):
         if n_pending:
             yield flush()
 
-    def run_pandas(batches):
+    def run(batches):
         import pandas as pd
 
         def arrays():
@@ -175,32 +159,7 @@ def _pair_count_kernel(buckets, out_min_w: int):
         for pk, cnt in expand(arrays()):
             yield pd.DataFrame({"pk": pk, "w": cnt})
 
-    def run_arrow(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        def arrays():
-            for b in batches:
-                col = b.column(0)
-                if col.offset != 0:  # sliced array: offsets are relative
-                    col = col.combine_chunks() if hasattr(col, "combine_chunks") else col
-                    for us in col.to_pylist():
-                        yield np.asarray(us, dtype=np.int64)
-                    continue
-                offs = np.asarray(col.offsets)
-                vals = np.asarray(col.values)
-                for i in range(len(col)):
-                    yield vals[offs[i] : offs[i + 1]]
-
-        for pk, cnt in expand(arrays()):
-            yield pa.RecordBatch.from_pydict(
-                {"pk": pk, "w": cnt.astype(np.int64)}
-            )
-
-    if _pairkernel_boundary() == "arrow":
-        partial = buckets.mapInArrow(run_arrow, "pk bigint, w bigint")
-    else:
-        partial = buckets.mapInPandas(run_pandas, "pk bigint, w bigint")
+    partial = buckets.mapInPandas(run, "pk bigint, w bigint")
     return (
         partial.groupBy("pk")
         .agg(F.sum("w").cast("bigint").alias("w"))

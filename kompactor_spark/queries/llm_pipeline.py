@@ -396,7 +396,7 @@ def l2_dedup_clusters_collapsed(spark, sf_dir):
         # one local sort above it (the j19 shape) instead of a final
         # orderBy — whose range sampling re-ran the label probe over
         # every doc row AND whose exchange re-shuffled the whole output.
-        # scripts/r14_sortexec_ab2.py: sf1 fetch 0.62 s -> 0.49 s,
+        # scripts/r14_sortexec_ab2_out.json: sf1 fetch 0.62 s -> 0.49 s,
         # row-identical. Round 15 (ADVICE r14): the doc_id range
         # partitioning only survives the join if it plans as BROADCAST —
         # a sort-merge pick would insert a rep_id exchange and silently
@@ -1463,7 +1463,7 @@ def l4_repeated_ngrams(spark, sf_dir):
         # TWICE per job (guide §7.2). One hash exchange of the tiny
         # per-doc stat rows (conf-sized, AQE-coalescible) makes the
         # sampling re-read a skinny shuffle instead
-        # (scripts/r14_sortexec_ab.py: sf1 1.01 s -> 0.83 s).
+        # (scripts/r14_sortexec_ab_out.json: sf1 1.01 s -> 0.83 s).
         .repartition("doc_id")
         .orderBy("doc_id")
     )
@@ -1813,8 +1813,8 @@ def _collision_guarded_tf(dt):
     """,
 )
 def l4_surprisal(spark, sf_dir):
-    """Round 12 shape (scripts/surprisal_shapes_ab.py, the measured
-    5-arm A/B closing VERDICT r11 #1): every aggregate and the join
+    """Round 12 shape (the measured 5-arm A/B closing VERDICT r11 #1,
+    recorded in PLANS.md): every aggregate and the join
     key on ONE primitive int64 — xxhash64(token) — instead of
     variable-length strings; token strings never reach the output, so
     they never need to survive the first projection. Same-session sf10
@@ -2749,7 +2749,7 @@ def l2_semantic_dedup(spark, sf_dir):
         # Round 14 (optimization): hash barrier before the presentation
         # sort. The orderBy's range sampling re-executed the k-means
         # assign kernel + per-cell pair join TWICE per job — the row
-        # literally cost double (scripts/r14_sortexec_ab2.py: sf1
+        # literally cost double (scripts/r14_sortexec_ab2_out.json: sf1
         # 14.74 s -> 7.78 s; guide §7.2).
         .repartition("id_a")
         .orderBy("id_a", "id_b")

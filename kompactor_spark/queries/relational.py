@@ -386,7 +386,7 @@ def j8_asof_join(spark, sf_dir):
         # running-last window (the 0.63 s component of the sf10
         # decomposition) a second time per job. One hash exchange of the
         # skinny result rows makes the sampling re-read a shuffle
-        # instead (scripts/r14_sortexec_ab.py + /tmp sf10 reruns:
+        # instead (scripts/r14_sortexec_ab_out.json + sf10 reruns:
         # sf1 fetch 0.81 s -> 0.69 s; sf10 fetch min 4.34 -> 2.89 in a
         # noisy window). The §3.3 sink reclassification stays un-adopted:
         # its pre-committed trigger (>=1.8x two consecutive rounds) has

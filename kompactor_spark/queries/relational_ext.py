@@ -1505,7 +1505,7 @@ def m11_basket_lift(spark, sf_dir):
     # pre-aggregates packed-key partials before the exchange — no join
     # builds pairs at all. Supports/census are per-part and global
     # countDistinct over the raw scan (partial-distinct expansion, one
-    # pass). Measured interleaved same-session (scripts/m11_shape_ab.py,
+    # pass). Measured interleaved same-session (scripts/m11_shape_ab_out.json,
     # identity-gated): sf1 5.40 s -> 3.40 s (2.62x -> 1.65x); the
     # shuffle_hash-pinned self-join arm measured 1.71x — the kernel wins
     # AND removes the hazard class structurally.
@@ -1683,7 +1683,7 @@ def j19_nearest_value_join(spark, sf_dir):
         # orderBy plans as Exchange(rangepartitioning) whose bounds
         # sampling pass RE-EXECUTES everything below it — here the whole
         # BroadcastNestedLoopJoin ran twice per job (guide §7.2; probe
-        # and A/B in scripts/r14_sortexec_ab.py: sf1 sink 12.9 s -> 4.3 s,
+        # and A/B in scripts/r14_sortexec_ab_out.json: sf1 sink 12.9 s -> 4.3 s,
         # row-order-identical output). Sound because the Voronoi cells
         # partition the real line: each fact row emits EXACTLY one output
         # row, so range partitioning by (l_orderkey, l_linenumber) below

@@ -189,7 +189,7 @@ def v3_map_in_pandas_chunker(spark, sf_dir):
         .mapInPandas(_chunker, schema=_CHUNK_SCHEMA)
         # Round 14 (optimization): hash barrier before the presentation
         # sort — orderBy's range sampling re-ran the Python chunker
-        # kernel twice per job (scripts/r14_sortexec_ab2.py: sf1
+        # kernel twice per job (scripts/r14_sortexec_ab2_out.json: sf1
         # 0.96 s -> 0.76 s; guide §7.2)
         .repartition("doc_id")
         .orderBy("doc_id", "chunk_id")

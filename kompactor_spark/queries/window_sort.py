@@ -48,7 +48,7 @@ def w1_ranking(spark, sf_dir):
         )
         # Round 14 (optimization): hash barrier before the presentation
         # sort — orderBy's range sampling re-executed the 5-function
-        # ranking window twice per job (scripts/r14_sortexec_ab2.py:
+        # ranking window twice per job (scripts/r14_sortexec_ab2_out.json:
         # sf1 0.40 s -> 0.36 s; guide §7.2)
         .repartition("c_custkey")
         .orderBy("c_custkey")

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from kompactor_spark.compaction.metadata import (
     ParquetFileInfo,
     SnapshotMetadata,
+    footer_time_stats,
     read_snapshot,
     write_snapshot_atomic,
 )
@@ -138,7 +139,7 @@ class IngestJob:
                 )
                 abs_path = os.path.join(self.data_dir, rel)
                 written = staged[part_dir]
-                n_rows, mn, mx = self._footer_stats(written)
+                n_rows, mn, mx = footer_time_stats(written, self.time_col)
                 os.makedirs(os.path.dirname(abs_path), exist_ok=True)
                 os.replace(written, abs_path)
                 new_infos.append(
@@ -162,33 +163,6 @@ class IngestJob:
             )
             if self.auto_compact:
                 self._compact_closed_hours(df.sparkSession)
-
-    def _footer_stats(self, parquet_path: str) -> tuple[int, int, int]:
-        """(row_count, min_time, max_time) from Parquet footer metadata —
-        a metadata read, never a data scan. Falls back to a single-file
-        column read only if a writer omitted column statistics."""
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(parquet_path)
-        md = pf.metadata
-        col_idx = next(
-            i for i in range(md.num_columns) if md.schema.column(i).name == self.time_col
-        )
-        mins: list[int] = []
-        maxs: list[int] = []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            if st is None or not st.has_min_max:
-                mins, maxs = [], []
-                break
-            mins.append(int(st.min))
-            maxs.append(int(st.max))
-        if mins:
-            return md.num_rows, min(mins), max(maxs)
-        col = pf.read(columns=[self.time_col]).column(self.time_col)
-        import pyarrow.compute as pc
-
-        return md.num_rows, int(pc.min(col).as_py()), int(pc.max(col).as_py())
 
     def _compact_closed_hours(self, spark) -> None:
         """Continuous compaction: merge every closed hour with >1 file.

@@ -88,8 +88,8 @@ QUERIES = ["a1_groupby_q1", "j9_star_join", "j14_binned_interval_join", "j8_asof
            # real work (engine sweep rows were 55 s / 40 s).
            "a25_weighted_median", "a9c_percentile_disc",
            # round 10: every remaining >=20s engine sweep row whose
-           # DuckDB oracle COMPLETES at sf10 (probed one-shot via
-           # scripts/probe_duck_sf10.py before admission - the
+           # DuckDB oracle COMPLETES at sf10 (probed one-shot before
+           # admission, SCALE.md "Round-10 twin sweep" - the
            # in-process DuckDB side has no timeout, so DNF candidates
            # like g4's wedge oracle must not enter this list). Four of
            # these were first FIXED this round (batch scorer kernel,
@@ -340,13 +340,13 @@ def main() -> None:
         "a22_equi_depth_histogram": (
             "round 9, settles the r8 two-window spread: the swing was the "
             "medium staging (wasted dispatch count + localCheckpoint "
-            "block-store write, isolated in scripts/a22_staging_ab.py). "
+            "block-store write, isolated in SCALE.md §7d addendum). "
             "Now collapse-first: (distinct value, count) cells -> one "
             "weighted Arrow kernel, no staging materialization. Settled "
             "same-window A/B 1.105 s vs 1.766 s; protocol row 0.69x "
             "(construction timed). High-cardinality falls back to the "
-            "staged composed plan (KOMPACTOR_QUANTILE_MEDIUM_STAGING, "
-            "checkpoint default — beat rescan in every A/B)"
+            "staged composed plan (localCheckpoint staging — beat "
+            "rescan in every A/B)"
         ),
     }
     for k, note in notes.items():

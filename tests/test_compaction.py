@@ -276,6 +276,33 @@ def test_oversized_output_splits(spark, tmp_path):
         assert hi1 < lo2
 
 
+def test_split_empty_part_cataloged(spark, tmp_path):
+    """A split part no row falls into (rows only at the hour's edges)
+    is cataloged with 0 rows and the inputs' time range, and the
+    catalog stays readable and fsck-clean."""
+    from kompactor_spark.compaction import CompactionConfig
+    from kompactor_spark.compaction.fsck import fsck_host
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    for wal, t0 in [(1, h14), (2, h14 + 3000 * FX.NS)]:
+        b.add_parquet(0, 3, "2025-01-26", 14, f"{wal:010d}.parquet",
+                      FX.make_rows(20, t0, FX.NS, seed=wal))
+    b.write_snapshot()
+    lo = min(e["info"]["min_time"] for e in b.files)
+    hi = max(e["info"]["max_time"] for e in b.files)
+    report = run_job(spark, root, config=CompactionConfig(max_desired_file_size_bytes=1000))
+    outs = set(report.results[0].output_paths)
+    parts = [f for _, _, _, f in catalog_files(root) if f.path in outs]
+    assert len(parts) == len(outs) >= 3
+    empty = [f for f in parts if f.row_count == 0]
+    assert empty and all((f.min_time, f.max_time) == (lo, hi) for f in empty)
+    assert sum(f.row_count for f in parts) == 40
+    assert_invariants(root)
+    assert fsck_host(root, FX.HOST).ok
+
+
 def test_compute_split_cuts_unit():
     from kompactor_spark.compaction import CompactionConfig, compute_split_cuts
 
@@ -411,6 +438,34 @@ def test_expire_snapshots_folds_history(spark, tmp_path):
         read_table(spark, root, FX.HOST, 0, 3, as_of=2)  # horizon moved
     # idempotent second call is a no-op
     assert expire_snapshots(root, FX.HOST) == {"merged": 0, "kept": 1}
+
+
+def test_stats_less_file_cataloged_and_checked(tmp_path):
+    """A file written without column statistics still gets its true
+    time range: bootstrap_snapshot reads the time column instead of
+    cataloging [0, 0], and fsck_host checks the range against it."""
+    from kompactor_spark.compaction.fsck import fsck_host
+    from kompactor_spark.compaction.metadata import bootstrap_snapshot, write_snapshot_atomic
+
+    root = str(tmp_path)
+    rel = f"{FX.HOST}/dbs/db-0/table-3/2025-01-26/10-00/0000000001.parquet"
+    os.makedirs(os.path.dirname(os.path.join(root, rel)))
+    os.makedirs(os.path.join(root, FX.HOST, "snapshots"))
+    rows = FX.make_rows(2, FX.BASE_NS, 2000 * FX.NS, seed=1)
+    pq.write_table(rows, os.path.join(root, rel), write_statistics=False)
+    times = rows.column("time").to_pylist()
+
+    snap = bootstrap_snapshot(root, FX.HOST)
+    [(_, _, info)] = snap.all_files()
+    assert (info.min_time, info.max_time, info.row_count) == (min(times), max(times), 2)
+    snap_path = os.path.join(root, FX.HOST, "snapshots", "0001.info.json")
+    write_snapshot_atomic(snap, snap_path)
+    assert fsck_host(root, FX.HOST).ok
+
+    info.min_time -= 1  # hand-corrupt the catalog
+    write_snapshot_atomic(snap, snap_path)
+    report = fsck_host(root, FX.HOST)
+    assert [m.split(":")[0] for m in report.stat_mismatches] == [rel]
 
 
 def test_cli_time_window_hours(spark, tmp_path, capsys):

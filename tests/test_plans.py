@@ -95,7 +95,7 @@ def test_w1_single_shuffle(spark, Q):
     round 14, exactly one more — the hash barrier on the presentation
     key that stops the final orderBy's range sampling from running the
     5-function ranking window twice per job (measured sf1 0.40→0.36 s,
-    scripts/r14_sortexec_ab2.py). The ranking itself still adds no
+    scripts/r14_sortexec_ab2_out.json). The ranking itself still adds no
     extra shuffle of the data."""
     p = plan(spark, Q["w1_ranking"](spark, SF))
     assert p.count("Exchange hashpartitioning") == 2
@@ -136,6 +136,19 @@ def test_m11_pairs_from_kernel_no_corpus_broadcast(spark, Q):
     assert ".distinct()" not in src  # dedup folded into collect_set
 
 
+@pytest.mark.parametrize(
+    "name", ["m11_basket_lift", "g1_cooccurrence_graph", "g2_degree_centrality"]
+)
+def test_graph_pair_kernel_pandas_boundary(spark, Q, name):
+    """The graph pair-count kernel crosses the Python boundary through
+    mapInPandas; mapInArrow measured a tie in round 15
+    (scripts/r15_g1_boundary_ab_out.json). Guard: no row may silently
+    switch the kernel's boundary."""
+    p = Q[name](spark, SF)._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in p, name
+    assert "MapInArrow" not in p, name
+
+
 def test_crossdoc_gram_build_shared_via_exchange_reuse(spark, Q):
     """l4_crossdoc (round 10): the expensive gram explode feeds both
     aggregates through ONE explicit gram-keyed exchange — the finalized
@@ -159,7 +172,7 @@ def test_batch_scoring_rows_use_arrow_kernel_no_expansion(spark, Q):
     whose interpreted folds measured 25-28 s at sf10. Round 13 moved
     the kernel from MapInPandas to MapInArrow (the Arrow→pandas
     list-column conversion was ~60% of the row at sf10 — see
-    scripts/ann_fuse_ab.py); the pin follows. The final window ranks
+    scripts/ann_fuse_ab_out.json); the pin follows. The final window ranks
     only the kernel's pruned candidates, so no join of any kind feeds
     it."""
     for name in ("l3_batch_topk", "l7_knn_classify"):

@@ -400,34 +400,6 @@ def test_medium_tier_row_confirm(spark, tmp_path):
     _assert_bit_equal(cuts, _spark_percentile(vals, "v", [0.25, 0.5, 0.9]))
 
 
-def test_medium_tier_rescan_staging_identical(spark, tmp_path, monkeypatch):
-    # Round 9 (VERDICT r8 #2): the medium tier's materialization is an
-    # env-switchable strategy — "rescan" must route to the same tier,
-    # skip the checkpoint, and yield bit-identical cuts (every pass
-    # recomputes value predicates; nothing depends on partition ids).
-    from kompactor_spark.operators import quantiles as Qz
-
-    p = str(tmp_path / "wide.parquet")
-    (
-        spark.range(0, 3_000_000)
-        .select(((F.col("id") % 997) / 3.0).alias("v"))
-        .coalesce(1)
-        .write.option("compression", "zstd")
-        .parquet(p)
-    )
-    vals = spark.read.parquet(p)
-    monkeypatch.setenv("KOMPACTOR_QUANTILE_MEDIUM_STAGING", "rescan")
-    tier, staged = Qz._stage_input(vals)
-    assert tier == "medium"
-    # no checkpoint: the staged frame is still the (fanned-out) scan plan
-    assert "Scan parquet" in staged._jdf.queryExecution().toString()
-    cuts_rescan, _ = Qz.exact_quantiles(vals, "v", [0.25, 0.5, 0.9])
-    monkeypatch.setenv("KOMPACTOR_QUANTILE_MEDIUM_STAGING", "checkpoint")
-    cuts_ckpt, _ = Qz.exact_quantiles(vals, "v", [0.25, 0.5, 0.9])
-    _assert_bit_equal(cuts_rescan, cuts_ckpt)
-    _assert_bit_equal(cuts_rescan, _spark_percentile(vals, "v", [0.25, 0.5, 0.9]))
-
-
 def test_equi_depth_weighted_kernel_matches_rowwise(spark):
     # Round 9: the collapsed (value, count) weighted kernel must be
     # bit-identical to the row-wise kernel — value-at-rank, bucket

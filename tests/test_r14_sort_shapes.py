@@ -2,7 +2,7 @@
 
 A global orderBy plans as Exchange(rangepartitioning) whose bounds
 sampling RE-EXECUTES the exchange's child (verified by accumulator
-probe in scripts/r14_sortexec_ab.py). These pins hold the adopted
+probe, OPTIMIZATION_r14.md; A/B in scripts/r14_sortexec_ab_out.json). These pins hold the adopted
 shapes: either the expensive subtree sits BELOW a materialized barrier
 exchange, or (j19/clusters) the range partitioning moved below a 1:1
 broadcast join with one local sort above it.
