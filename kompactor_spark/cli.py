@@ -275,7 +275,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         if args.ingest_source is not None:
             import os
 
-            from kompactor_spark.compaction.metadata import read_snapshot
+            from kompactor_spark.compaction.metadata import load_manifest
             from kompactor_spark.streaming.ingest import IngestJob
 
             hosts = [h for h in args.hosts.split(",") if h]
@@ -318,9 +318,9 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             )
             q = job.attach(stream, ckpt)
             q.awaitTermination()
-            snap = read_snapshot(job.snapshot_path)
-            n_files = sum(1 for _ in snap.all_files())
-            print(f"{hosts[0]}: ingested -> {snap.row_count} rows in {n_files} files "
+            manifest = load_manifest(args.data_dir, hosts[0])
+            n_rows = sum(f.row_count for _, _, f in manifest)
+            print(f"{hosts[0]}: ingested -> {n_rows} rows in {len(manifest)} files "
                   f"(auto-compact {'on' if args.auto_compact else 'off'})")
             return 0
         if args.bootstrap:

@@ -11,7 +11,7 @@ import glob
 import os
 from dataclasses import dataclass, field
 
-from kompactor_spark.compaction.metadata import footer_time_stats, read_snapshot, snapshot_paths
+from kompactor_spark.compaction.metadata import footer_time_stats, load_manifest
 
 
 @dataclass
@@ -37,10 +37,7 @@ class FsckReport:
 
 def fsck_host(data_dir: str, host: str, time_col: str = "time") -> FsckReport:
     report = FsckReport(host=host)
-    cataloged: dict[str, object] = {}
-    for sp in snapshot_paths(data_dir, host):
-        for _db, _tbl, f in read_snapshot(sp).all_files():
-            cataloged[f.path] = f
+    cataloged = {f.path: f for _db, _tbl, f in load_manifest(data_dir, host)}
 
     on_disk = {
         os.path.relpath(p, data_dir)

@@ -5,15 +5,10 @@ Data plane is the reference's one query re-expressed in Spark
 Parquet): ``spark.read.parquet(*paths)`` (B9 fixed: list API, no SQL
 string splicing) → sort → sorted single-file (or 70/30 split) write.
 
-Commit protocol (B7 fixed — reference deleted sources BEFORE rewriting
-metadata and wrote JSON non-atomically):
-    1. write new file(s) to a staging dir, rename into place
-    2. verify (real size on disk — B6; row count via Observation)
-    3. atomically rewrite every affected snapshot (tmp+fsync+rename)
-    4. only then delete originals + prune empty dirs (C14)
-A crash at any point leaves a catalog that references only existing
-files (worst case: orphaned staged/compacted files, never dangling
-catalog entries).
+Per group (B7 fixed — the reference deleted sources BEFORE rewriting
+metadata): write the new file(s) through a staging dir and verify row
+conservation, then ``metadata.commit`` swaps inputs for outputs, then
+the inputs are deleted and empty dirs pruned (C14).
 
 Dry-run is real (B1 fixed): plan + report, zero writes.
 """
@@ -24,7 +19,6 @@ import glob
 import logging
 import os
 import shutil
-import threading
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -33,12 +27,10 @@ from pyspark.sql import functions as F
 
 from kompactor_spark.compaction.metadata import (
     ParquetFileInfo,
-    SnapshotMetadata,
     _remove_empty_dirs_upward,
+    commit,
     footer_time_stats,
-    read_snapshot,
-    snapshot_paths,
-    write_snapshot_atomic,
+    load_manifest,
 )
 from kompactor_spark.compaction.planner import (
     CompactionConfig,
@@ -99,9 +91,6 @@ class CompactionJob:
         # their stages (a single group's coalesce(1) write uses one
         # task — serial groups would idle the rest of the cluster).
         self.parallelism = max(1, parallelism)
-        # Snapshot JSONs are shared across groups — rewrite under a lock
-        # (the data-plane work stays fully parallel).
-        self._meta_lock = threading.Lock()
 
     # -- discovery ---------------------------------------------------------
     def validate_directories(self) -> None:
@@ -134,12 +123,11 @@ class CompactionJob:
         now_ns: int | None = None,
         before_hour_ns: int | None = None,
     ) -> CompactionReport:
-        snap_paths = snapshot_paths(self.data_dir, host)
-        snapshots = [read_snapshot(p) for p in snap_paths]
+        manifest = load_manifest(self.data_dir, host)
         if level == "generation":
-            plan = plan_generation(host, snapshots, self.config, now_ns=now_ns)
+            plan = plan_generation(host, manifest, self.config, now_ns=now_ns)
         else:
-            plan = plan_compaction(host, snapshots, before_hour_ns=before_hour_ns)
+            plan = plan_compaction(host, manifest, before_hour_ns=before_hour_ns)
         report = CompactionReport(
             host=host,
             dry_run=self.dry_run,
@@ -148,9 +136,9 @@ class CompactionJob:
         )
         if self.parallelism > 1 and not self.dry_run and len(plan.groups) > 1:
             with ThreadPoolExecutor(max_workers=self.parallelism) as ex:
-                results = list(ex.map(lambda g: self._compact_group(host, g, snap_paths), plan.groups))
+                results = list(ex.map(lambda g: self._compact_group(host, g), plan.groups))
         else:
-            results = [self._compact_group(host, g, snap_paths) for g in plan.groups]
+            results = [self._compact_group(host, g) for g in plan.groups]
         for res in results:
             if res is not None:
                 report.results.append(res)
@@ -160,9 +148,7 @@ class CompactionJob:
     def _abs(self, rel: str) -> str:
         return os.path.join(self.data_dir, rel)
 
-    def _compact_group(
-        self, host: str, group: CompactionGroup | GenerationGroup, snap_paths: list[str]
-    ) -> GroupResult | None:
+    def _compact_group(self, host: str, group: CompactionGroup | GenerationGroup) -> GroupResult | None:
         sorted_files = group.sorted_files()
         existing = [f for f in sorted_files if os.path.exists(self._abs(f.path))]
         dropped = [f.path for f in sorted_files if not os.path.exists(self._abs(f.path))]
@@ -187,6 +173,20 @@ class CompactionJob:
                 dropped_missing=dropped,
             )
 
+        tmin_in = min(f.min_time for f in existing)
+        tmax_in = max(f.max_time for f in existing)
+        cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes, self.config)
+        if cuts:
+            final_abs = [out_abs.replace(".parquet", f"_p{i}.parquet") for i in range(len(cuts) + 1)]
+        else:
+            final_abs = [out_abs]
+        # Writing over an input and then deleting the inputs would lose
+        # the output too (a replayed WAL file named after a c_ file's
+        # first sequence) — refuse before anything is written.
+        clash = sorted(set(final_abs) & set(input_abs))
+        if clash:
+            raise RuntimeError(f"compaction output {clash[0]} would overwrite one of its inputs")
+
         # ---- 1. merge + write (staged) -----------------------------------
         df = self.spark.read.parquet(*input_abs)  # B9: list API
         obs = Observation(f"compact-{group.output_name()}")
@@ -199,11 +199,7 @@ class CompactionJob:
         staging = out_abs + ".staging"
         shutil.rmtree(staging, ignore_errors=True)
 
-        tmin_in = min(f.min_time for f in existing)
-        tmax_in = max(f.max_time for f in existing)
-        cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes, self.config)
-        needs_split = bool(cuts)
-        if needs_split:
+        if cuts:
             bounds = [None, *cuts, None]
             parts = []
             for lo, hi in zip(bounds[:-1], bounds[1:]):
@@ -219,7 +215,7 @@ class CompactionJob:
         os.makedirs(os.path.dirname(out_abs), exist_ok=True)
         final_rel_paths: list[str] = []
         part_stats: list[tuple[str, int]] = []  # (abs path, size)
-        for i, pdf in enumerate(parts):
+        for i, (pdf, part_abs) in enumerate(zip(parts, final_abs)):
             pstaging = os.path.join(staging, f"part{i}")
             (
                 pdf.coalesce(1)
@@ -235,13 +231,9 @@ class CompactionJob:
                 # below moves exactly one file; more would silently
                 # drop data, zero means the write itself failed
                 raise RuntimeError(f"expected exactly one part file, got {written}")
-            if needs_split:
-                final_abs = out_abs.replace(".parquet", f"_p{i}.parquet")
-            else:
-                final_abs = out_abs
-            os.replace(written[0], final_abs)
-            final_rel_paths.append(os.path.relpath(final_abs, self.data_dir))
-            part_stats.append((final_abs, os.path.getsize(final_abs)))  # B6: real size
+            os.replace(written[0], part_abs)
+            final_rel_paths.append(os.path.relpath(part_abs, self.data_dir))
+            part_stats.append((part_abs, os.path.getsize(part_abs)))  # B6: real size
         shutil.rmtree(staging, ignore_errors=True)
 
         row = obs.get
@@ -255,22 +247,12 @@ class CompactionJob:
                     f"row conservation violated for {out_rel}: inputs={expected_rows} output={rows}"
                 )
 
-        # ---- 3+4 under the catalog lock: id allocation + snapshot
-        # rewrite + deletion serialize across concurrent groups (the
-        # merge/write above runs fully parallel) ----------------------------
-        with self._meta_lock:
-            # metadata rewrite (atomic, BEFORE deletion — B7)
-            compacted_paths = {f.path for f in existing}
-            new_infos = self._new_file_infos(snap_paths, final_rel_paths, part_stats, existing)
-            for sp in snap_paths:
-                snap = read_snapshot(sp)
-                if self._rewrite_snapshot(snap, compacted_paths, new_infos):
-                    write_snapshot_atomic(snap, sp)
-
-            # delete originals + prune (C14)
-            for p in input_abs:
-                os.unlink(p)
-                _remove_empty_dirs_upward(os.path.dirname(p), self.data_dir)
+        # ---- 3. commit, then delete originals + prune (C14) --------------
+        new_infos = self._new_file_infos(final_rel_paths, part_stats, existing)
+        commit(self.data_dir, host, removed=[f.path for f in existing], added=new_infos)
+        for p in input_abs:
+            os.unlink(p)
+            _remove_empty_dirs_upward(os.path.dirname(p), self.data_dir)
 
         return GroupResult(
             key=(host, group.key.db_seg, group.key.table_seg, group.key.date, group.key.hour),
@@ -284,25 +266,21 @@ class CompactionJob:
 
     def _new_file_infos(
         self,
-        snap_paths: list[str],
         final_rel_paths: list[str],
         part_stats: list[tuple[str, int]],
         inputs: list[ParquetFileInfo],
     ) -> list[ParquetFileInfo]:
-        """Fresh ids (B6: the reference reused sortedFiles[0].id), real
-        sizes, per-part exact time stats from the parquet footers."""
-        next_id = 0
-        for sp in snap_paths:
-            next_id = max(next_id, read_snapshot(sp).max_file_id())
+        """Real sizes and per-part exact time stats from the parquet
+        footers; ``commit`` assigns the ids."""
         infos = []
-        for i, (rel, (abs_path, size)) in enumerate(zip(final_rel_paths, part_stats)):
+        for rel, (abs_path, size) in zip(final_rel_paths, part_stats):
             p_rows, p_min, p_max = footer_time_stats(abs_path, self.time_col)
             if p_rows == 0:  # a split part no row fell into: no range of its own
                 p_min = min(f.min_time for f in inputs)
                 p_max = max(f.max_time for f in inputs)
             infos.append(
                 ParquetFileInfo(
-                    id=next_id + 1 + i,
+                    id=0,
                     path=rel,
                     size_bytes=size,
                     row_count=p_rows,
@@ -312,24 +290,3 @@ class CompactionJob:
                 )
             )
         return infos
-
-    @staticmethod
-    def _rewrite_snapshot(
-        snap: SnapshotMetadata, compacted_paths: set[str], new_infos: list[ParquetFileInfo]
-    ) -> bool:
-        """Remove ONLY the compacted entries; append the new file(s) to
-        the table that contained them; keep everything else (B4 fixed:
-        the reference replaced the whole table list)."""
-        changed = False
-        for _db_id, tables in snap.databases:
-            for table_id in list(tables):
-                files = tables[table_id]
-                kept = [f for f in files if f.path not in compacted_paths]
-                if len(kept) != len(files):
-                    existing_paths = {f.path for f in kept}
-                    kept.extend(ni for ni in new_infos if ni.path not in existing_paths)
-                    tables[table_id] = kept
-                    changed = True
-        if changed:
-            snap.recompute_totals()
-        return changed

@@ -7,18 +7,28 @@ These cannot round-trip through spark.read.json (no single element
 type), and the catalog is KBs — so this is driver-side Python by
 design (SURVEY §1.3).
 
+This module is the catalog's one code path: ``load_manifest`` is the
+only union over the snapshot files and ``commit`` the only writer that
+changes what they hold. Both call ``read_snapshot`` /
+``write_snapshot_atomic`` as globals of this module.
+
 Fixes over the reference:
 - B3: all ns epochs handled as Python int (arbitrary precision), never
   float (kompactor.ts:276-277 used Math.min/max over 1.7e18 > 2^53).
-- B7: writes are atomic (tmp + fsync + rename), and the job orders
-  metadata-rewrite BEFORE source deletion (kompactor.ts deleted first).
+- B7: writes are atomic (tmp + fsync + rename), and every caller of
+  ``commit`` deletes its files only after the commit (kompactor.ts
+  deleted first).
 """
 
 from __future__ import annotations
 
+import contextlib
+import dataclasses
+import fcntl
 import json
 import os
 import tempfile
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 
@@ -118,9 +128,6 @@ class SnapshotMetadata:
             self.min_time = min(f.min_time for f in files)
             self.max_time = max(f.max_time for f in files)
 
-    def max_file_id(self) -> int:
-        return max((f.id for _, _, f in self.all_files()), default=0)
-
 
 def read_snapshot(path: str) -> SnapshotMetadata:
     with open(path, encoding="utf-8") as fh:
@@ -151,6 +158,132 @@ def snapshot_paths(data_dir: str, host: str) -> list[str]:
     return sorted(
         os.path.join(snap_dir, n) for n in os.listdir(snap_dir) if n.endswith(".info.json")
     )
+
+
+def snapshot_id(path: str) -> int:
+    """Numeric id of a snapshot file (``0007.info.json`` -> 7)."""
+    return int(os.path.basename(path).split(".")[0])
+
+
+# Pure adds (ingest) land in this snapshot, created on first use.
+INGEST_SNAPSHOT = "0001.info.json"
+
+Entry = tuple[int, int, ParquetFileInfo]  # (db_id, table_id, file)
+
+
+def load_manifest(data_dir: str, host: str, as_of: int | None = None) -> list[Entry]:
+    """The host's catalog: every snapshot up to ``as_of`` (inclusive;
+    None = all) unioned by path, the later snapshot winning (the
+    reference's loop over snapshot files, kompactor.ts:190-203)."""
+    by_path: dict[str, Entry] = {}
+    for sp in snapshot_paths(data_dir, host):
+        if as_of is not None and snapshot_id(sp) > as_of:
+            continue
+        for entry in read_snapshot(sp).all_files():
+            by_path[entry[2].path] = entry
+    return list(by_path.values())
+
+
+def snapshot_from_entries(entries: Iterable[Entry], writer_id: str) -> SnapshotMetadata:
+    """One snapshot holding ``entries``, dbs and tables in id order,
+    totals exact."""
+    dbs: dict[int, dict[int, list[ParquetFileInfo]]] = {}
+    for db_id, table_id, info in entries:
+        dbs.setdefault(db_id, {}).setdefault(table_id, []).append(info)
+    meta = SnapshotMetadata(
+        writer_id=writer_id,
+        parquet_size_bytes=0,
+        row_count=0,
+        min_time=0,
+        max_time=0,
+        databases=sorted(dbs.items()),
+    )
+    meta.recompute_totals()
+    return meta
+
+
+@contextlib.contextmanager
+def catalog_lock(data_dir: str, host: str):
+    """Exclusive ``flock`` on ``<host>/snapshots/.lock``. Every ``open``
+    is its own lock holder, so this serializes threads of one process
+    as well as separate processes."""
+    snap_dir = os.path.join(data_dir, host, "snapshots")
+    os.makedirs(snap_dir, exist_ok=True)
+    with open(os.path.join(snap_dir, ".lock"), "a") as fh:
+        fcntl.flock(fh, fcntl.LOCK_EX)
+        yield  # closing the file releases the lock
+
+
+def commit(
+    data_dir: str,
+    host: str,
+    removed: Iterable[str] = (),
+    added: Iterable[ParquetFileInfo] = (),
+    db: int = 0,
+    table: int = 0,
+) -> list[ParquetFileInfo]:
+    """The one catalog writer: drop the ``removed`` paths from every
+    snapshot and upsert ``added``, under ``catalog_lock`` on snapshots
+    re-read inside it. Returns ``added`` with their ids.
+
+    - An added path already cataloged is replaced in place wherever it
+      is and keeps its id; any other gets a fresh id above the largest
+      id in any snapshot (B6: the reference reused an input's id).
+    - Added files go into every snapshot table that held a removed file
+      (B4: the rest of the table is kept); with nothing removed they go
+      into (``db``, ``table``) of ``INGEST_SNAPSHOT``.
+    - Only snapshots that changed are rewritten, each atomically, with
+      exact totals.
+
+    Callers write their new files before the commit and delete the
+    removed ones after it, so a crash never leaves a cataloged path
+    missing on disk.
+    """
+    drop = set(removed)
+    with catalog_lock(data_dir, host):
+        snaps = {sp: read_snapshot(sp) for sp in snapshot_paths(data_dir, host)}
+        ids = {f.path: f.id for s in snaps.values() for _, _, f in s.all_files()}
+        next_id = max(ids.values(), default=0)
+        new: dict[str, ParquetFileInfo] = {}
+        for info in added:
+            if info.path not in ids:
+                next_id += 1
+            new[info.path] = dataclasses.replace(info, id=ids.get(info.path, next_id))
+
+        changed: set[str] = set()
+        placed = False  # did any table hold a removed file?
+        for sp, snap in snaps.items():
+            for _db_id, tables in snap.databases:
+                for tid, files in tables.items():
+                    kept = [new.get(f.path, f) for f in files if f.path not in drop]
+                    if len(kept) < len(files):
+                        placed = True
+                        have = {f.path for f in kept}
+                        kept += [f for p, f in new.items() if p not in have]
+                    if kept != files:
+                        tables[tid] = kept
+                        changed.add(sp)
+
+        fresh = [f for p, f in new.items() if p not in ids]
+        if fresh and not placed:
+            if drop:
+                raise RuntimeError(
+                    f"commit: none of the removed files is cataloged for {host}; "
+                    f"{[f.path for f in fresh]} would be left out of the catalog"
+                )
+            target = os.path.join(data_dir, host, "snapshots", INGEST_SNAPSHOT)
+            snap = snaps.setdefault(target, snapshot_from_entries([], writer_id=host))
+            tables = dict(snap.databases).get(db)
+            if tables is None:
+                tables = {}
+                snap.databases.append((db, tables))
+            tables.setdefault(table, []).extend(fresh)
+            changed.add(target)
+
+        for sp in sorted(changed):
+            snaps[sp].recompute_totals()
+            write_snapshot_atomic(snaps[sp], sp)
+    return list(new.values())
 
 
 def footer_time_stats(path: str, time_col: str = "time") -> tuple[int, int | None, int | None]:
@@ -231,16 +364,4 @@ def bootstrap_snapshot(
         )
         next_id += 1
 
-    dbs: dict[int, dict[int, list[ParquetFileInfo]]] = {}
-    for db_id, table_id, info in files:
-        dbs.setdefault(db_id, {}).setdefault(table_id, []).append(info)
-    meta = SnapshotMetadata(
-        writer_id=writer_id or host,
-        parquet_size_bytes=0,
-        row_count=0,
-        min_time=0,
-        max_time=0,
-        databases=[(db_id, tables) for db_id, tables in sorted(dbs.items())],
-    )
-    meta.recompute_totals()
-    return meta
+    return snapshot_from_entries(files, writer_id=writer_id or host)

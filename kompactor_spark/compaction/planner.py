@@ -17,7 +17,7 @@ import re
 from collections import defaultdict
 from dataclasses import dataclass, field
 
-from kompactor_spark.compaction.metadata import ParquetFileInfo, SnapshotMetadata
+from kompactor_spark.compaction.metadata import Entry, ParquetFileInfo
 
 # Filename grammar (kompactor.ts:86-96): raw WAL files and compacted
 # files at hour (h) or generation/day (g) level; split parts p<i>.
@@ -141,30 +141,28 @@ def hour_start_ns(key: GroupKey) -> int:
 
 def plan_compaction(
     host: str,
-    snapshots: list[SnapshotMetadata],
+    manifest: list[Entry],
     before_hour_ns: int | None = None,
 ) -> CompactionPlan:
-    """Flatten → regex-extract → group (B5 fixed) → dedup by path
-    (overlapping snapshots, kompactor.ts:202-203) → drop singletons
-    (kompactor.ts:213).
+    """Regex-extract → group (B5 fixed) → drop singletons
+    (kompactor.ts:213), over the path-deduplicated ``load_manifest``.
 
     ``before_hour_ns`` scopes the plan to CLOSED hours — groups whose
     hour ends at or before the cutoff. This is the continuous-
     compaction gate: an ingest stream compacts only hours the event
     clock has moved past, never the hour still receiving writes.
     """
-    by_key: dict[GroupKey, dict[str, ParquetFileInfo]] = defaultdict(dict)
-    for snap in snapshots:
-        for _db_id, _table_id, f in snap.all_files():
-            key = parse_group_key(host, f.path)
-            if key is not None:
-                by_key[key][f.path] = f  # path-dedup across snapshots
+    by_key: dict[GroupKey, list[ParquetFileInfo]] = defaultdict(list)
+    for _db_id, _table_id, f in manifest:
+        key = parse_group_key(host, f.path)
+        if key is not None:
+            by_key[key].append(f)
 
     groups, skipped = [], 0
     for key in sorted(by_key, key=lambda k: (k.db_seg, k.table_seg, k.date, k.hour)):
         if before_hour_ns is not None and hour_start_ns(key) + 3_600_000_000_000 > before_hour_ns:
             continue  # hour still open — not counted as a skipped singleton
-        files = list(by_key[key].values())
+        files = by_key[key]
         if len(files) <= 1:
             skipped += 1
             continue
@@ -239,7 +237,7 @@ def is_generation_file(filename: str) -> bool:
 
 def plan_generation(
     host: str,
-    snapshots: list[SnapshotMetadata],
+    manifest: list[Entry],
     config: CompactionConfig,
     now_ns: int | None = None,
 ) -> CompactionPlan:
@@ -249,30 +247,29 @@ def plan_generation(
     pass now_ns=None to compact every day (manual/backfill mode).
     Files already at generation level and >= large cutoff are left
     alone (D2: no value re-writing a full-size file)."""
-    by_key: dict[GroupKey, dict[str, ParquetFileInfo]] = defaultdict(dict)
-    for snap in snapshots:
-        for _db_id, _table_id, f in snap.all_files():
-            hk = parse_group_key(host, f.path)
-            if hk is not None:
-                key = GroupKey(host=hk.host, db_seg=hk.db_seg, table_seg=hk.table_seg, date=hk.date, hour="")
-            else:
-                # day-level paths have no HH segment; parse date directly
-                m = re.search(r"/(\d{4}-\d{2}-\d{2})/", f.path)
-                if not m:
-                    continue
-                parts = f.path.split("/")
-                if len(parts) < 4:
-                    continue
-                i = parts.index(m.group(1))
-                key = GroupKey(host=host, db_seg=parts[i - 2], table_seg=parts[i - 1], date=m.group(1), hour="")
-            by_key[key][f.path] = f
+    by_key: dict[GroupKey, list[ParquetFileInfo]] = defaultdict(list)
+    for _db_id, _table_id, f in manifest:
+        hk = parse_group_key(host, f.path)
+        if hk is not None:
+            key = GroupKey(host=hk.host, db_seg=hk.db_seg, table_seg=hk.table_seg, date=hk.date, hour="")
+        else:
+            # day-level paths have no HH segment; parse date directly
+            m = re.search(r"/(\d{4}-\d{2}-\d{2})/", f.path)
+            if not m:
+                continue
+            parts = f.path.split("/")
+            if len(parts) < 4:
+                continue
+            i = parts.index(m.group(1))
+            key = GroupKey(host=host, db_seg=parts[i - 2], table_seg=parts[i - 1], date=m.group(1), hour="")
+        by_key[key].append(f)
 
     window_ns = config.time_window_hours * 3_600_000_000_000
     groups, skipped = [], 0
     for key in sorted(by_key, key=lambda k: (k.db_seg, k.table_seg, k.date)):
         files = [
             f
-            for f in by_key[key].values()
+            for f in by_key[key]
             if not (is_generation_file(f.path) and f.size_bytes >= config.large_cutoff_bytes)
         ]
         if now_ns is not None and files and max(f.max_time for f in files) > now_ns - window_ns:

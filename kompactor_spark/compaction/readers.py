@@ -26,16 +26,20 @@ from __future__ import annotations
 
 import os
 
-from kompactor_spark.compaction.metadata import ParquetFileInfo, read_snapshot, snapshot_paths
-
-
-def _snapshot_id(path: str) -> int:
-    return int(os.path.basename(path).split(".")[0])
+from kompactor_spark.compaction import metadata
+from kompactor_spark.compaction.metadata import (
+    ParquetFileInfo,
+    catalog_lock,
+    load_manifest,
+    snapshot_from_entries,
+    snapshot_id,
+    snapshot_paths,
+)
 
 
 def snapshot_ids(data_dir: str, host: str) -> list[int]:
     """Sorted numeric ids of the host's committed snapshots."""
-    return sorted(_snapshot_id(p) for p in snapshot_paths(data_dir, host))
+    return sorted(snapshot_id(p) for p in snapshot_paths(data_dir, host))
 
 
 def files_as_of(
@@ -50,22 +54,13 @@ def files_as_of(
     """File manifest for (db, table) as the catalog stood at snapshot
     ``as_of`` (inclusive; None = latest), pruned to files whose
     [min_time, max_time] overlaps the requested ns range.
-
-    Later snapshots win on path collisions (same dedup rule as the
-    compaction planner's cross-snapshot merge).
     """
-    by_path: dict[str, ParquetFileInfo] = {}
-    for sp in snapshot_paths(data_dir, host):
-        if as_of is not None and _snapshot_id(sp) > as_of:
-            continue
-        for db_id, table_id, f in read_snapshot(sp).all_files():
-            if db is not None and db_id != db:
-                continue
-            if table is not None and table_id != table:
-                continue
-            by_path[f.path] = f
     out = []
-    for f in by_path.values():
+    for db_id, table_id, f in load_manifest(data_dir, host, as_of=as_of):
+        if db is not None and db_id != db:
+            continue
+        if table is not None and table_id != table:
+            continue
         if min_time_ns is not None and f.max_time < min_time_ns:
             continue
         if max_time_ns is not None and f.min_time > max_time_ns:
@@ -117,52 +112,23 @@ def expire_snapshots(data_dir: str, host: str) -> dict:
     (Iceberg-style expire-snapshots, the catalog-GC companion to
     `read_table(as_of=...)`).
 
-    Every snapshot file holds a subset of the CURRENT file set
-    (compaction/retention rewrite all snapshots in place), so the fold
-    is a pure union-dedup by path — state is unchanged, only history
-    granularity is lost: after expiry, ``as_of`` older than the merged
-    snapshot raises, which IS the documented time-travel horizon.
+    The fold is ``load_manifest`` written as one new snapshot: state is
+    unchanged, only history granularity is lost — after expiry,
+    ``as_of`` older than the merged snapshot raises, which IS the
+    documented time-travel horizon.
 
-    Crash-safe ordering: the merged snapshot is written (atomically)
-    BEFORE the old ones are unlinked; at any intermediate point the
-    union over remaining snapshot files is identical, so readers and
-    fsck never see a torn catalog.
-
-    Driver-side O(#files) JSON work — at 100 TB this keeps the
-    per-read catalog parse bounded no matter how many ingest batches
-    have committed snapshots.
+    Ordering, under ``catalog_lock`` so no commit interleaves: the
+    merged snapshot is written (atomically) first, then the old ones
+    are unlinked; at any point in between the union over the remaining
+    snapshot files is the same.
     """
-    from kompactor_spark.compaction.metadata import (
-        SnapshotMetadata,
-        read_snapshot,
-        write_snapshot_atomic,
-    )
-
-    paths = snapshot_paths(data_dir, host)
-    if len(paths) <= 1:
-        return {"merged": 0, "kept": len(paths)}
-    by_path: dict = {}
-    writer_id = host
-    for sp in paths:
-        snap = read_snapshot(sp)
-        writer_id = snap.writer_id
-        for db_id, table_id, f in snap.all_files():
-            by_path[f.path] = (db_id, table_id, f)
-    dbs: dict = {}
-    for db_id, table_id, f in by_path.values():
-        dbs.setdefault(db_id, {}).setdefault(table_id, []).append(f)
-    merged = SnapshotMetadata(
-        writer_id=writer_id,
-        parquet_size_bytes=0,
-        row_count=0,
-        min_time=0,
-        max_time=0,
-        databases=[(d, t) for d, t in sorted(dbs.items())],
-    )
-    merged.recompute_totals()
-    new_id = max(_snapshot_id(p) for p in paths) + 1
-    out = os.path.join(data_dir, host, "snapshots", f"{new_id:04d}.info.json")
-    write_snapshot_atomic(merged, out)
-    for sp in paths:
-        os.remove(sp)
+    with catalog_lock(data_dir, host):
+        paths = snapshot_paths(data_dir, host)
+        if len(paths) <= 1:
+            return {"merged": 0, "kept": len(paths)}
+        merged = snapshot_from_entries(load_manifest(data_dir, host), writer_id=host)
+        out = os.path.join(data_dir, host, "snapshots", f"{snapshot_id(paths[-1]) + 1:04d}.info.json")
+        metadata.write_snapshot_atomic(merged, out)  # via the module: a wrapper on it sees the write
+        for sp in paths:
+            os.remove(sp)
     return {"merged": len(paths), "kept": 1, "snapshot": out}

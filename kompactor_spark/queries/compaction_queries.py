@@ -11,12 +11,13 @@ over the same source rows.
 from __future__ import annotations
 
 import glob
-import json
 import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction import CompactionJob
+from kompactor_spark.compaction.metadata import ParquetFileInfo, commit, footer_time_stats
 from kompactor_spark.queries import register
 from kompactor_spark.sources import clear_scratch
 from kompactor_spark.tables import loader
@@ -25,7 +26,8 @@ _HOST = "host-q"
 
 
 def _build_layout(spark, sf_dir: str, root: str) -> None:
-    """events rows of the min-hour bucket → 3 WAL parquet files + snapshot."""
+    """events rows of the min-hour bucket → 3 WAL parquet files, cataloged
+    by one commit."""
     T = loader(sf_dir, spark)
     ev = T("events").select(
         F.col("ts").alias("time"), "event_id", "user_id", "event_type", "value"
@@ -38,8 +40,7 @@ def _build_layout(spark, sf_dir: str, root: str) -> None:
 
     dt = datetime.datetime.fromtimestamp(min_hour / 1e9, tz=datetime.timezone.utc)
     date, hour = dt.strftime("%Y-%m-%d"), dt.hour
-    entries = []
-    os.makedirs(os.path.join(root, _HOST, "snapshots"), exist_ok=True)
+    infos = []
     for i in range(3):
         rel = f"{_HOST}/dbs/db-0/table-1/{date}/{hour:02d}-00/{i + 1:010d}.parquet"
         abs_dir = os.path.join(root, rel + ".d")
@@ -49,37 +50,15 @@ def _build_layout(spark, sf_dir: str, root: str) -> None:
         abs_path = os.path.join(root, rel)
         os.makedirs(os.path.dirname(abs_path), exist_ok=True)
         os.replace(part, abs_path)
-        import shutil
-
         shutil.rmtree(abs_dir, ignore_errors=True)
-        stats = (
-            spark.read.parquet(abs_path)
-            .agg(
-                F.count("*").alias("n"), F.min("time").alias("mn"), F.max("time").alias("mx")
+        n, mn, mx = footer_time_stats(abs_path)
+        infos.append(
+            ParquetFileInfo(
+                id=0, path=rel, size_bytes=os.path.getsize(abs_path), row_count=n,
+                chunk_time=mn, min_time=mn, max_time=mx,
             )
-            .first()
         )
-        entries.append(
-            {
-                "id": i + 1,
-                "path": rel,
-                "size_bytes": os.path.getsize(abs_path),
-                "row_count": int(stats["n"]),
-                "chunk_time": int(stats["mn"]),
-                "min_time": int(stats["mn"]),
-                "max_time": int(stats["mx"]),
-            }
-        )
-    meta = {
-        "writer_id": _HOST,
-        "parquet_size_bytes": sum(e["size_bytes"] for e in entries),
-        "row_count": sum(e["row_count"] for e in entries),
-        "min_time": min(e["min_time"] for e in entries),
-        "max_time": max(e["max_time"] for e in entries),
-        "databases": [[0, {"tables": [[1, entries]]}]],
-    }
-    with open(os.path.join(root, _HOST, "snapshots", "0001.info.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
+    commit(root, _HOST, added=infos, db=0, table=1)
 
 
 @register(

@@ -4,14 +4,13 @@ InfluxDB's WAL flusher there, by Structured Streaming here).
 
 Each micro-batch becomes one WAL-numbered Parquet file per
 (db, table, date, hour) — `<wal>.parquet` under
-`<host>/dbs/db-N/table-N/<date>/<HH-00>/` — and the snapshot catalog
-is updated atomically after the files land (same ordering discipline
-as the compactor's commit protocol: files first, catalog second,
-so a crash never catalogs a missing file).
+`<host>/dbs/db-N/table-N/<date>/<HH-00>/`. Ordering: the files land
+first, then ``metadata.commit`` catalogs them, so a crash never
+catalogs a missing file.
 
 Idempotent re-delivery: foreachBatch may replay a batch after a crash;
 the WAL name is derived from batch_id, so a replay overwrites the same
-file (os.replace) and the catalog dedups by path.
+file (os.replace) and the commit replaces the entry in place.
 """
 
 from __future__ import annotations
@@ -24,11 +23,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction.metadata import (
+    INGEST_SNAPSHOT,
     ParquetFileInfo,
-    SnapshotMetadata,
+    commit,
     footer_time_stats,
-    read_snapshot,
-    write_snapshot_atomic,
 )
 
 NS_PER_HOUR = 3_600_000_000_000
@@ -66,7 +64,7 @@ class IngestJob:
 
     @property
     def snapshot_path(self) -> str:
-        return os.path.join(self.data_dir, self.host, "snapshots", "0001.info.json")
+        return os.path.join(self.data_dir, self.host, "snapshots", INGEST_SNAPSHOT)
 
     def attach(self, stream: DataFrame, checkpoint: str):
         """Wire this sink into a streaming DataFrame; returns the query."""
@@ -144,7 +142,7 @@ class IngestJob:
                 os.replace(written, abs_path)
                 new_infos.append(
                     ParquetFileInfo(
-                        id=0,  # assigned under the catalog update below
+                        id=0,  # assigned by the commit below
                         path=rel,
                         size_bytes=os.path.getsize(abs_path),
                         row_count=n_rows,
@@ -156,7 +154,7 @@ class IngestJob:
         finally:
             shutil.rmtree(staging_root, ignore_errors=True)
         if new_infos:
-            self._update_catalog(new_infos)
+            commit(self.data_dir, self.host, added=new_infos, db=self.db, table=self.table)
             batch_max = max(i.max_time for i in new_infos)
             self._max_seen_ns = (
                 batch_max if self._max_seen_ns is None else max(self._max_seen_ns, batch_max)
@@ -175,33 +173,3 @@ class IngestJob:
         CompactionJob(spark, self.data_dir, [self.host], time_col=self.time_col).run(
             before_hour_ns=self._max_seen_ns - self.grace_ns
         )
-
-    def _update_catalog(self, new_infos: list[ParquetFileInfo]) -> None:
-        if os.path.exists(self.snapshot_path):
-            snap = read_snapshot(self.snapshot_path)
-        else:
-            snap = SnapshotMetadata(
-                writer_id=self.host,
-                parquet_size_bytes=0,
-                row_count=0,
-                min_time=0,
-                max_time=0,
-                databases=[(self.db, {self.table: []})],
-            )
-        tables = dict(snap.databases).get(self.db)
-        if tables is None:
-            tables = {self.table: []}
-            snap.databases.append((self.db, tables))
-        files = tables.setdefault(self.table, [])
-        next_id = snap.max_file_id()
-        by_path = {f.path: i for i, f in enumerate(files)}
-        for info in new_infos:
-            if info.path in by_path:  # batch replay: replace in place
-                info.id = files[by_path[info.path]].id
-                files[by_path[info.path]] = info
-            else:
-                next_id += 1
-                info.id = next_id
-                files.append(info)
-        snap.recompute_totals()
-        write_snapshot_atomic(snap, self.snapshot_path)

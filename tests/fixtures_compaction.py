@@ -224,3 +224,14 @@ def ns_precision(root: str) -> LayoutBuilder:
     b.add_parquet(0, 3, date, int(hour), "0000000002.parquet", tbl2)
     b.write_snapshot()
     return b
+
+
+def replayed_first_input(root: str) -> LayoutBuilder:
+    """A c_ file and a replayed WAL file whose sequence is the c_ file's
+    last: the hour's output name equals the c_ file's own name."""
+    b = LayoutBuilder(root)
+    hstart = (BASE_NS // (3600 * NS)) * 3600 * NS
+    b.add_parquet(0, 3, "2025-01-26", 14, "c_0000000001_0000000003_h14.parquet", make_rows(80, hstart, 2500 * NS, seed=5))
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000003.parquet", make_rows(25, hstart + 51 * NS, 2000 * NS, seed=53))
+    b.write_snapshot()
+    return b

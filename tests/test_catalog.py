@@ -1,0 +1,177 @@
+"""The catalog's one code path: ``metadata.load_manifest`` and
+``metadata.commit``. Commit rules, safety against a second process and
+against the compaction job's group threads, and the module-level hook
+through which a tracer counts snapshot reads and writes."""
+
+from __future__ import annotations
+
+import multiprocessing
+import os
+import sys
+
+import pytest
+
+from kompactor_spark.compaction import metadata
+from kompactor_spark.compaction.metadata import ParquetFileInfo, commit, load_manifest
+
+from tests import fixtures_compaction as FX
+
+
+def _info(name: str) -> ParquetFileInfo:
+    return ParquetFileInfo(
+        id=0,
+        path=f"{FX.HOST}/dbs/db-0/table-3/2025-01-26/14-00/{name}.parquet",
+        size_bytes=100,
+        row_count=10,
+        chunk_time=FX.BASE_NS,
+        min_time=FX.BASE_NS,
+        max_time=FX.BASE_NS + 1,
+    )
+
+
+def test_commit_rules(tmp_path):
+    """Pure adds create the ingest snapshot; a cataloged path is replaced
+    in place and keeps its id; added files go into every table that held
+    a removed one; fresh ids start above the largest id."""
+    root = str(tmp_path)
+    [a, b] = commit(root, FX.HOST, added=[_info("a"), _info("b")], db=0, table=3)
+    assert (a.id, b.id) == (1, 2)
+    assert [p for p in os.listdir(os.path.join(root, FX.HOST, "snapshots")) if p.endswith(".json")] == [
+        metadata.INGEST_SNAPSHOT
+    ]
+
+    [a2] = commit(root, FX.HOST, added=[ParquetFileInfo(**{**vars(_info("a")), "row_count": 11})])
+    assert a2.id == 1
+    manifest = load_manifest(root, FX.HOST)
+    assert [(f.path, f.id, f.row_count) for _, _, f in manifest] == [
+        (a.path, 1, 11),
+        (b.path, 2, 10),
+    ]
+
+    # a second snapshot holding b: the swap lands in both snapshots
+    second = metadata.snapshot_from_entries([(0, 3, b)], writer_id=FX.HOST)
+    metadata.write_snapshot_atomic(second, os.path.join(root, FX.HOST, "snapshots", "0002.info.json"))
+    [c] = commit(root, FX.HOST, removed=[b.path], added=[_info("c")])
+    assert c.id == 3
+    for sp in metadata.snapshot_paths(root, FX.HOST):
+        snap = metadata.read_snapshot(sp)
+        paths = {f.path for _, _, f in snap.all_files()}
+        assert b.path not in paths and c.path in paths
+        assert snap.row_count == sum(f.row_count for _, _, f in snap.all_files())
+
+    with pytest.raises(RuntimeError, match="none of the removed files"):
+        commit(root, FX.HOST, removed=[b.path], added=[_info("d")])
+
+
+def test_load_manifest_as_of_and_later_wins(tmp_path):
+    root = str(tmp_path)
+    snap_dir = os.path.join(root, FX.HOST, "snapshots")
+    os.makedirs(snap_dir)
+    old, new = _info("a"), ParquetFileInfo(**{**vars(_info("a")), "row_count": 99})
+    for i, info in enumerate([old, new], start=1):
+        meta = metadata.snapshot_from_entries([(0, 3, info)], writer_id=FX.HOST)
+        metadata.write_snapshot_atomic(meta, os.path.join(snap_dir, f"{i:04d}.info.json"))
+    assert [f.row_count for _, _, f in load_manifest(root, FX.HOST)] == [99]
+    assert [f.row_count for _, _, f in load_manifest(root, FX.HOST, as_of=1)] == [10]
+    assert load_manifest(root, FX.HOST, as_of=0) == []
+    assert load_manifest(str(tmp_path / "nowhere"), FX.HOST) == []
+
+
+def _commit_many(root: str, tag: str, n: int) -> None:
+    for i in range(n):
+        commit(root, FX.HOST, added=[_info(f"{tag}{i:04d}")], db=0, table=3)
+
+
+def test_commit_is_process_safe(tmp_path):
+    """Two processes committing at once lose no file and share no id."""
+    root = str(tmp_path)
+    ctx = multiprocessing.get_context("spawn")
+    procs = [ctx.Process(target=_commit_many, args=(root, tag, 200)) for tag in ("p", "q")]
+    for p in procs:
+        p.start()
+    for p in procs:
+        p.join(300)
+    assert [p.exitcode for p in procs] == [0, 0]
+    files = [f for _, _, f in load_manifest(root, FX.HOST)]
+    assert len(files) == 400
+    assert len({f.id for f in files}) == 400
+
+
+def test_parallel_groups_commit_every_output(spark, tmp_path):
+    """Eight hour groups compacted from eight threads of one job, with a
+    short thread switch interval: every output is cataloged once, with
+    its own id, and nothing else is."""
+    from kompactor_spark.compaction import CompactionJob
+    from kompactor_spark.compaction.fsck import fsck_host
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    wal = 1
+    for hour in range(8):
+        hstart = (FX.BASE_NS // (3600 * FX.NS) + hour) * 3600 * FX.NS
+        for i in range(2):
+            rows = FX.make_rows(20, hstart + i * 7 * FX.NS, 2000 * FX.NS, seed=wal)
+            b.add_parquet(0, 3, "2025-01-26", 14 + hour, f"{wal:010d}.parquet", rows)
+            wal += 1
+    b.write_snapshot()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        [report] = CompactionJob(spark, root, [FX.HOST], parallelism=8).run()
+    finally:
+        sys.setswitchinterval(interval)
+    assert report.compacted_groups == 8
+    outputs = {p for r in report.results for p in r.output_paths}
+    files = [f for _, _, f in load_manifest(root, FX.HOST)]
+    assert {f.path for f in files} == outputs
+    assert len({f.id for f in files}) == 8
+    assert fsck_host(root, FX.HOST).ok
+
+
+def test_every_catalog_path_goes_through_the_metadata_module(spark, tmp_path, monkeypatch):
+    """Wrappers installed on ``metadata.read_snapshot`` /
+    ``metadata.write_snapshot_atomic`` see the reads and writes of every
+    catalog path, so a tracer patching the module counts them all."""
+    from kompactor_spark.compaction import CompactionJob
+    from kompactor_spark.compaction.fsck import fsck_host
+    from kompactor_spark.compaction.readers import expire_snapshots, files_as_of
+    from kompactor_spark.compaction.retention import enforce_retention
+    from kompactor_spark.streaming.ingest import IngestJob
+
+    calls = {"read": 0, "write": 0}
+
+    def counting(kind, fn):
+        def wrapped(*args, **kwargs):
+            calls[kind] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(metadata, "read_snapshot", counting("read", metadata.read_snapshot))
+    monkeypatch.setattr(metadata, "write_snapshot_atomic", counting("write", metadata.write_snapshot_atomic))
+
+    root = str(tmp_path)
+    b = FX.multi_hour(root)  # hours 10, 11, 12 with 1, 2, 4 files
+    b.write_snapshot("0002.info.json", b.files[:1])
+
+    def counted(fn):
+        before = dict(calls)
+        fn()
+        return calls["read"] - before["read"], calls["write"] - before["write"]
+
+    hour = 3600 * FX.NS
+    h11 = (FX.BASE_NS // hour + 11) * hour
+    batch = spark.createDataFrame(FX.make_rows(10, h11 + 3 * hour, 60 * FX.NS, seed=7).to_pandas())
+
+    assert counted(lambda: files_as_of(root, FX.HOST))[0] > 0
+    assert counted(lambda: fsck_host(root, FX.HOST))[0] > 0
+    reads, writes = counted(lambda: expire_snapshots(root, FX.HOST))
+    assert reads > 0 and writes > 0
+    reads, writes = counted(lambda: enforce_retention(root, [FX.HOST], cutoff_ns=h11))
+    assert reads > 0 and writes > 0
+    reads, writes = counted(lambda: CompactionJob(spark, root, [FX.HOST]).run())
+    assert reads > 0 and writes > 0
+    reads, writes = counted(lambda: IngestJob(root, FX.HOST, db=0, table=3).write_batch(batch, 99))
+    assert reads > 0 and writes > 0
+    assert fsck_host(root, FX.HOST).ok

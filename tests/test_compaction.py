@@ -493,3 +493,23 @@ def test_cli_time_window_hours(spark, tmp_path, capsys):
     )
     assert rc == 0
     assert "compacted 1/1 groups" in capsys.readouterr().out
+
+
+def test_output_never_overwrites_an_input(spark, tmp_path):
+    """An output named like one of its inputs would be written over that
+    input and then unlinked with the others; the job refuses before it
+    writes anything, and the lake stays byte-identical and fsck-clean."""
+    from kompactor_spark.compaction.fsck import fsck_host
+
+    root = str(tmp_path)
+    FX.replayed_first_input(root)
+
+    def lake_bytes():
+        files = glob.glob(os.path.join(root, "**", "*"), recursive=True)
+        return {p: open(p, "rb").read() for p in files if os.path.isfile(p)}
+
+    before = lake_bytes()
+    with pytest.raises(RuntimeError, match="c_0000000001_0000000003_h14.parquet"):
+        run_job(spark, root)
+    assert lake_bytes() == before
+    assert fsck_host(root, FX.HOST).ok

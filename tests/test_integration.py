@@ -321,3 +321,28 @@ def test_ingest_single_batch_spans_hours(spark, tmp_path):
         assert ts == sorted(ts) and len(ts) == 30
         # staging is cleaned up
     assert not glob.glob(os.path.join(root, FX.HOST, "_ingest_staging_*"))
+
+
+def test_cli_ingest_empty_source_reports_zero(spark, tmp_path, capsys):
+    """An empty source leaves no catalog behind; the summary reads the
+    catalog through load_manifest and reports zero instead of failing."""
+    from kompactor_spark.cli import main as cli_main
+
+    src = tmp_path / "empty"
+    src.mkdir()
+    rc = cli_main(
+        [
+            str(tmp_path / "lake"),
+            "--hosts",
+            FX.HOST,
+            "--ingest-source",
+            str(src),
+            "--ingest-format",
+            "lineprotocol",
+            "--checkpoint",
+            str(tmp_path / "ckpt"),
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    assert "0 rows in 0 files" in capsys.readouterr().out
