@@ -63,8 +63,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--bootstrap",
         action="store_true",
-        help="before compacting, adopt any uncataloged <host>/dbs files into a fresh snapshot "
-        "(footer stats only, no data scan)",
+        help="before compacting, catalog the <host>/dbs files the catalog does not hold "
+        "(footer stats only, no data scan; a second run adopts nothing)",
     )
     p.add_argument(
         "--retention-cutoff-ns",
@@ -72,12 +72,6 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help="prune files whose max_time is older than this ns epoch (catalog-first "
         "commit, then deletes), print a report, and exit; honors --dry-run",
-    )
-    p.add_argument(
-        "--parallelism",
-        type=int,
-        default=1,
-        help="concurrent compaction groups (driver threads; Spark overlaps their stages)",
     )
     p.add_argument(
         "--ingest-source",
@@ -324,19 +318,14 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                   f"(auto-compact {'on' if args.auto_compact else 'off'})")
             return 0
         if args.bootstrap:
-            import os
-
-            from kompactor_spark.compaction.metadata import bootstrap_snapshot, write_snapshot_atomic
+            from kompactor_spark.compaction.metadata import adopt
 
             for host in args.hosts.split(","):
                 if not host:
                     continue
-                snap = bootstrap_snapshot(args.data_dir, host, time_col=args.time_col)
-                out = os.path.join(args.data_dir, host, "snapshots", "0000.info.json")
-                os.makedirs(os.path.dirname(out), exist_ok=True)
-                write_snapshot_atomic(snap, out)
-                print(f"{host}: bootstrapped catalog ({snap.row_count} rows, "
-                      f"{sum(1 for _ in snap.all_files())} files)")
+                files = adopt(args.data_dir, host, time_col=args.time_col)
+                print(f"{host}: bootstrapped catalog ({sum(f.row_count for f in files)} rows, "
+                      f"{len(files)} files)")
         job = CompactionJob(
             spark,
             args.data_dir,
@@ -344,7 +333,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             config=CompactionConfig(time_window_hours=args.time_window_hours),
             dry_run=args.dry_run,
             time_col=args.time_col,
-            parallelism=args.parallelism,
         )
         reports = job.run_generation(now_ns=args.now_ns) if args.generation else job.run()
         for rep in reports:

@@ -2,27 +2,33 @@
 
 Data plane is the reference's one query re-expressed in Spark
 (kompactor.ts:107-111: read_parquet([...]) ORDER BY time → single zstd
-Parquet): ``spark.read.parquet(*paths)`` (B9 fixed: list API, no SQL
-string splicing) → sort → sorted single-file (or 70/30 split) write.
+Parquet), made once per run. Each group's inputs are read with
+``spark.read.parquet(*paths)`` (B9 fixed: list API, no SQL string
+splicing). Each row is tagged with its output: the group, plus the
+70/30 split part its time falls in. Groups with equal read schemas are
+unioned and written by one call of the lake writer
+(``writer.staged_write``), so a run makes one write per distinct schema.
 
-Per group (B7 fixed — the reference deleted sources BEFORE rewriting
-metadata): write the new file(s) through a staging dir and verify row
-conservation, then ``metadata.commit`` swaps inputs for outputs, then
-the inputs are deleted and empty dirs pruned (C14).
+B7 fixed (the reference deleted sources BEFORE rewriting metadata): row
+conservation is checked for every group from the staged footers before
+any file moves. Then, group by group, the outputs move into place,
+``metadata.commit`` swaps inputs for outputs, and the inputs are deleted
+and empty dirs pruned (C14).
 
 Dry-run is real (B1 fixed): plan + report, zero writes.
 """
 
 from __future__ import annotations
 
-import glob
+import contextlib
+import dataclasses
+import functools
+import itertools
 import logging
 import os
-import shutil
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction.metadata import (
@@ -35,14 +41,16 @@ from kompactor_spark.compaction.metadata import (
 from kompactor_spark.compaction.planner import (
     CompactionConfig,
     CompactionGroup,
-    CompactionPlan,
     GenerationGroup,
     compute_split_cuts,
     plan_compaction,
     plan_generation,
 )
+from kompactor_spark.compaction.writer import land, staged_write
 
 log = logging.getLogger("kompactor_spark.compaction")
+
+_OUTPUT = "_output"  # a row's output index; a column of the staged write only
 
 
 @dataclass
@@ -66,6 +74,33 @@ class CompactionReport:
     results: list[GroupResult] = field(default_factory=list)
 
 
+@dataclass
+class _Merge:
+    """One planned group: its inputs on disk, and its outputs (one per
+    split part, cut at ``cuts``)."""
+
+    group: CompactionGroup | GenerationGroup
+    inputs: list[ParquetFileInfo]
+    dropped: list[str]
+    outputs: list[str]
+    cuts: list[int]
+
+    def result(self, outputs: list[ParquetFileInfo] | None = None) -> GroupResult:
+        """The group's result: from the written ``outputs``, or, for a
+        dry run, from the inputs' catalog entries."""
+        files = self.inputs if outputs is None else outputs
+        k = self.group.key
+        return GroupResult(
+            key=(k.host, k.db_seg, k.table_seg, k.date, k.hour),
+            output_paths=self.outputs if outputs is None else [f.path for f in outputs],
+            row_count=sum(f.row_count for f in files),
+            min_time=min((f.min_time for f in files), default=None),
+            max_time=max((f.max_time for f in files), default=None),
+            input_paths=[f.path for f in self.inputs],
+            dropped_missing=self.dropped,
+        )
+
+
 class CompactionJob:
     """Hour-level (K1) and generation-level (K2) compaction over an
     InfluxDB-3-style data dir (FIXTURES.md §2 layout)."""
@@ -78,7 +113,6 @@ class CompactionJob:
         config: CompactionConfig | None = None,
         dry_run: bool = False,
         time_col: str = "time",
-        parallelism: int = 1,
     ):
         self.spark = spark
         self.data_dir = data_dir
@@ -86,11 +120,6 @@ class CompactionJob:
         self.config = config or CompactionConfig()
         self.dry_run = dry_run
         self.time_col = time_col
-        # Groups are independent read→sort→write jobs; submitting them
-        # from multiple driver threads lets the Spark scheduler overlap
-        # their stages (a single group's coalesce(1) write uses one
-        # task — serial groups would idle the rest of the cluster).
-        self.parallelism = max(1, parallelism)
 
     # -- discovery ---------------------------------------------------------
     def validate_directories(self) -> None:
@@ -128,165 +157,99 @@ class CompactionJob:
             plan = plan_generation(host, manifest, self.config, now_ns=now_ns)
         else:
             plan = plan_compaction(host, manifest, before_hour_ns=before_hour_ns)
-        report = CompactionReport(
+        merges = [m for m in map(self._prepare, plan.groups) if m is not None]
+        results = [m.result() for m in merges] if self.dry_run else self._merge(host, merges)
+        return CompactionReport(
             host=host,
             dry_run=self.dry_run,
             planned_groups=len(plan.groups),
+            compacted_groups=len(results),
             skipped_singletons=plan.skipped_singletons,
+            results=results,
         )
-        if self.parallelism > 1 and not self.dry_run and len(plan.groups) > 1:
-            with ThreadPoolExecutor(max_workers=self.parallelism) as ex:
-                results = list(ex.map(lambda g: self._compact_group(host, g), plan.groups))
-        else:
-            results = [self._compact_group(host, g) for g in plan.groups]
-        for res in results:
-            if res is not None:
-                report.results.append(res)
-                report.compacted_groups += 1
-        return report
 
     def _abs(self, rel: str) -> str:
         return os.path.join(self.data_dir, rel)
 
-    def _compact_group(self, host: str, group: CompactionGroup | GenerationGroup) -> GroupResult | None:
-        sorted_files = group.sorted_files()
-        existing = [f for f in sorted_files if os.path.exists(self._abs(f.path))]
-        dropped = [f.path for f in sorted_files if not os.path.exists(self._abs(f.path))]
+    def _prepare(self, group: CompactionGroup | GenerationGroup) -> _Merge | None:
+        """Driver-side work for one group, before anything is written:
+        skip missing inputs, then pick the outputs and refuse any that
+        would overwrite an input."""
+        files = group.sorted_files()
+        inputs = [f for f in files if os.path.exists(self._abs(f.path))]
+        dropped = [f.path for f in files if not os.path.exists(self._abs(f.path))]
         for p in dropped:  # C13 semantics: warn and proceed
             log.warning("input missing on disk, skipping: %s", p)
-        if len(existing) <= 1:
+        if len(inputs) <= 1:
             return None
 
         out_rel = group.output_relpath()
-        out_abs = self._abs(out_rel)
-        input_abs = [self._abs(f.path) for f in existing]
-
         if self.dry_run:
-            log.info("[dry-run] would merge %d files -> %s", len(existing), out_rel)
-            return GroupResult(
-                key=(host, group.key.db_seg, group.key.table_seg, group.key.date, group.key.hour),
-                output_paths=[out_rel],
-                row_count=sum(f.row_count for f in existing),
-                min_time=min(f.min_time for f in existing),
-                max_time=max(f.max_time for f in existing),
-                input_paths=[f.path for f in existing],
-                dropped_missing=dropped,
-            )
+            log.info("[dry-run] would merge %d files -> %s", len(inputs), out_rel)
+            return _Merge(group, inputs, dropped, [out_rel], [])
 
-        tmin_in = min(f.min_time for f in existing)
-        tmax_in = max(f.max_time for f in existing)
+        tmin_in = min(f.min_time for f in inputs)
+        tmax_in = max(f.max_time for f in inputs)
         cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes, self.config)
         if cuts:
-            final_abs = [out_abs.replace(".parquet", f"_p{i}.parquet") for i in range(len(cuts) + 1)]
+            outputs = [out_rel.replace(".parquet", f"_p{i}.parquet") for i in range(len(cuts) + 1)]
         else:
-            final_abs = [out_abs]
+            outputs = [out_rel]
         # Writing over an input and then deleting the inputs would lose
         # the output too (a replayed WAL file named after a c_ file's
         # first sequence) — refuse before anything is written.
-        clash = sorted(set(final_abs) & set(input_abs))
+        clash = sorted(set(outputs) & {f.path for f in inputs})
         if clash:
-            raise RuntimeError(f"compaction output {clash[0]} would overwrite one of its inputs")
+            raise RuntimeError(f"compaction output {self._abs(clash[0])} would overwrite one of its inputs")
+        return _Merge(group, inputs, dropped, outputs, cuts)
 
-        # ---- 1. merge + write (staged) -----------------------------------
-        df = self.spark.read.parquet(*input_abs)  # B9: list API
-        obs = Observation(f"compact-{group.output_name()}")
-        df = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min(self.time_col).alias("tmin"),
-            F.max(self.time_col).alias("tmax"),
-        )
-        staging = out_abs + ".staging"
-        shutil.rmtree(staging, ignore_errors=True)
+    def _merge(self, host: str, merges: list[_Merge]) -> list[GroupResult]:
+        """Read every group, write all outputs in one staged write per
+        distinct read schema, check row conservation, then move, commit
+        and delete group by group in plan order."""
+        t = F.col(self.time_col)
+        first = [0, *itertools.accumulate(len(m.outputs) for m in merges)]  # index of part 0
+        by_schema: dict = {}
+        for m, base in zip(merges, first):
+            df = self.spark.read.parquet(*[self._abs(f.path) for f in m.inputs])  # B9: list API
+            # the part is the number of cuts below the row's time: (lo, hi] bounds
+            part = sum(((t > F.lit(c)).cast("int") for c in m.cuts), F.lit(base))
+            by_schema.setdefault(df.schema, []).append(df.withColumn(_OUTPUT, part))
 
-        if cuts:
-            bounds = [None, *cuts, None]
-            parts = []
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                p = df
-                if lo is not None:
-                    p = p.where(F.col(self.time_col) > F.lit(lo))
-                if hi is not None:
-                    p = p.where(F.col(self.time_col) <= F.lit(hi))
-                parts.append(p)
-        else:
-            parts = [df]
-
-        os.makedirs(os.path.dirname(out_abs), exist_ok=True)
-        final_rel_paths: list[str] = []
-        part_stats: list[tuple[str, int]] = []  # (abs path, size)
-        for i, (pdf, part_abs) in enumerate(zip(parts, final_abs)):
-            pstaging = os.path.join(staging, f"part{i}")
-            (
-                pdf.coalesce(1)
-                .sortWithinPartitions(self.time_col)
-                .write.mode("overwrite")
-                .option("compression", self.config.compression)
-                .option("parquet.page.row.count.limit", str(self.config.row_group_rows))
-                .parquet(pstaging)
-            )
-            written = glob.glob(os.path.join(pstaging, "part-*.parquet"))
-            if len(written) != 1:
-                # kernel guard (survives python -O): the atomic rename
-                # below moves exactly one file; more would silently
-                # drop data, zero means the write itself failed
-                raise RuntimeError(f"expected exactly one part file, got {written}")
-            os.replace(written[0], part_abs)
-            final_rel_paths.append(os.path.relpath(part_abs, self.data_dir))
-            part_stats.append((part_abs, os.path.getsize(part_abs)))  # B6: real size
-        shutil.rmtree(staging, ignore_errors=True)
-
-        row = obs.get
-        rows, tmin, tmax = int(row["rows"]), int(row["tmin"]), int(row["tmax"])
-
-        # ---- 2. verify ----------------------------------------------------
-        if not dropped:
-            expected_rows = sum(f.row_count for f in existing)
-            if expected_rows != rows:
-                raise RuntimeError(
-                    f"row conservation violated for {out_rel}: inputs={expected_rows} output={rows}"
+        with contextlib.ExitStack() as stack:
+            staged: dict[str, str] = {}
+            for dfs in by_schema.values():
+                union = functools.reduce(DataFrame.union, dfs)
+                staged.update(
+                    stack.enter_context(
+                        staged_write(union, _OUTPUT, self.data_dir, host, self.time_col, self.config)
+                    )
                 )
+            # a split part no row falls into stages no file
+            placed = [
+                {rel: staged[str(i)] for i, rel in enumerate(m.outputs, start=base) if str(i) in staged}
+                for m, base in zip(merges, first)
+            ]
+            for m, files in zip(merges, placed):
+                rows_in = sum(f.row_count for f in m.inputs)
+                rows_out = sum(footer_time_stats(p, self.time_col)[0] for p in files.values())
+                if rows_in != rows_out:
+                    raise RuntimeError(
+                        f"row conservation violated for {m.outputs[0]}: "
+                        f"inputs={rows_in} output={rows_out}"
+                    )
+            return [self._commit(host, m, files) for m, files in zip(merges, placed)]
 
-        # ---- 3. commit, then delete originals + prune (C14) --------------
-        new_infos = self._new_file_infos(final_rel_paths, part_stats, existing)
-        commit(self.data_dir, host, removed=[f.path for f in existing], added=new_infos)
-        for p in input_abs:
-            os.unlink(p)
-            _remove_empty_dirs_upward(os.path.dirname(p), self.data_dir)
-
-        return GroupResult(
-            key=(host, group.key.db_seg, group.key.table_seg, group.key.date, group.key.hour),
-            output_paths=final_rel_paths,
-            row_count=rows,
-            min_time=tmin,
-            max_time=tmax,
-            input_paths=[f.path for f in existing],
-            dropped_missing=dropped,
-        )
-
-    def _new_file_infos(
-        self,
-        final_rel_paths: list[str],
-        part_stats: list[tuple[str, int]],
-        inputs: list[ParquetFileInfo],
-    ) -> list[ParquetFileInfo]:
-        """Real sizes and per-part exact time stats from the parquet
-        footers; ``commit`` assigns the ids."""
-        infos = []
-        for rel, (abs_path, size) in zip(final_rel_paths, part_stats):
-            p_rows, p_min, p_max = footer_time_stats(abs_path, self.time_col)
-            if p_rows == 0:  # a split part no row fell into: no range of its own
-                p_min = min(f.min_time for f in inputs)
-                p_max = max(f.max_time for f in inputs)
-            infos.append(
-                ParquetFileInfo(
-                    id=0,
-                    path=rel,
-                    size_bytes=size,
-                    row_count=p_rows,
-                    chunk_time=inputs[0].chunk_time,
-                    min_time=p_min,
-                    max_time=p_max,
-                )
-            )
-        return infos
+    def _commit(self, host: str, m: _Merge, files: dict[str, str]) -> GroupResult:
+        """Move a group's staged outputs into place, swap them for its
+        inputs in the catalog, then delete the inputs (C14)."""
+        added = [
+            # C10: the output keeps the first input's chunk_time
+            dataclasses.replace(land(p, self.data_dir, rel, self.time_col), chunk_time=m.inputs[0].chunk_time)
+            for rel, p in files.items()
+        ]
+        commit(self.data_dir, host, removed=[f.path for f in m.inputs], added=added)
+        for f in m.inputs:
+            os.unlink(self._abs(f.path))
+            _remove_empty_dirs_upward(os.path.dirname(self._abs(f.path)), self.data_dir)
+        return m.result(added)

@@ -25,8 +25,11 @@ from __future__ import annotations
 import contextlib
 import dataclasses
 import fcntl
+import glob
+import itertools
 import json
 import os
+import re
 import tempfile
 from collections.abc import Iterable
 from dataclasses import dataclass, field
@@ -54,6 +57,23 @@ class ParquetFileInfo:
             chunk_time=int(obj["chunk_time"]),
             min_time=int(obj["min_time"]),
             max_time=int(obj["max_time"]),
+        )
+
+    @classmethod
+    def from_file(cls, data_dir: str, rel: str, time_col: str = "time") -> ParquetFileInfo:
+        """The entry of the file at ``data_dir/rel``: its real size (B6)
+        and its footer's rows and time range (0 for a file with no rows).
+        ``commit`` assigns the id."""
+        abs_path = os.path.join(data_dir, rel)
+        rows, tmin, tmax = footer_time_stats(abs_path, time_col)
+        return cls(
+            id=0,
+            path=rel,
+            size_bytes=os.path.getsize(abs_path),
+            row_count=rows,
+            chunk_time=tmin or 0,
+            min_time=tmin or 0,
+            max_time=tmax or 0,
         )
 
     def to_json(self) -> dict:
@@ -322,46 +342,44 @@ def _remove_empty_dirs_upward(d: str, stop: str) -> None:
         d = os.path.dirname(d)
 
 
+def lake_files(data_dir: str, host: str) -> list[tuple[int, int, str]]:
+    """``(db, table, path)`` of every Parquet file under
+    ``<host>/dbs/db-N/table-N/``, in path order."""
+    found = []
+    for p in sorted(glob.glob(os.path.join(data_dir, host, "dbs", "**", "*.parquet"), recursive=True)):
+        rel = os.path.relpath(p, data_dir)
+        m = re.search(r"/db-(\d+)/table-(\d+)/", rel)
+        if m:
+            found.append((int(m.group(1)), int(m.group(2)), rel))
+    return found
+
+
 def bootstrap_snapshot(
     data_dir: str,
     host: str,
     time_col: str = "time",
     writer_id: str | None = None,
 ) -> SnapshotMetadata:
-    """Adopt an uncataloged layout: walk <host>/dbs/db-N/table-N/...,
-    read each Parquet footer (rows + time min/max — no data scan), and
-    build a SnapshotMetadata over everything found. The entry point for
-    taking ownership of files written by an external ingester (e.g. a
-    streaming job) that doesn't maintain the snapshot catalog.
-    """
-    import glob as _glob
-    import re as _re
+    """A snapshot over every file ``lake_files`` finds, from the footers
+    alone (no data scan), ids from 1 in path order: the catalog of a
+    layout that has none."""
+    entries = [
+        (db, table, dataclasses.replace(ParquetFileInfo.from_file(data_dir, rel, time_col), id=i))
+        for i, (db, table, rel) in enumerate(lake_files(data_dir, host), start=1)
+    ]
+    return snapshot_from_entries(entries, writer_id=writer_id or host)
 
-    files: list[tuple[int, int, ParquetFileInfo]] = []
-    next_id = 1
-    base = os.path.join(data_dir, host, "dbs")
-    for p in sorted(_glob.glob(os.path.join(base, "**", "*.parquet"), recursive=True)):
-        rel = os.path.relpath(p, data_dir)
-        m = _re.search(r"/db-(\d+)/table-(\d+)/", rel)
-        if not m:
-            continue
-        db_id, table_id = int(m.group(1)), int(m.group(2))
-        rows, tmin, tmax = footer_time_stats(p, time_col)
-        files.append(
-            (
-                db_id,
-                table_id,
-                ParquetFileInfo(
-                    id=next_id,
-                    path=rel,
-                    size_bytes=os.path.getsize(p),
-                    row_count=rows,
-                    chunk_time=tmin or 0,  # 0 only for a file with no rows
-                    min_time=tmin or 0,
-                    max_time=tmax or 0,
-                ),
-            )
-        )
-        next_id += 1
 
-    return snapshot_from_entries(files, writer_id=writer_id or host)
+def adopt(data_dir: str, host: str, time_col: str = "time") -> list[ParquetFileInfo]:
+    """Catalog the files under ``<host>/dbs`` that ``load_manifest`` does
+    not hold, with one ``commit`` per (db, table): the entry point for
+    taking ownership of files an external ingester wrote. Returns the
+    adopted files with their ids; a second call adopts nothing."""
+    held = {f.path for _, _, f in load_manifest(data_dir, host)}
+    bare = [e for e in lake_files(data_dir, host) if e[2] not in held]
+    adopted: list[ParquetFileInfo] = []
+    # path order keeps each (db, table) contiguous
+    for (db, table), entries in itertools.groupby(bare, key=lambda e: e[:2]):
+        added = [ParquetFileInfo.from_file(data_dir, rel, time_col) for _, _, rel in entries]
+        adopted += commit(data_dir, host, added=added, db=db, table=table)
+    return adopted

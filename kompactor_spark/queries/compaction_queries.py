@@ -10,14 +10,14 @@ over the same source rows.
 
 from __future__ import annotations
 
-import glob
+import datetime
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction import CompactionJob
-from kompactor_spark.compaction.metadata import ParquetFileInfo, commit, footer_time_stats
+from kompactor_spark.compaction.metadata import commit
+from kompactor_spark.compaction.writer import land, staged_write
 from kompactor_spark.queries import register
 from kompactor_spark.sources import clear_scratch
 from kompactor_spark.tables import loader
@@ -26,8 +26,8 @@ _HOST = "host-q"
 
 
 def _build_layout(spark, sf_dir: str, root: str) -> None:
-    """events rows of the min-hour bucket → 3 WAL parquet files, cataloged
-    by one commit."""
+    """events rows of the min-hour bucket → 3 WAL parquet files (by
+    ``event_id % 3``) in one lake write, cataloged by one commit."""
     T = loader(sf_dir, spark)
     ev = T("events").select(
         F.col("ts").alias("time"), "event_id", "user_id", "event_type", "value"
@@ -36,28 +36,10 @@ def _build_layout(spark, sf_dir: str, root: str) -> None:
     min_hour = ev.agg(F.min((F.col("time") - F.col("time") % hour_ns)).alias("h")).first()["h"]
     rows = ev.where((F.col("time") >= min_hour) & (F.col("time") < min_hour + hour_ns))
 
-    import datetime
-
-    dt = datetime.datetime.fromtimestamp(min_hour / 1e9, tz=datetime.timezone.utc)
-    date, hour = dt.strftime("%Y-%m-%d"), dt.hour
-    infos = []
-    for i in range(3):
-        rel = f"{_HOST}/dbs/db-0/table-1/{date}/{hour:02d}-00/{i + 1:010d}.parquet"
-        abs_dir = os.path.join(root, rel + ".d")
-        shard = rows.where(F.col("event_id") % 3 == i).coalesce(1).sortWithinPartitions("time")
-        shard.write.mode("overwrite").parquet(abs_dir)
-        (part,) = glob.glob(os.path.join(abs_dir, "part-*.parquet"))
-        abs_path = os.path.join(root, rel)
-        os.makedirs(os.path.dirname(abs_path), exist_ok=True)
-        os.replace(part, abs_path)
-        shutil.rmtree(abs_dir, ignore_errors=True)
-        n, mn, mx = footer_time_stats(abs_path)
-        infos.append(
-            ParquetFileInfo(
-                id=0, path=rel, size_bytes=os.path.getsize(abs_path), row_count=n,
-                chunk_time=mn, min_time=mn, max_time=mx,
-            )
-        )
+    dt = datetime.datetime.fromtimestamp(min_hour // 1_000_000_000, tz=datetime.timezone.utc)
+    hour_dir = f"{_HOST}/dbs/db-0/table-1/{dt:%Y-%m-%d}/{dt.hour:02d}-00"
+    with staged_write(rows.withColumn("_wal", F.col("event_id") % 3), "_wal", root, _HOST) as staged:
+        infos = [land(path, root, f"{hour_dir}/{int(i) + 1:010d}.parquet") for i, path in staged.items()]
     commit(root, _HOST, added=infos, db=0, table=1)
 
 

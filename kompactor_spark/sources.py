@@ -5,8 +5,10 @@ The engine's physical-layout policy:
   pruning works at the scan (SURVEY §1.3: the reference's
   db/table/date/hour path scheme maps onto this).
 - zstd Parquet everywhere (reference sink option, kompactor.ts:109).
-- Sorted single-file writes for hour-group compaction (reference R3-R4)
-  and range-partitioned multi-file sorted writes for the 100 TB path
+- Sorted single-file writes (reference R3-R4) for one-off outputs; the
+  compaction lake (ingest and compaction) writes through
+  ``compaction.writer`` instead.
+- Range-partitioned multi-file sorted writes for the 100 TB path
   (S6): ``repartitionByRange(n, key).sortWithinPartitions(key)`` gives
   globally range-sorted output without a single-node bottleneck.
 """

@@ -98,9 +98,9 @@ def test_commit_is_process_safe(tmp_path):
 
 
 def test_parallel_groups_commit_every_output(spark, tmp_path):
-    """Eight hour groups compacted from eight threads of one job, with a
-    short thread switch interval: every output is cataloged once, with
-    its own id, and nothing else is."""
+    """Eight hour groups compacted in one run, with a short thread
+    switch interval: every output is cataloged once, with its own id,
+    and nothing else is."""
     from kompactor_spark.compaction import CompactionJob
     from kompactor_spark.compaction.fsck import fsck_host
 
@@ -118,7 +118,7 @@ def test_parallel_groups_commit_every_output(spark, tmp_path):
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        [report] = CompactionJob(spark, root, [FX.HOST], parallelism=8).run()
+        [report] = CompactionJob(spark, root, [FX.HOST]).run()
     finally:
         sys.setswitchinterval(interval)
     assert report.compacted_groups == 8

@@ -352,3 +352,37 @@ def test_cli_skew_report(spark, tmp_path, capsys):
     assert "key skew" in out and "share=" in out
     shares = [float(line.split("share=")[1].split()[0]) for line in out.splitlines() if "share=" in line]
     assert shares and all(0 < s <= 1.0 for s in shares)
+
+
+def test_cli_bootstrap_adopts_only_uncataloged_files(spark, tmp_path, capsys):
+    """--bootstrap over a cataloged lake with one bare file adopts only
+    that file, through the locked commit, so ids stay distinct; a second
+    --bootstrap changes nothing. --dry-run keeps hour 14 as it is, so
+    all four files can be checked."""
+    from kompactor_spark.compaction.metadata import load_manifest
+
+    root = str(tmp_path)
+    FX.basic_hour(root)  # ids 1-3 in hour 14
+    h13 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS) - 3600 * FX.NS
+    bare = os.path.join(root, FX.HOST, "dbs/db-0/table-3/2025-01-26/13-00/0000000009.parquet")
+    os.makedirs(os.path.dirname(bare))
+    pq.write_table(FX.make_rows(10, h13, 600 * FX.NS, seed=9), bare)
+    on_disk = sorted(
+        os.path.relpath(p, root)
+        for p in glob.glob(os.path.join(root, FX.HOST, "dbs", "**", "*.parquet"), recursive=True)
+    )
+
+    def snapshots():
+        return {p: open(p, "rb").read() for p in glob.glob(os.path.join(root, FX.HOST, "snapshots", "*.json"))}
+
+    argv = [root, "--hosts", FX.HOST, "--bootstrap", "--dry-run"]
+    assert main(argv, spark=spark) == 0
+    assert "bootstrapped catalog (10 rows, 1 files)" in capsys.readouterr().out
+    files = [f for _, _, f in load_manifest(root, FX.HOST)]
+    assert sorted(f.path for f in files) == on_disk and len(on_disk) == 4
+    assert len({f.id for f in files}) == 4
+
+    after = snapshots()
+    assert main(argv, spark=spark) == 0
+    assert "bootstrapped catalog (0 rows, 0 files)" in capsys.readouterr().out
+    assert snapshots() == after

@@ -276,11 +276,11 @@ def test_oversized_output_splits(spark, tmp_path):
         assert hi1 < lo2
 
 
-def test_split_empty_part_cataloged(spark, tmp_path):
+def test_split_empty_part_not_cataloged(spark, tmp_path):
     """A split part no row falls into (rows only at the hour's edges)
-    is cataloged with 0 rows and the inputs' time range, and the
-    catalog stays readable and fsck-clean."""
-    from kompactor_spark.compaction import CompactionConfig
+    writes no file and is not cataloged; the parts that are hold all
+    40 rows in disjoint time ranges, and the lake stays fsck-clean."""
+    from kompactor_spark.compaction import CompactionConfig, compute_split_cuts
     from kompactor_spark.compaction.fsck import fsck_host
 
     root = str(tmp_path)
@@ -290,15 +290,20 @@ def test_split_empty_part_cataloged(spark, tmp_path):
         b.add_parquet(0, 3, "2025-01-26", 14, f"{wal:010d}.parquet",
                       FX.make_rows(20, t0, FX.NS, seed=wal))
     b.write_snapshot()
-    lo = min(e["info"]["min_time"] for e in b.files)
-    hi = max(e["info"]["max_time"] for e in b.files)
-    report = run_job(spark, root, config=CompactionConfig(max_desired_file_size_bytes=1000))
-    outs = set(report.results[0].output_paths)
-    parts = [f for _, _, _, f in catalog_files(root) if f.path in outs]
-    assert len(parts) == len(outs) >= 3
-    empty = [f for f in parts if f.row_count == 0]
-    assert empty and all((f.min_time, f.max_time) == (lo, hi) for f in empty)
-    assert sum(f.row_count for f in parts) == 40
+    cfg = CompactionConfig(max_desired_file_size_bytes=1000)
+    infos = [e["info"] for e in b.files]
+    cuts = compute_split_cuts(min(i["min_time"] for i in infos), max(i["max_time"] for i in infos),
+                              sum(i["size_bytes"] for i in infos), cfg)
+    report = run_job(spark, root, config=cfg)
+    outs = report.results[0].output_paths
+    assert len(outs) < len(cuts) + 1  # at least one part got no rows
+    parts = sorted((f for _, _, _, f in catalog_files(root) if f.path in outs), key=lambda f: f.min_time)
+    assert len(parts) == len(outs) >= 2
+    assert all("_p" in os.path.basename(f.path) for f in parts)
+    assert all(f.row_count > 0 for f in parts)
+    assert sum(f.row_count for f in parts) == report.results[0].row_count == 40
+    for a, c in zip(parts, parts[1:]):
+        assert a.max_time < c.min_time
     assert_invariants(root)
     assert fsck_host(root, FX.HOST).ok
 
@@ -315,12 +320,12 @@ def test_compute_split_cuts_unit():
 
 
 def test_parallel_group_execution(spark, tmp_path):
-    """Groups compacted from concurrent driver threads: identical
-    results + invariants; catalog writes serialized by the meta lock."""
+    """Several groups compacted in one run: identical results +
+    invariants; fresh ids unique across the groups' commits."""
     root = str(tmp_path / "par")
     FX.multi_hour(root)
     before = rows_by_table(root)
-    report = run_job(spark, root, parallelism=4)
+    report = run_job(spark, root)
     assert report.compacted_groups == 2
     assert rows_by_table(root) == before
     assert_invariants(root)
@@ -513,3 +518,107 @@ def test_output_never_overwrites_an_input(spark, tmp_path):
         run_job(spark, root)
     assert lake_bytes() == before
     assert fsck_host(root, FX.HOST).ok
+
+
+def _lake_bytes(root):
+    files = glob.glob(os.path.join(root, "**", "*"), recursive=True)
+    return {p: open(p, "rb").read() for p in files if os.path.isfile(p)}
+
+
+def test_failed_write_leaves_the_lake_as_it_was(spark, tmp_path):
+    """A write that stages more than one file for an output (a session
+    with spark.sql.files.maxRecordsPerFile set) raises before any file
+    moves: snapshot and inputs are byte-identical, no staging directory
+    is left behind, and fsck is ok."""
+    from kompactor_spark.compaction.fsck import fsck_host
+
+    root = str(tmp_path)
+    FX.basic_hour(root)  # 150 rows in one output
+    before = _lake_bytes(root)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "40")
+    try:
+        with pytest.raises(RuntimeError, match="expected exactly"):
+            run_job(spark, root)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert _lake_bytes(root) == before
+    assert sorted(os.listdir(os.path.join(root, FX.HOST))) == ["dbs", "snapshots"]
+    assert fsck_host(root, FX.HOST).ok
+
+
+def test_run_writes_once(spark, tmp_path, monkeypatch):
+    """Eight hour groups of one schema: the run makes one Spark write
+    and at most 10 Spark jobs (a schema read per group, and the write),
+    not a write per group."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    wal = 1
+    for hour in range(8):
+        hstart = (FX.BASE_NS // (3600 * FX.NS) + hour) * 3600 * FX.NS
+        for i in range(2):
+            rows = FX.make_rows(20, hstart + i * 7 * FX.NS, 2000 * FX.NS, seed=wal)
+            b.add_parquet(0, 3, "2025-01-26", 14 + hour, f"{wal:010d}.parquet", rows)
+            wal += 1
+    b.write_snapshot()
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def counting(self, *args, **kwargs):
+        writes.append(args)
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counting)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("test_run_writes_once", "one compaction run")
+    try:
+        [report] = CompactionJob(spark, root, [FX.HOST]).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(tracker.getJobIdsForGroup("test_run_writes_once"))
+    jobs |= set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert report.compacted_groups == 8
+    assert len(writes) == 1
+    assert len(jobs) <= 10, sorted(jobs)
+
+
+def test_groups_keep_their_own_columns(spark, tmp_path):
+    """Hour 15's files carry a column hour 14's do not. Groups are only
+    written together when their read schemas are equal, so each output
+    holds exactly its own inputs' columns and rows."""
+    import pyarrow as pa
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    expected = {}
+    wal = 1
+    for hour in (14, 15):
+        hstart = (FX.BASE_NS // (3600 * FX.NS) + hour - 14) * 3600 * FX.NS
+        tables = []
+        for i in range(2):
+            rows = FX.make_rows(20, hstart + i * 7 * FX.NS, 2000 * FX.NS, seed=wal)
+            if hour == 15:
+                rows = rows.append_column("f_extra", pa.array([f"x{wal}-{k}" for k in range(20)]))
+            b.add_parquet(0, 3, "2025-01-26", hour, f"{wal:010d}.parquet", rows)
+            tables.append(rows)
+            wal += 1
+        expected[f"{hour}"] = pa.concat_tables(tables)
+    b.write_snapshot()
+
+    report = run_job(spark, root)
+    assert report.compacted_groups == 2
+
+    def key(row):
+        return row["time"], row["f_int"], row["f_str"]
+
+    for r in report.results:
+        (out,) = r.output_paths
+        got = pq.read_table(os.path.join(root, out))
+        want = expected[r.key[4]]
+        assert got.column_names == want.column_names
+        assert sorted(got.to_pylist(), key=key) == sorted(want.to_pylist(), key=key)
+    assert_invariants(root)
