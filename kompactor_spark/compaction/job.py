@@ -3,8 +3,10 @@
 Data plane is the reference's one query re-expressed in Spark
 (kompactor.ts:107-111: read_parquet([...]) ORDER BY time → single zstd
 Parquet), made once per run. Each group's inputs are read with
-``spark.read.parquet(*paths)`` (B9 fixed: list API, no SQL string
-splicing). Each row is tagged with its output: the group, plus the
+``session.read_parquet(spark, *paths)`` (B9 fixed: list API, no SQL
+string splicing): a cached schema per footer fingerprint, so no
+inference job, and the union of the columns when the inputs' schemas
+differ. Each row is tagged with its output: the group, plus the
 70/30 split part its time falls in. Groups with equal read schemas are
 unioned and written by one call of the lake writer
 (``writer.staged_write``), so a run makes one write per distinct schema.
@@ -47,6 +49,7 @@ from kompactor_spark.compaction.planner import (
     plan_generation,
 )
 from kompactor_spark.compaction.writer import land, staged_write
+from kompactor_spark.session import read_parquet
 
 log = logging.getLogger("kompactor_spark.compaction")
 
@@ -211,7 +214,7 @@ class CompactionJob:
         first = [0, *itertools.accumulate(len(m.outputs) for m in merges)]  # index of part 0
         by_schema: dict = {}
         for m, base in zip(merges, first):
-            df = self.spark.read.parquet(*[self._abs(f.path) for f in m.inputs])  # B9: list API
+            df = read_parquet(self.spark, *[self._abs(f.path) for f in m.inputs])  # B9: list API
             # the part is the number of cuts below the row's time: (lo, hi] bounds
             part = sum(((t > F.lit(c)).cast("int") for c in m.cuts), F.lit(base))
             by_schema.setdefault(df.schema, []).append(df.withColumn(_OUTPUT, part))
@@ -251,5 +254,5 @@ class CompactionJob:
         commit(self.data_dir, host, removed=[f.path for f in m.inputs], added=added)
         for f in m.inputs:
             os.unlink(self._abs(f.path))
-            _remove_empty_dirs_upward(os.path.dirname(self._abs(f.path)), self.data_dir)
+            _remove_empty_dirs_upward(os.path.dirname(self._abs(f.path)), os.path.join(self.data_dir, host, "dbs"))
         return m.result(added)

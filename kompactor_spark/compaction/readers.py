@@ -35,6 +35,7 @@ from kompactor_spark.compaction.metadata import (
     snapshot_id,
     snapshot_paths,
 )
+from kompactor_spark.session import read_parquet
 
 
 def snapshot_ids(data_dir: str, host: str) -> list[int]:
@@ -99,7 +100,7 @@ def read_table(
         raise FileNotFoundError(
             f"catalog has no files for host={host} db={db} table={table} as_of={as_of}"
         )
-    df = spark.read.parquet(*[os.path.join(data_dir, f.path) for f in files])
+    df = read_parquet(spark, *[os.path.join(data_dir, f.path) for f in files])
     if min_time_ns is not None:
         df = df.where(F.col("time") >= min_time_ns)
     if max_time_ns is not None:

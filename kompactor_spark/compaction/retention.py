@@ -71,9 +71,8 @@ def enforce_retention(
             abs_path = os.path.join(data_dir, rel)
             if os.path.exists(abs_path):
                 os.unlink(abs_path)
-                _remove_empty_dirs_upward(
-                    os.path.dirname(abs_path), os.path.join(data_dir, host)
-                )
+                # <host>/dbs stays: compaction requires it even when empty
+                _remove_empty_dirs_upward(os.path.dirname(abs_path), os.path.join(data_dir, host, "dbs"))
             else:
                 rep.missing.append(rel)
         reports.append(rep)

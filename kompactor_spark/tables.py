@@ -1,8 +1,10 @@
 """Testdata table access (TESTDATA.md / FIXTURES.md §1).
 
 Schemas are pinned explicitly (SURVEY §1.3: "pin schemas explicitly in
-engine API for 100 TB safety") — we still read with footer inference
-(Parquet is self-describing) but assert the contract in tests.
+engine API for 100 TB safety"). Tables are read through
+``session.read_parquet``, which reuses the schema Spark inferred for
+the same footer, so a warm load launches no job; ``SCHEMAS`` is the
+contract the tests assert.
 """
 
 from __future__ import annotations
@@ -11,7 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kompactor_spark.session import ensure_conf
+from kompactor_spark.session import ensure_conf, read_parquet
 
 TABLES = [
     "region",
@@ -64,7 +66,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_conf(spark)  # UTC session tz + nanosAsLong (ns parquet builds)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         df = normalize_event_time(df)
     elif name in ("orders", "lineitem"):

@@ -622,3 +622,56 @@ def test_groups_keep_their_own_columns(spark, tmp_path):
         assert got.column_names == want.column_names
         assert sorted(got.to_pylist(), key=key) == sorted(want.to_pylist(), key=key)
     assert_invariants(root)
+
+
+def _with_extra(rows, tag):
+    import pyarrow as pa
+
+    return rows.append_column("f_extra", pa.array([f"{tag}-{k}" for k in range(rows.num_rows)]))
+
+
+def test_field_added_mid_hour_survives(spark, tmp_path):
+    """The hour's second WAL file carries a column its first lacks. The
+    merge keeps it: the output holds the union of the columns, with
+    nulls where the first file had none."""
+    from kompactor_spark.compaction.fsck import fsck_host
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000001.parquet", FX.make_rows(20, h14, 2000 * FX.NS, seed=1))
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000002.parquet",
+                  _with_extra(FX.make_rows(20, h14 + 7 * FX.NS, 2000 * FX.NS, seed=2), "x"))
+    b.write_snapshot()
+
+    report = run_job(spark, root)
+    (out,) = report.results[0].output_paths
+    got = pq.read_table(os.path.join(root, out))
+    assert got.num_rows == 40
+    assert len(got.column("f_extra").drop_null()) == 20
+    assert_invariants(root)
+    assert fsck_host(root, FX.HOST).ok
+
+
+def test_read_table_unions_columns_across_files(spark, tmp_path):
+    """Hour 15 carries a column hour 14 lacks: the whole-table read has
+    it, whichever file Spark would have inferred the schema from."""
+    from pyspark.sql import functions as F
+
+    from kompactor_spark.compaction.readers import read_table
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    h15 = h14 + 3600 * FX.NS
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000001.parquet", FX.make_rows(20, h14, 2000 * FX.NS, seed=1))
+    b.add_parquet(0, 3, "2025-01-26", 15, "0000000002.parquet",
+                  _with_extra(FX.make_rows(20, h15, 2000 * FX.NS, seed=2), "x"))
+    b.write_snapshot()
+
+    df = read_table(spark, root, FX.HOST, 0, 3)
+    assert len(df.columns) == 7
+    assert df.where(F.col("f_extra").isNotNull()).count() == 20
+    assert df.count() == 40
+    pruned = read_table(spark, root, FX.HOST, 0, 3, min_time_ns=h15)
+    assert len(pruned.columns) == 7

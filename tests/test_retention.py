@@ -10,7 +10,7 @@ from kompactor_spark.compaction.fsck import fsck_host
 from kompactor_spark.compaction.metadata import read_snapshot
 from kompactor_spark.compaction.retention import enforce_retention
 
-from tests.fixtures_compaction import BASE_NS, HOST, NS, multi_hour
+from tests.fixtures_compaction import BASE_NS, HOST, NS, basic_hour, multi_hour
 
 
 def _hour_start(hour: int) -> int:
@@ -63,6 +63,21 @@ def test_retention_idempotent_and_straddling_kept(tmp_path):
     assert all("12-00" in p for p in kept) and kept  # hour-12 files survive
     [rep2] = enforce_retention(root, [HOST], cutoff_ns=mid_hour_12)
     assert rep2.pruned_paths == [] and {f.path for _, _, f in _snap(root).all_files()} == kept
+
+
+def test_full_expiry_keeps_dbs_and_compaction_runs(spark, tmp_path):
+    """Expiring every file empties the lake but keeps ``<host>/dbs``, so
+    the next compaction run finds its required dirs and does nothing."""
+    from kompactor_spark.compaction import CompactionJob
+
+    root = str(tmp_path)
+    basic_hour(root)
+    [rep] = enforce_retention(root, [HOST], cutoff_ns=2**62)
+    assert len(rep.pruned_paths) == 3
+    assert os.listdir(os.path.join(root, HOST, "dbs")) == []
+    [report] = CompactionJob(spark, root, [HOST]).run()
+    assert report.planned_groups == report.compacted_groups == 0 and report.results == []
+    assert fsck_host(root, HOST).ok
 
 
 def test_cli_retention_flag(spark, tmp_path, capsys):
