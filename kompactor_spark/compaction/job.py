@@ -10,6 +10,9 @@ differ. Each row is tagged with its output: the group, plus the
 70/30 split part its time falls in. Groups with equal read schemas are
 unioned and written by one call of the lake writer
 (``writer.staged_write``), so a run makes one write per distinct schema.
+The writer picks its backend from the union's size estimate, which for
+a Parquet read is the input files' bytes: a small merge is sorted and
+written in this process, a large one by a Spark write.
 
 B7 fixed (the reference deleted sources BEFORE rewriting metadata): row
 conservation is checked for every group from the staged footers before

@@ -5,7 +5,10 @@ InfluxDB's WAL flusher there, by Structured Streaming here).
 Each micro-batch becomes one WAL-numbered Parquet file per
 (db, table, date, hour) — `<wal>.parquet` under
 `<host>/dbs/db-N/table-N/<date>/<HH-00>/` — in one call of the lake
-writer (``compaction.writer.staged_write``) keyed on the hour bucket.
+writer (``compaction.writer.staged_write``) keyed on the hour bucket. A
+micro-batch read from files reports its size to Spark's optimizer, so a
+small one is written in this process; a rate source's reports none and
+takes the Spark write.
 Ordering: the files land first, then ``metadata.commit`` catalogs them,
 so a crash never catalogs a missing file.
 
@@ -75,20 +78,22 @@ class IngestJob:
         """One WAL file per (date, hour) present in the batch.
 
         One lake-writer call per micro-batch, keyed on the hour bucket,
-        writes every hour's (sorted, zstd) file in one pass; the driver
-        then takes the hours from the staged directory names and the
-        row counts and time ranges from the Parquet footers — no
-        ``collect()`` of data and no per-hour job loop."""
+        writes every hour's (sorted, zstd) file: in this process for a
+        small batch, in one Spark write for a large or unsized one (see
+        ``compaction.writer``). The hours come from the staged directory
+        names and the row counts and time ranges from the Parquet footers,
+        with no per-hour job loop. Every WAL path is built before the
+        first file moves, so a row with a null time raises ``ValueError``
+        and leaves the lake as it was."""
         t = F.col(self.time_col)
         # subtract-modulo, not `/`: ns epochs exceed double's 2^53, and
         # the float path can misroute boundary rows into the wrong hour
         with_bucket = df.withColumn("_hour_ns", (t - t % NS_PER_HOUR).cast("long"))
         wal = int(batch_id) + 1
         with staged_write(with_bucket, "_hour_ns", self.data_dir, self.host, self.time_col) as staged:
-            new_infos = [
-                land(path, self.data_dir, self._wal_relpath(int(hour_ns), wal), self.time_col)
-                for hour_ns, path in staged.items()
-            ]
+            # every path before the first move: a bad key leaves no file in the lake
+            rels = {path: self._wal_relpath(hour_key, wal) for hour_key, path in staged.items()}
+            new_infos = [land(path, self.data_dir, rel, self.time_col) for path, rel in rels.items()]
         if new_infos:
             commit(self.data_dir, self.host, added=new_infos, db=self.db, table=self.table)
             batch_max = max(i.max_time for i in new_infos)
@@ -98,7 +103,16 @@ class IngestJob:
             if self.auto_compact:
                 self._compact_closed_hours(df.sparkSession)
 
-    def _wal_relpath(self, hour_ns: int, wal: int) -> str:
+    def _wal_relpath(self, hour_key: str, wal: int) -> str:
+        """The WAL file's path for a staged hour key; a row with a null
+        ``time`` stages no hour."""
+        try:
+            hour_ns = int(hour_key)
+        except ValueError:
+            raise ValueError(
+                f"ingest batch has rows with a null {self.time_col!r} (staged hour key "
+                f"{hour_key!r}); nothing was moved into the lake"
+            ) from None
         dt = datetime.datetime.fromtimestamp(hour_ns // 1_000_000_000, tz=datetime.timezone.utc)
         return os.path.join(
             self.host,

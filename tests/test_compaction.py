@@ -525,13 +525,15 @@ def _lake_bytes(root):
     return {p: open(p, "rb").read() for p in files if os.path.isfile(p)}
 
 
-def test_failed_write_leaves_the_lake_as_it_was(spark, tmp_path):
+def test_failed_write_leaves_the_lake_as_it_was(spark, tmp_path, monkeypatch):
     """A write that stages more than one file for an output (a session
     with spark.sql.files.maxRecordsPerFile set) raises before any file
     moves: snapshot and inputs are byte-identical, no staging directory
     is left behind, and fsck is ok."""
+    from kompactor_spark.compaction import writer
     from kompactor_spark.compaction.fsck import fsck_host
 
+    monkeypatch.setattr(writer, "LOCAL_WRITE_MAX_BYTES", -1)  # the Spark write
     root = str(tmp_path)
     FX.basic_hour(root)  # 150 rows in one output
     before = _lake_bytes(root)
@@ -546,12 +548,46 @@ def test_failed_write_leaves_the_lake_as_it_was(spark, tmp_path):
     assert fsck_host(root, FX.HOST).ok
 
 
+def test_failed_local_write_leaves_the_lake_as_it_was(spark, tmp_path, monkeypatch):
+    """The in-process write fails on its second file: the run raises
+    before any file moves, snapshot and inputs are byte-identical, no
+    staging directory is left behind, and fsck is ok."""
+    import pyarrow.parquet as pq
+
+    from kompactor_spark.compaction import writer
+    from kompactor_spark.compaction.fsck import fsck_host
+
+    monkeypatch.setattr(writer, "LOCAL_WRITE_MAX_BYTES", 2**63)
+    root = str(tmp_path)
+    FX.multi_hour(root)
+    before = _lake_bytes(root)
+    calls = []
+    write_table = pq.write_table
+
+    def failing(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 2:
+            raise OSError("disk full")
+        return write_table(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    with pytest.raises(OSError, match="disk full"):
+        run_job(spark, root)
+    assert len(calls) == 2
+    assert _lake_bytes(root) == before
+    assert sorted(os.listdir(os.path.join(root, FX.HOST))) == ["dbs", "snapshots"]
+    assert fsck_host(root, FX.HOST).ok
+
+
 def test_run_writes_once(spark, tmp_path, monkeypatch):
     """Eight hour groups of one schema: the run makes one Spark write
     and at most 10 Spark jobs (a schema read per group, and the write),
     not a write per group."""
     from pyspark.sql.readwriter import DataFrameWriter
 
+    from kompactor_spark.compaction import writer
+
+    monkeypatch.setattr(writer, "LOCAL_WRITE_MAX_BYTES", -1)  # the Spark write
     root = str(tmp_path)
     b = FX.LayoutBuilder(root)
     wal = 1
@@ -584,6 +620,38 @@ def test_run_writes_once(spark, tmp_path, monkeypatch):
     assert report.compacted_groups == 8
     assert len(writes) == 1
     assert len(jobs) <= 10, sorted(jobs)
+
+
+def test_local_run_writes_in_process(spark, tmp_path, monkeypatch):
+    """``test_run_writes_once``'s eight groups on the in-process backend
+    and an empty schema cache: no Spark write, and at most 2 Spark jobs
+    (one schema inference and the collect)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kompactor_spark import session
+    from kompactor_spark.compaction import writer
+
+    from tests.test_read_parquet import counted_jobs
+
+    monkeypatch.setattr(writer, "LOCAL_WRITE_MAX_BYTES", 2**63)
+    monkeypatch.setattr(session, "_footer_schemas", {})
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    for hour in range(8):
+        hstart = (FX.BASE_NS // (3600 * FX.NS) + hour) * 3600 * FX.NS
+        for i in range(2):
+            wal = 2 * hour + i + 1
+            rows = FX.make_rows(20, hstart + i * 7 * FX.NS, 2000 * FX.NS, seed=wal)
+            b.add_parquet(0, 3, "2025-01-26", 14 + hour, f"{wal:010d}.parquet", rows)
+    b.write_snapshot()
+
+    writes = []
+    monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, *a, **kw: writes.append(a))
+    with counted_jobs(spark) as jobs:
+        [report] = CompactionJob(spark, root, [FX.HOST]).run()
+    assert report.compacted_groups == 8
+    assert writes == []
+    assert len(jobs) <= 2, jobs
 
 
 def test_groups_keep_their_own_columns(spark, tmp_path):

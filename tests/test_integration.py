@@ -290,37 +290,41 @@ def test_cli_ingest_line_protocol(spark, tmp_path):
     assert snap.row_count == 31
 
 
-def test_ingest_single_batch_spans_hours(spark, tmp_path):
+def test_ingest_single_batch_spans_hours(spark, tmp_path, monkeypatch):
     """One micro-batch spanning 3 hours → exactly one time-sorted WAL
-    file per hour in a SINGLE pass (dynamic partitionBy), with footer-
-    derived catalog stats matching the real row ranges."""
+    file per hour in a SINGLE pass (one lake write), with footer-
+    derived catalog stats matching the real row ranges, on both of the
+    lake writer's backends."""
     import pyarrow.parquet as pq
 
+    from kompactor_spark.compaction import writer
     from kompactor_spark.compaction.metadata import read_snapshot
     from kompactor_spark.streaming.ingest import IngestJob
 
-    root = str(tmp_path / "mhlake")
-    job = IngestJob(root, FX.HOST, db=0, table=0, time_col="ts")
     hour_start = (BASE // (3600 * NS)) * 3600 * NS
     # 90 rows, 2 min apart: 3 full hours starting at an aligned boundary
     df = spark.createDataFrame(_rows(0, hour_start, user=1, n=90, step_ns=120 * NS), EVENTS_SCHEMA)
-    job.write_batch(df, 0)
+    for backend, limit in {"local": 2**63, "spark": -1}.items():
+        monkeypatch.setattr(writer, "LOCAL_WRITE_MAX_BYTES", limit)
+        root = str(tmp_path / backend)
+        job = IngestJob(root, FX.HOST, db=0, table=0, time_col="ts")
+        job.write_batch(df, 0)
 
-    on_disk = sorted(disk_parquets(root))
-    assert len(on_disk) == 3, on_disk  # one file per hour, same wal number
-    assert all(os.path.basename(p) == "0000000001.parquet" for p in on_disk)
+        on_disk = sorted(disk_parquets(root))
+        assert len(on_disk) == 3, on_disk  # one file per hour, same wal number
+        assert all(os.path.basename(p) == "0000000001.parquet" for p in on_disk)
 
-    snap = read_snapshot(job.snapshot_path)
-    infos = sorted((f for _, _, f in snap.all_files()), key=lambda f: f.min_time)
-    assert [f.row_count for f in infos] == [30, 30, 30]
-    for i, f in enumerate(infos):
-        lo = hour_start + i * 3600 * NS
-        assert f.min_time == lo and f.max_time == lo + 58 * 60 * NS
-        # file content is time-sorted (the compactor's input invariant)
-        ts = pq.read_table(os.path.join(root, f.path), columns=["ts"]).column("ts").to_pylist()
-        assert ts == sorted(ts) and len(ts) == 30
+        snap = read_snapshot(job.snapshot_path)
+        infos = sorted((f for _, _, f in snap.all_files()), key=lambda f: f.min_time)
+        assert [f.row_count for f in infos] == [30, 30, 30]
+        for i, f in enumerate(infos):
+            lo = hour_start + i * 3600 * NS
+            assert f.min_time == lo and f.max_time == lo + 58 * 60 * NS
+            # file content is time-sorted (the compactor's input invariant)
+            ts = pq.read_table(os.path.join(root, f.path), columns=["ts"]).column("ts").to_pylist()
+            assert ts == sorted(ts) and len(ts) == 30
         # staging is cleaned up
-    assert not glob.glob(os.path.join(root, FX.HOST, "_ingest_staging_*"))
+        assert not glob.glob(os.path.join(root, FX.HOST, "_staging_*"))
 
 
 def test_cli_ingest_empty_source_reports_zero(spark, tmp_path, capsys):

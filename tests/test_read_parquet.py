@@ -44,16 +44,16 @@ def counted_jobs(spark):
     block launched."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    ungrouped = set(tracker.getJobIdsForGroup(None))
+    # jobs of an earlier block stay in the group while Spark retains them
+    earlier = set(tracker.getJobIdsForGroup("counted_jobs")) | set(tracker.getJobIdsForGroup(None))
     jobs: list[int] = []
     sc.setJobGroup("counted_jobs", "jobs of one operation")
     try:
         yield jobs
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-        found = set(tracker.getJobIdsForGroup("counted_jobs"))
-        found |= set(tracker.getJobIdsForGroup(None)) - ungrouped
-        jobs.extend(sorted(found))
+        found = set(tracker.getJobIdsForGroup("counted_jobs")) | set(tracker.getJobIdsForGroup(None))
+        jobs.extend(sorted(found - earlier))
 
 
 def outcome(read):
