@@ -12,7 +12,6 @@ only where built-ins cannot express the semantics.
 
 from kompactor_spark.compaction import CompactionConfig, CompactionJob
 from kompactor_spark.compaction.fsck import fsck_host
-from kompactor_spark.compaction.metadata import bootstrap_snapshot
 from kompactor_spark.compaction.retention import enforce_retention
 from kompactor_spark import functions as chsql  # ClickHouse-compat surface (R5)
 from kompactor_spark.session import ensure_conf, get_spark
@@ -23,7 +22,6 @@ __all__ = [
     "CompactionConfig",
     "CompactionJob",
     "TABLES",
-    "bootstrap_snapshot",
     "chsql",
     "enforce_retention",
     "ensure_conf",

@@ -165,9 +165,14 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+# modes that act on one host's table
+_SINGLE_HOST = ("export_zorder", "skew_report", "export_rollup", "ingest_source")
+
+
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
     args = build_parser().parse_args(argv)
     logging.basicConfig(level=logging.INFO if args.verbose else logging.WARNING, stream=sys.stderr)
+    hosts = [h for h in args.hosts.split(",") if h]
 
     own_session = spark is None
     if own_session:
@@ -179,9 +184,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             from kompactor_spark.compaction.fsck import fsck_host
 
             rc = 0
-            for host in args.hosts.split(","):
-                if not host:
-                    continue
+            for host in hosts:
                 rep = fsck_host(args.data_dir, host, time_col=args.time_col)
                 print(rep.summary())
                 for issue in rep.dangling + rep.orphans + rep.stat_mismatches:
@@ -194,7 +197,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
 
             for rep in enforce_retention(
                 args.data_dir,
-                [h for h in args.hosts.split(",") if h],
+                hosts,
                 cutoff_ns=args.retention_cutoff_ns,
                 dry_run=args.dry_run,
             ):
@@ -203,20 +206,18 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         if args.expire_snapshots:
             from kompactor_spark.compaction.readers import expire_snapshots
 
-            for host in args.hosts.split(","):
-                if not host:
-                    continue
+            for host in hosts:
                 rep = expire_snapshots(args.data_dir, host)
                 print(f"{host}: snapshots merged={rep['merged']} kept={rep['kept']}")
             return 0
+        mode = next((m for m in _SINGLE_HOST if getattr(args, m) is not None), None)
+        if mode is not None and len(hosts) != 1:
+            print(f"--{mode.replace('_', '-')} requires exactly one --hosts entry", file=sys.stderr)
+            return 2
         if args.export_zorder is not None:
             from kompactor_spark.compaction.readers import read_table
             from kompactor_spark.operators.zorder import zorder_layout
 
-            hosts = [h for h in args.hosts.split(",") if h]
-            if len(hosts) != 1:
-                print("--export-zorder requires exactly one --hosts entry", file=sys.stderr)
-                return 2
             df = read_table(spark, args.data_dir, hosts[0], args.db, args.table)
             cols = [c for c in args.zorder_cols.split(",") if c]
             zorder_layout(df, cols, num_files=args.zorder_files).write.mode(
@@ -232,10 +233,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             from kompactor_spark.compaction.readers import read_table
             from kompactor_spark.operators.skew import skew_report
 
-            hosts = [h for h in args.hosts.split(",") if h]
-            if len(hosts) != 1:
-                print("--skew-report requires exactly one --hosts entry", file=sys.stderr)
-                return 2
             df = read_table(spark, args.data_dir, hosts[0], args.db, args.table)
             key = args.skew_report
             rows = skew_report(df, key, top_n=20, dp=4).collect()
@@ -250,10 +247,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             from kompactor_spark.compaction.readers import read_table
             from kompactor_spark.operators.rollup import exact_hourly_rollup
 
-            hosts = [h for h in args.hosts.split(",") if h]
-            if len(hosts) != 1:
-                print("--export-rollup requires exactly one --hosts entry", file=sys.stderr)
-                return 2
             df = read_table(spark, args.data_dir, hosts[0], args.db, args.table)
             keys = tuple(c for c in args.rollup_key_cols.split(",") if c)
             exact_hourly_rollup(
@@ -272,10 +265,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             from kompactor_spark.compaction.metadata import load_manifest
             from kompactor_spark.streaming.ingest import IngestJob
 
-            hosts = [h for h in args.hosts.split(",") if h]
-            if len(hosts) != 1:
-                print("--ingest-source requires exactly one --hosts entry", file=sys.stderr)
-                return 2
             if args.ingest_format == "lineprotocol":
                 from kompactor_spark.sources import parse_line_protocol
 
@@ -320,16 +309,14 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         if args.bootstrap:
             from kompactor_spark.compaction.metadata import adopt
 
-            for host in args.hosts.split(","):
-                if not host:
-                    continue
+            for host in hosts:
                 files = adopt(args.data_dir, host, time_col=args.time_col)
                 print(f"{host}: bootstrapped catalog ({sum(f.row_count for f in files)} rows, "
                       f"{len(files)} files)")
         job = CompactionJob(
             spark,
             args.data_dir,
-            [h for h in args.hosts.split(",") if h],
+            hosts,
             config=CompactionConfig(time_window_hours=args.time_window_hours),
             dry_run=args.dry_run,
             time_col=args.time_col,

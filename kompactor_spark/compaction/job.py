@@ -46,7 +46,7 @@ from kompactor_spark.compaction.metadata import (
 from kompactor_spark.compaction.planner import (
     CompactionConfig,
     CompactionGroup,
-    GenerationGroup,
+    CompactionPlan,
     compute_split_cuts,
     plan_compaction,
     plan_generation,
@@ -85,7 +85,7 @@ class _Merge:
     """One planned group: its inputs on disk, and its outputs (one per
     split part, cut at ``cuts``)."""
 
-    group: CompactionGroup | GenerationGroup
+    group: CompactionGroup
     inputs: list[ParquetFileInfo]
     dropped: list[str]
     outputs: list[str]
@@ -141,7 +141,10 @@ class CompactionJob:
     # -- execution ---------------------------------------------------------
     def run(self, before_hour_ns: int | None = None) -> list[CompactionReport]:
         self.validate_directories()
-        return [self._run_host(h, before_hour_ns=before_hour_ns) for h in self.hosts]
+        return [
+            self._run_host(h, plan_compaction(h, load_manifest(self.data_dir, h), before_hour_ns=before_hour_ns))
+            for h in self.hosts
+        ]
 
     def run_generation(self, now_ns: int | None = None) -> list[CompactionReport]:
         """K2: merge each eligible day's files (hour-compacted + stray
@@ -149,20 +152,12 @@ class CompactionJob:
         cutoffs + splits (reference D1-D4/D8). ``now_ns`` gates on the
         24 h window; None = backfill every day."""
         self.validate_directories()
-        return [self._run_host(h, level="generation", now_ns=now_ns) for h in self.hosts]
+        return [
+            self._run_host(h, plan_generation(h, load_manifest(self.data_dir, h), self.config, now_ns=now_ns))
+            for h in self.hosts
+        ]
 
-    def _run_host(
-        self,
-        host: str,
-        level: str = "hour",
-        now_ns: int | None = None,
-        before_hour_ns: int | None = None,
-    ) -> CompactionReport:
-        manifest = load_manifest(self.data_dir, host)
-        if level == "generation":
-            plan = plan_generation(host, manifest, self.config, now_ns=now_ns)
-        else:
-            plan = plan_compaction(host, manifest, before_hour_ns=before_hour_ns)
+    def _run_host(self, host: str, plan: CompactionPlan) -> CompactionReport:
         merges = [m for m in map(self._prepare, plan.groups) if m is not None]
         results = [m.result() for m in merges] if self.dry_run else self._merge(host, merges)
         return CompactionReport(
@@ -177,7 +172,7 @@ class CompactionJob:
     def _abs(self, rel: str) -> str:
         return os.path.join(self.data_dir, rel)
 
-    def _prepare(self, group: CompactionGroup | GenerationGroup) -> _Merge | None:
+    def _prepare(self, group: CompactionGroup) -> _Merge | None:
         """Driver-side work for one group, before anything is written:
         skip missing inputs, then pick the outputs and refuse any that
         would overwrite an input."""
@@ -197,10 +192,7 @@ class CompactionJob:
         tmin_in = min(f.min_time for f in inputs)
         tmax_in = max(f.max_time for f in inputs)
         cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes, self.config)
-        if cuts:
-            outputs = [out_rel.replace(".parquet", f"_p{i}.parquet") for i in range(len(cuts) + 1)]
-        else:
-            outputs = [out_rel]
+        outputs = [group.output_relpath(i) for i in range(len(cuts) + 1)] if cuts else [out_rel]
         # Writing over an input and then deleting the inputs would lose
         # the output too (a replayed WAL file named after a c_ file's
         # first sequence) — refuse before anything is written.
@@ -254,7 +246,8 @@ class CompactionJob:
             dataclasses.replace(land(p, self.data_dir, rel, self.time_col), chunk_time=m.inputs[0].chunk_time)
             for rel, p in files.items()
         ]
-        commit(self.data_dir, host, removed=[f.path for f in m.inputs], added=added)
+        # a missing input's entry goes too, or it stays cataloged, dangling
+        commit(self.data_dir, host, removed=[f.path for f in m.inputs] + m.dropped, added=added)
         for f in m.inputs:
             os.unlink(self._abs(f.path))
             _remove_empty_dirs_upward(os.path.dirname(self._abs(f.path)), os.path.join(self.data_dir, host, "dbs"))

@@ -354,22 +354,6 @@ def lake_files(data_dir: str, host: str) -> list[tuple[int, int, str]]:
     return found
 
 
-def bootstrap_snapshot(
-    data_dir: str,
-    host: str,
-    time_col: str = "time",
-    writer_id: str | None = None,
-) -> SnapshotMetadata:
-    """A snapshot over every file ``lake_files`` finds, from the footers
-    alone (no data scan), ids from 1 in path order: the catalog of a
-    layout that has none."""
-    entries = [
-        (db, table, dataclasses.replace(ParquetFileInfo.from_file(data_dir, rel, time_col), id=i))
-        for i, (db, table, rel) in enumerate(lake_files(data_dir, host), start=1)
-    ]
-    return snapshot_from_entries(entries, writer_id=writer_id or host)
-
-
 def adopt(data_dir: str, host: str, time_col: str = "time") -> list[ParquetFileInfo]:
     """Catalog the files under ``<host>/dbs`` that ``load_manifest`` does
     not hold, with one ``commit`` per (db, table): the entry point for

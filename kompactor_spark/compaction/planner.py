@@ -1,6 +1,18 @@
 """Compaction planner — pure driver logic, no Spark (SURVEY §3.1 c-d,
 §4.2 "compaction planner").
 
+This module alone knows the lake's path grammar (the reference's
+``validateSourcePath``, D6, kompactor.ts:63-80, defined there but never
+called):
+
+    <host>/dbs/<db>/<table>/<YYYY-MM-DD>/<HH-MM>/<file>   hour level
+    <host>/dbs/<db>/<table>/<YYYY-MM-DD>/<file>           day level
+
+``parse_group_key`` reads these fixed positions and nothing else; a
+cataloged path of any other shape stays cataloged and readable but is
+never planned. ``GroupKey`` builds the same paths back, for the planner's
+outputs and for every writer of the layout.
+
 Grouping fixes reference bug B5: the reference keyed groups by
 ``date_hour`` only (kompactor.ts:197-198), co-merging files of
 different dbs/tables; we key by (host, db, table, date, hour).
@@ -12,18 +24,23 @@ Policy constants implement the reference's declared-but-dead intent
 
 from __future__ import annotations
 
+import calendar
+import dataclasses
+import datetime
 import os
 import re
 from collections import defaultdict
 from dataclasses import dataclass, field
 
 from kompactor_spark.compaction.metadata import Entry, ParquetFileInfo
+from kompactor_spark.timeutil import NS_PER_DAY, NS_PER_HOUR, NS_PER_SECOND
 
 # Filename grammar (kompactor.ts:86-96): raw WAL files and compacted
 # files at hour (h) or generation/day (g) level; split parts p<i>.
 RAW_FILE_RE = re.compile(r"(\d{10})\.parquet$")
 COMPACTED_FILE_RE = re.compile(r"c_(\d{10})_(\d{10})_[gh]\d+(?:_p\d+)?\.parquet$")
-DATE_HOUR_RE = re.compile(r"(\d{4}-\d{2}-\d{2})/(\d{2})")
+_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
+_HOUR_DIR_RE = re.compile(r"(\d{2})-\d{2}")
 
 
 @dataclass
@@ -55,9 +72,9 @@ def extract_wal_sequence(filename: str) -> int:
     """WAL sequence from raw or compacted names (kompactor.ts:86-96).
     Compacted files report their FIRST wal seq → re-compaction keeps
     idempotent ordering (C16). Adopted files with foreign names (e.g.
-    a streaming writer's part-*.parquet, cataloged by
-    bootstrap_snapshot) sort as seq 0; group ordering stays
-    deterministic via the (seq, path) sort key."""
+    a streaming writer's part-*.parquet, cataloged by ``metadata.adopt``)
+    sort as seq 0; group ordering stays deterministic via the
+    (seq, path) sort key."""
     m = RAW_FILE_RE.search(filename)
     if m:
         return int(m.group(1))
@@ -67,22 +84,53 @@ def extract_wal_sequence(filename: str) -> int:
     return 0
 
 
-def is_compacted_file(filename: str) -> bool:
-    """Level detection (reference D5 — dead and broken there, B2)."""
-    return COMPACTED_FILE_RE.search(os.path.basename(filename)) is not None
-
-
-@dataclass(frozen=True)
+@dataclass(frozen=True, order=True)
 class GroupKey:
     host: str
     db_seg: str  # 'db-0' path segment
     table_seg: str  # 'table-3' path segment
     date: str  # YYYY-MM-DD
-    hour: str  # HH
+    hour: str  # HH; "" at day level
+
+    @classmethod
+    def for_hour(cls, host: str, db: int, table: int, hour_ns: int) -> GroupKey:
+        """The key of (db, table)'s UTC hour that starts at ``hour_ns``."""
+        dt = datetime.datetime.fromtimestamp(hour_ns // NS_PER_SECOND, tz=datetime.timezone.utc)
+        return cls(host, f"db-{db}", f"table-{table}", f"{dt:%Y-%m-%d}", f"{dt.hour:02d}")
+
+    def start_ns(self) -> int:
+        """UTC start of the key's hour (its day at day level) as an exact
+        ns epoch (int math)."""
+        d = datetime.date.fromisoformat(self.date)
+        return calendar.timegm(d.timetuple()) * NS_PER_SECOND + int(self.hour or 0) * NS_PER_HOUR
+
+    def dir(self) -> str:
+        """``<host>/dbs/<db>/<table>/<date>``, then ``<HH-00>`` at hour level."""
+        d = os.path.join(self.host, "dbs", self.db_seg, self.table_seg, self.date)
+        return os.path.join(d, f"{self.hour}-00") if self.hour else d
+
+
+def parse_group_key(host: str, file_path: str) -> GroupKey | None:
+    """A cataloged path's key: 7 segments give an hour-level key, 6 a
+    day-level one (``hour=""``); any other path gives None."""
+    parts = file_path.split("/")
+    if len(parts) not in (6, 7) or parts[0] != host or parts[1] != "dbs" or not _DATE_RE.fullmatch(parts[4]):
+        return None
+    hour = ""
+    if len(parts) == 7:
+        m = _HOUR_DIR_RE.fullmatch(parts[5])
+        if m is None:
+            return None
+        hour = m.group(1)
+    return GroupKey(host=host, db_seg=parts[2], table_seg=parts[3], date=parts[4], hour=hour)
 
 
 @dataclass
 class CompactionGroup:
+    """The files one merge folds into one output: an hour's (K1) or, at
+    generation level (K2, reference D4/D8 — the ``g`` filename level that
+    was designed but never produced, kompactor.ts:41,92), a day's."""
+
     key: GroupKey
     files: list[ParquetFileInfo] = field(default_factory=list)
 
@@ -93,16 +141,19 @@ class CompactionGroup:
     def total_size_bytes(self) -> int:
         return sum(f.size_bytes for f in self.files)
 
-    def output_name(self) -> str:
+    def output_relpath(self, part: int | None = None) -> str:
+        """``c_<first>_<last>_h<H>`` inside the hour's dir
+        (kompactor.ts:224-237), or ``c_<first>_<last>_g<days since
+        epoch>`` directly under ``<date>/``, the generation window index
+        mirroring h<hour> (filename grammar kompactor.ts:92); split part
+        ``part`` adds ``_p<part>``."""
         s = self.sorted_files()
         first = extract_wal_sequence(os.path.basename(s[0].path))
         last = extract_wal_sequence(os.path.basename(s[-1].path))
-        return f"c_{first:010d}_{last:010d}_h{int(self.key.hour)}.parquet"
-
-    def output_relpath(self) -> str:
-        """<host>/dbs/<db>/<table>/<date>/<HH-00>/<name> (kompactor.ts:224-237)."""
         k = self.key
-        return os.path.join(k.host, "dbs", k.db_seg, k.table_seg, k.date, f"{k.hour}-00", self.output_name())
+        level = f"h{int(k.hour)}" if k.hour else f"g{k.start_ns() // NS_PER_DAY}"
+        suffix = "" if part is None else f"_p{part}"
+        return os.path.join(k.dir(), f"c_{first:010d}_{last:010d}_{level}{suffix}.parquet")
 
 
 @dataclass
@@ -111,32 +162,16 @@ class CompactionPlan:
     skipped_singletons: int = 0
 
 
-def parse_group_key(host: str, file_path: str) -> GroupKey | None:
-    """Path → (host, db, table, date, hour). Expects the canonical
-    7-component layout (kompactor.ts:63-80); returns None for paths
-    without a date/hour segment."""
-    m = DATE_HOUR_RE.search(file_path)
-    if not m:
-        return None
-    parts = file_path.split("/")
-    # <host>/dbs/<db-N>/<table-N>/<date>/<HH-MM>/<file>
-    if len(parts) >= 7 and parts[1] == "dbs":
-        db_seg, table_seg = parts[2], parts[3]
-    elif len(parts) >= 6:  # tolerate host-relative paths
-        db_seg, table_seg = parts[-5], parts[-4]
-    else:
-        return None
-    return GroupKey(host=host, db_seg=db_seg, table_seg=table_seg, date=m.group(1), hour=m.group(2))
-
-
-def hour_start_ns(key: GroupKey) -> int:
-    """UTC start of a group's hour as an exact ns epoch (int math)."""
-    import calendar
-    import datetime
-
-    d = datetime.date.fromisoformat(key.date)
-    epoch_s = calendar.timegm(d.timetuple()) + int(key.hour) * 3600
-    return epoch_s * 1_000_000_000
+def _group(host: str, manifest: list[Entry], by_day: bool) -> dict[GroupKey, list[ParquetFileInfo]]:
+    """The manifest's files by key, in key order: hour-level files by
+    hour, or every file by its day when ``by_day``. A path that does not
+    parse, or a day-level file when grouping by hour, is left out."""
+    by_key: dict[GroupKey, list[ParquetFileInfo]] = defaultdict(list)
+    for _db_id, _table_id, f in manifest:
+        key = parse_group_key(host, f.path)
+        if key is not None and (by_day or key.hour):
+            by_key[dataclasses.replace(key, hour="") if by_day else key].append(f)
+    return {k: by_key[k] for k in sorted(by_key)}
 
 
 def plan_compaction(
@@ -144,7 +179,7 @@ def plan_compaction(
     manifest: list[Entry],
     before_hour_ns: int | None = None,
 ) -> CompactionPlan:
-    """Regex-extract → group (B5 fixed) → drop singletons
+    """Hour keys → group (B5 fixed) → drop singletons
     (kompactor.ts:213), over the path-deduplicated ``load_manifest``.
 
     ``before_hour_ns`` scopes the plan to CLOSED hours — groups whose
@@ -152,27 +187,15 @@ def plan_compaction(
     compaction gate: an ingest stream compacts only hours the event
     clock has moved past, never the hour still receiving writes.
     """
-    by_key: dict[GroupKey, list[ParquetFileInfo]] = defaultdict(list)
-    for _db_id, _table_id, f in manifest:
-        key = parse_group_key(host, f.path)
-        if key is not None:
-            by_key[key].append(f)
-
     groups, skipped = [], 0
-    for key in sorted(by_key, key=lambda k: (k.db_seg, k.table_seg, k.date, k.hour)):
-        if before_hour_ns is not None and hour_start_ns(key) + 3_600_000_000_000 > before_hour_ns:
+    for key, files in _group(host, manifest, by_day=False).items():
+        if before_hour_ns is not None and key.start_ns() + NS_PER_HOUR > before_hour_ns:
             continue  # hour still open — not counted as a skipped singleton
-        files = by_key[key]
         if len(files) <= 1:
             skipped += 1
             continue
         groups.append(CompactionGroup(key=key, files=files))
     return CompactionPlan(groups=groups, skipped_singletons=skipped)
-
-
-def split_cut_times(min_time: int, max_time: int, split_percentage: int) -> int:
-    """70/30 split point in ns (exact int math — B3 discipline)."""
-    return min_time + (max_time - min_time) * split_percentage // 100
 
 
 def compute_split_cuts(
@@ -183,51 +206,19 @@ def compute_split_cuts(
     cutoff, cut the remaining time range at split_percentage — the
     leading part targets ~max_desired size, the 30% tail is re-examined.
     Byte density is assumed uniform over time (the only stat available
-    without scanning). Returns [] when no split is needed.
+    without scanning). Returns [] when no split is needed. Cut points
+    use exact int math (B3 discipline).
     """
     cuts: list[int] = []
     lo, remaining = min_time, total_bytes
     while remaining > config.large_cutoff_bytes and lo < max_time:
-        cut = split_cut_times(lo, max_time, config.split_percentage)
+        cut = lo + (max_time - lo) * config.split_percentage // 100
         if cut <= lo or cut >= max_time:
             break
         cuts.append(cut)
         remaining -= remaining * config.split_percentage // 100
         lo = cut
     return cuts
-
-
-@dataclass
-class GenerationGroup:
-    """K2: a day's files (raw + hour-compacted) to merge to generation
-    level (reference D4/D8 — the ``g`` filename level that was designed
-    but never produced, kompactor.ts:41,92)."""
-
-    key: GroupKey  # hour field is "" at day level
-    files: list[ParquetFileInfo] = field(default_factory=list)
-
-    def sorted_files(self) -> list[ParquetFileInfo]:
-        return sorted(self.files, key=lambda f: (extract_wal_sequence(os.path.basename(f.path)), f.path))
-
-    @property
-    def total_size_bytes(self) -> int:
-        return sum(f.size_bytes for f in self.files)
-
-    def output_name(self) -> str:
-        s = self.sorted_files()
-        first = extract_wal_sequence(os.path.basename(s[0].path))
-        last = extract_wal_sequence(os.path.basename(s[-1].path))
-        # g<days-since-epoch>: the generation window index, mirroring
-        # h<hour> at hour level (filename grammar kompactor.ts:92).
-        import datetime as _dt
-
-        day = (_dt.date.fromisoformat(self.key.date) - _dt.date(1970, 1, 1)).days
-        return f"c_{first:010d}_{last:010d}_g{day}.parquet"
-
-    def output_relpath(self) -> str:
-        """Day-level outputs live directly under <date>/."""
-        k = self.key
-        return os.path.join(k.host, "dbs", k.db_seg, k.table_seg, k.date, self.output_name())
 
 
 def is_generation_file(filename: str) -> bool:
@@ -247,29 +238,12 @@ def plan_generation(
     pass now_ns=None to compact every day (manual/backfill mode).
     Files already at generation level and >= large cutoff are left
     alone (D2: no value re-writing a full-size file)."""
-    by_key: dict[GroupKey, list[ParquetFileInfo]] = defaultdict(list)
-    for _db_id, _table_id, f in manifest:
-        hk = parse_group_key(host, f.path)
-        if hk is not None:
-            key = GroupKey(host=hk.host, db_seg=hk.db_seg, table_seg=hk.table_seg, date=hk.date, hour="")
-        else:
-            # day-level paths have no HH segment; parse date directly
-            m = re.search(r"/(\d{4}-\d{2}-\d{2})/", f.path)
-            if not m:
-                continue
-            parts = f.path.split("/")
-            if len(parts) < 4:
-                continue
-            i = parts.index(m.group(1))
-            key = GroupKey(host=host, db_seg=parts[i - 2], table_seg=parts[i - 1], date=m.group(1), hour="")
-        by_key[key].append(f)
-
-    window_ns = config.time_window_hours * 3_600_000_000_000
+    window_ns = config.time_window_hours * NS_PER_HOUR
     groups, skipped = [], 0
-    for key in sorted(by_key, key=lambda k: (k.db_seg, k.table_seg, k.date)):
+    for key, day_files in _group(host, manifest, by_day=True).items():
         files = [
             f
-            for f in by_key[key]
+            for f in day_files
             if not (is_generation_file(f.path) and f.size_bytes >= config.large_cutoff_bytes)
         ]
         if now_ns is not None and files and max(f.max_time for f in files) > now_ns - window_ns:
@@ -278,5 +252,5 @@ def plan_generation(
         if len(files) <= 1:
             skipped += 1
             continue
-        groups.append(GenerationGroup(key=key, files=files))
+        groups.append(CompactionGroup(key=key, files=files))
     return CompactionPlan(groups=groups, skipped_singletons=skipped)

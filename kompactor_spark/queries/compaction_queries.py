@@ -10,13 +10,13 @@ over the same source rows.
 
 from __future__ import annotations
 
-import datetime
 import os
 
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction import CompactionJob
 from kompactor_spark.compaction.metadata import commit
+from kompactor_spark.compaction.planner import GroupKey
 from kompactor_spark.compaction.writer import land, staged_write
 from kompactor_spark.queries import register
 from kompactor_spark.sources import clear_scratch
@@ -36,8 +36,7 @@ def _build_layout(spark, sf_dir: str, root: str) -> None:
     min_hour = ev.agg(F.min((F.col("time") - F.col("time") % hour_ns)).alias("h")).first()["h"]
     rows = ev.where((F.col("time") >= min_hour) & (F.col("time") < min_hour + hour_ns))
 
-    dt = datetime.datetime.fromtimestamp(min_hour // 1_000_000_000, tz=datetime.timezone.utc)
-    hour_dir = f"{_HOST}/dbs/db-0/table-1/{dt:%Y-%m-%d}/{dt.hour:02d}-00"
+    hour_dir = GroupKey.for_hour(_HOST, 0, 1, min_hour).dir()
     with staged_write(rows.withColumn("_wal", F.col("event_id") % 3), "_wal", root, _HOST) as staged:
         infos = [land(path, root, f"{hour_dir}/{int(i) + 1:010d}.parquet") for i, path in staged.items()]
     commit(root, _HOST, added=infos, db=0, table=1)

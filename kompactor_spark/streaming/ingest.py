@@ -19,16 +19,15 @@ file (os.replace) and the commit replaces the entry in place.
 
 from __future__ import annotations
 
-import datetime
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, commit
+from kompactor_spark.compaction.planner import GroupKey
 from kompactor_spark.compaction.writer import land, staged_write
-
-NS_PER_HOUR = 3_600_000_000_000
+from kompactor_spark.timeutil import NS_PER_HOUR
 
 
 class IngestJob:
@@ -113,16 +112,8 @@ class IngestJob:
                 f"ingest batch has rows with a null {self.time_col!r} (staged hour key "
                 f"{hour_key!r}); nothing was moved into the lake"
             ) from None
-        dt = datetime.datetime.fromtimestamp(hour_ns // 1_000_000_000, tz=datetime.timezone.utc)
-        return os.path.join(
-            self.host,
-            "dbs",
-            f"db-{self.db}",
-            f"table-{self.table}",
-            dt.strftime("%Y-%m-%d"),
-            f"{dt.hour:02d}-00",
-            f"{wal:010d}.parquet",
-        )
+        key = GroupKey.for_hour(self.host, self.db, self.table, hour_ns)
+        return os.path.join(key.dir(), f"{wal:010d}.parquet")
 
     def _compact_closed_hours(self, spark) -> None:
         """Continuous compaction: merge every closed hour with >1 file.

@@ -10,7 +10,9 @@ result cells — so running this locally catches those before the driver
 does), then strict cell-by-cell comparison.
 
 Usage:  python scripts/driver_sim.py [sf_dir] [only_prefix ...]
-Writes scripts/driver_sim_out.json and prints one line per query.
+Writes scripts/driver_sim_out.json (status and notes per query, no
+timings, so a rerun with the same outcomes leaves it unchanged) and
+prints one line per query with its seconds.
 """
 
 from __future__ import annotations
@@ -109,7 +111,7 @@ def main():
         if prefixes and not any(name.startswith(p) for p in prefixes):
             continue
         t0 = time.time()
-        rec = {"status": None, "notes": [], "sec": None}
+        rec = {"status": None, "notes": []}
         try:
             spdf = fn(spark, sf_dir).toPandas()
             if name in oracles:
@@ -131,9 +133,8 @@ def main():
         except Exception:
             rec["status"] = "ERR"
             rec["notes"] = traceback.format_exc().splitlines()[-3:]
-        rec["sec"] = round(time.time() - t0, 2)
         out[name] = rec
-        print(f"{rec['status']:>14}  {rec['sec']:7.2f}s  {name}" + (f"  {rec['notes'][:1]}" if rec["status"] not in ("pass", "pass_rows_only") else ""), flush=True)
+        print(f"{rec['status']:>14}  {time.time() - t0:7.2f}s  {name}" + (f"  {rec['notes'][:1]}" if rec["status"] not in ("pass", "pass_rows_only") else ""), flush=True)
 
     out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "driver_sim_out.json")
     if prefixes and os.path.exists(out_path):
@@ -142,7 +143,7 @@ def main():
         with open(out_path) as fh:
             merged = json.load(fh)
         merged.update(out)
-        out = merged
+        out = {name: {k: v for k, v in rec.items() if k != "sec"} for name, rec in merged.items()}
     with open(out_path, "w") as fh:
         json.dump(out, fh, indent=1)
     n_bad = sum(1 for r in out.values() if r["status"] not in ("pass", "pass_rows_only"))

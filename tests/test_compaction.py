@@ -176,12 +176,16 @@ def test_overlapping_snapshots_consistent(spark, tmp_path):
 
 
 def test_missing_input_skipped(spark, tmp_path):
+    from kompactor_spark.compaction.fsck import fsck_host
+
     root = str(tmp_path / "mi")
     FX.missing_input(root)
     report = run_job(spark, root)
     assert report.compacted_groups == 1
     assert report.results[0].dropped_missing, "ghost file should be reported"
     assert report.results[0].row_count == 60
+    assert_invariants(root)  # the ghost's entry went with the merge
+    assert fsck_host(root, FX.HOST).ok
 
 
 def test_ns_precision_exact(spark, tmp_path):
@@ -319,6 +323,71 @@ def test_compute_split_cuts_unit():
     assert len(big) >= 2 and big == sorted(big)
 
 
+_H = FX.HOST + "/dbs/db-0/table-3/2025-01-26"
+
+
+@pytest.mark.parametrize(
+    "path, hour",
+    [
+        (f"{_H}/14-00/0000000001.parquet", "14"),  # hour level, 7 segments
+        (f"{_H}/c_0000000001_0000000002_g20114.parquet", ""),  # day level, 6 segments
+        ("dbs/db-0/table-3/2025-01-26/14-00/0000000001.parquet", None),  # host-relative
+        (f"{FX.HOST}/dbs/db-0/2025-01-26/0000000001.parquet", None),  # 5 segments
+        (f"{FX.HOST}/dbs/db-0/table-3/latest/14-00/0000000001.parquet", None),  # not a date
+        (f"{_H}/14/0000000001.parquet", None),  # hour dir not HH-MM
+        (f"{_H}/14-00/extra/0000000001.parquet", None),  # 8 segments
+    ],
+)
+def test_parse_group_key_grammar(path, hour):
+    """The planner reads exactly the reference's path shape (D6,
+    kompactor.ts:63-80) at hour or day level; anything else is not
+    planned."""
+    from kompactor_spark.compaction.planner import GroupKey, parse_group_key
+
+    want = None if hour is None else GroupKey(FX.HOST, "db-0", "table-3", "2025-01-26", hour)
+    assert parse_group_key(FX.HOST, path) == want
+
+
+def test_group_key_builds_the_paths_it_parses():
+    from kompactor_spark.compaction.planner import GroupKey, parse_group_key
+
+    h14 = FX.BASE_NS - FX.BASE_NS % (3600 * FX.NS)
+    key = GroupKey.for_hour(FX.HOST, 0, 3, h14)
+    assert key.dir() == f"{_H}/14-00"
+    assert key.start_ns() == h14
+    assert parse_group_key(FX.HOST, f"{key.dir()}/0000000001.parquet") == key
+
+
+def test_day_level_files_merge_at_generation_only(spark, tmp_path):
+    """Adopted files directly under <date>/ are day-level: the hour pass
+    leaves them alone (no output under dbs/dbs/), and the generation pass
+    merges them into one c_…_g<day> file beside them."""
+    from kompactor_spark.compaction.fsck import fsck_host
+    from kompactor_spark.compaction.metadata import adopt
+
+    root = str(tmp_path)
+    day_dir = os.path.join(root, FX.HOST, "dbs", "db-0", "table-0", "2025-01-26")
+    os.makedirs(day_dir)
+    os.makedirs(os.path.join(root, FX.HOST, "snapshots"))
+    for wal in (1, 2):
+        rows = FX.make_rows(20, FX.BASE_NS + wal * 100 * FX.NS, 2000 * FX.NS, seed=wal)
+        pq.write_table(rows, os.path.join(day_dir, f"{wal:010d}.parquet"))
+    assert len(adopt(root, FX.HOST)) == 2
+    before = rows_by_table(root)
+
+    hour = run_job(spark, root)
+    assert hour.planned_groups == 0
+    assert not os.path.exists(os.path.join(root, FX.HOST, "dbs", "dbs"))
+
+    gen = CompactionJob(spark, root, [FX.HOST]).run_generation()[0]
+    assert [r.output_paths for r in gen.results] == [
+        [f"{FX.HOST}/dbs/db-0/table-0/2025-01-26/c_0000000001_0000000002_g20114.parquet"]
+    ]
+    assert rows_by_table(root) == before
+    assert_invariants(root)
+    assert fsck_host(root, FX.HOST).ok
+
+
 def test_parallel_group_execution(spark, tmp_path):
     """Several groups compacted in one run: identical results +
     invariants; fresh ids unique across the groups' commits."""
@@ -447,10 +516,10 @@ def test_expire_snapshots_folds_history(spark, tmp_path):
 
 def test_stats_less_file_cataloged_and_checked(tmp_path):
     """A file written without column statistics still gets its true
-    time range: bootstrap_snapshot reads the time column instead of
-    cataloging [0, 0], and fsck_host checks the range against it."""
+    time range: adopt reads the time column instead of cataloging
+    [0, 0], and fsck_host checks the range against it."""
     from kompactor_spark.compaction.fsck import fsck_host
-    from kompactor_spark.compaction.metadata import bootstrap_snapshot, write_snapshot_atomic
+    from kompactor_spark.compaction.metadata import adopt, write_snapshot_atomic
 
     root = str(tmp_path)
     rel = f"{FX.HOST}/dbs/db-0/table-3/2025-01-26/10-00/0000000001.parquet"
@@ -460,14 +529,14 @@ def test_stats_less_file_cataloged_and_checked(tmp_path):
     pq.write_table(rows, os.path.join(root, rel), write_statistics=False)
     times = rows.column("time").to_pylist()
 
-    snap = bootstrap_snapshot(root, FX.HOST)
-    [(_, _, info)] = snap.all_files()
+    [info] = adopt(root, FX.HOST)
     assert (info.min_time, info.max_time, info.row_count) == (min(times), max(times), 2)
-    snap_path = os.path.join(root, FX.HOST, "snapshots", "0001.info.json")
-    write_snapshot_atomic(snap, snap_path)
     assert fsck_host(root, FX.HOST).ok
 
-    info.min_time -= 1  # hand-corrupt the catalog
+    snap_path = os.path.join(root, FX.HOST, "snapshots", "0001.info.json")
+    snap = read_snapshot(snap_path)
+    [(_, _, entry)] = snap.all_files()
+    entry.min_time -= 1  # hand-corrupt the catalog
     write_snapshot_atomic(snap, snap_path)
     report = fsck_host(root, FX.HOST)
     assert [m.split(":")[0] for m in report.stat_mismatches] == [rel]

@@ -1,5 +1,5 @@
 """End-to-end product flow: streaming ingest → bare Parquet layout →
-bootstrap_snapshot (catalog adoption, footer-stats only) → hour
+metadata.adopt (catalog adoption, footer-stats only) → hour
 compaction → generation compaction, invariants at every step.
 This is the full lifecycle a reference user runs: an external writer
 lands files, the engine takes ownership and compacts."""
@@ -13,7 +13,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction import CompactionJob
-from kompactor_spark.compaction.metadata import bootstrap_snapshot, write_snapshot_atomic
+from kompactor_spark.compaction.metadata import adopt
 
 from tests import fixtures_compaction as FX
 from tests.test_compaction import assert_invariants, disk_parquets
@@ -63,14 +63,12 @@ def test_ingest_bootstrap_compact(spark, tmp_path):
         moved += 1
     assert moved >= 3  # micro-batches × hours
 
-    # 3. adopt: bootstrap the catalog from footers alone
-    snap = bootstrap_snapshot(root, host)
-    assert snap.row_count == 110
-    write_snapshot_atomic(snap, os.path.join(root, host, "snapshots", "0000.info.json"))
+    # 3. adopt: catalog the layout from footers alone
+    total_before = sum(f.row_count for f in adopt(root, host))
+    assert total_before == 110
     assert_invariants(root)  # catalog ↔ disk agree from the start
 
     # 4. hour compaction over adopted files
-    total_before = snap.row_count
     job = CompactionJob(spark, root, [host], time_col="time")
     rep = job.run()[0]
     assert rep.compacted_groups >= 1
