@@ -22,6 +22,7 @@ import sys
 from pyspark.sql import SparkSession
 
 from kompactor_spark.compaction import CompactionConfig, CompactionJob
+from kompactor_spark.compaction.metadata import TIME_COL
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -45,7 +46,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="generation-pass clock (ns epoch); days newer than 24h before this are skipped. "
         "Omit to compact every day (backfill).",
     )
-    p.add_argument("--time-col", default="time", help="time column name (default: time)")
     p.add_argument(
         "--time-window-hours",
         type=int,
@@ -78,7 +78,8 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help="stream-ingest this directory (availableNow file source) into the "
         "<host>/dbs WAL layout + live catalog instead of compacting; requires "
-        "exactly one --hosts entry",
+        "exactly one --hosts entry; rows carry their event time as int64 ns in a "
+        "column named 'time'",
     )
     p.add_argument(
         "--ingest-format",
@@ -174,42 +175,44 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     logging.basicConfig(level=logging.INFO if args.verbose else logging.WARNING, stream=sys.stderr)
     hosts = [h for h in args.hosts.split(",") if h]
 
+    # the catalog-only modes read and write metadata alone: no session
+    if args.fsck:
+        from kompactor_spark.compaction.fsck import fsck_host
+
+        rc = 0
+        for host in hosts:
+            rep = fsck_host(args.data_dir, host)
+            print(rep.summary())
+            for issue in rep.dangling + rep.orphans + rep.stat_mismatches:
+                print(f"  {issue}")
+            if not rep.ok:
+                rc = 2
+        return rc
+    if args.retention_cutoff_ns is not None:
+        from kompactor_spark.compaction.retention import enforce_retention
+
+        for rep in enforce_retention(
+            args.data_dir,
+            hosts,
+            cutoff_ns=args.retention_cutoff_ns,
+            dry_run=args.dry_run,
+        ):
+            print(rep.summary())
+        return 0
+    if args.expire_snapshots:
+        from kompactor_spark.compaction.readers import expire_snapshots
+
+        for host in hosts:
+            rep = expire_snapshots(args.data_dir, host)
+            print(f"{host}: snapshots merged={rep['merged']} kept={rep['kept']}")
+        return 0
+
     own_session = spark is None
     if own_session:
         from kompactor_spark.session import get_spark
 
         spark = get_spark("kompactor-spark-cli")
     try:
-        if args.fsck:
-            from kompactor_spark.compaction.fsck import fsck_host
-
-            rc = 0
-            for host in hosts:
-                rep = fsck_host(args.data_dir, host, time_col=args.time_col)
-                print(rep.summary())
-                for issue in rep.dangling + rep.orphans + rep.stat_mismatches:
-                    print(f"  {issue}")
-                if not rep.ok:
-                    rc = 2
-            return rc
-        if args.retention_cutoff_ns is not None:
-            from kompactor_spark.compaction.retention import enforce_retention
-
-            for rep in enforce_retention(
-                args.data_dir,
-                hosts,
-                cutoff_ns=args.retention_cutoff_ns,
-                dry_run=args.dry_run,
-            ):
-                print(rep.summary())
-            return 0
-        if args.expire_snapshots:
-            from kompactor_spark.compaction.readers import expire_snapshots
-
-            for host in hosts:
-                rep = expire_snapshots(args.data_dir, host)
-                print(f"{host}: snapshots merged={rep['merged']} kept={rep['kept']}")
-            return 0
         mode = next((m for m in _SINGLE_HOST if getattr(args, m) is not None), None)
         if mode is not None and len(hosts) != 1:
             print(f"--{mode.replace('_', '-')} requires exactly one --hosts entry", file=sys.stderr)
@@ -250,7 +253,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             df = read_table(spark, args.data_dir, hosts[0], args.db, args.table)
             keys = tuple(c for c in args.rollup_key_cols.split(",") if c)
             exact_hourly_rollup(
-                df, time_col="time", value_col=args.rollup_value_col, key_cols=keys
+                df, time_col=TIME_COL, value_col=args.rollup_value_col, key_cols=keys
             ).write.mode("overwrite").parquet(args.export_rollup)
             n = spark.read.parquet(args.export_rollup).count()
             print(
@@ -274,11 +277,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 parsed = parse_line_protocol(reader.text(args.ingest_source))
                 # timestamped, well-formed lines only; the time column is
                 # ns-long as the WAL layout requires
-                stream = (
-                    parsed.where("malformed IS NULL AND time IS NOT NULL")
-                    .drop("malformed")
-                    .withColumnRenamed("time", args.time_col)
-                )
+                stream = parsed.where("malformed IS NULL AND time IS NOT NULL").drop("malformed")
             else:
                 # Pin the schema from the files already present — a streaming
                 # file source must not re-infer per batch.
@@ -292,7 +291,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 hosts[0],
                 db=args.db,
                 table=args.table,
-                time_col=args.time_col,
                 auto_compact=args.auto_compact,
                 grace_ns=args.grace_ns,
             )
@@ -310,7 +308,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             from kompactor_spark.compaction.metadata import adopt
 
             for host in hosts:
-                files = adopt(args.data_dir, host, time_col=args.time_col)
+                files = adopt(args.data_dir, host)
                 print(f"{host}: bootstrapped catalog ({sum(f.row_count for f in files)} rows, "
                       f"{len(files)} files)")
         job = CompactionJob(
@@ -319,7 +317,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             hosts,
             config=CompactionConfig(time_window_hours=args.time_window_hours),
             dry_run=args.dry_run,
-            time_col=args.time_col,
         )
         reports = job.run_generation(now_ns=args.now_ns) if args.generation else job.run()
         for rep in reports:

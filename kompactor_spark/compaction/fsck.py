@@ -35,7 +35,7 @@ class FsckReport:
         )
 
 
-def fsck_host(data_dir: str, host: str, time_col: str = "time") -> FsckReport:
+def fsck_host(data_dir: str, host: str) -> FsckReport:
     report = FsckReport(host=host)
     cataloged = {f.path: f for _db, _tbl, f in load_manifest(data_dir, host)}
 
@@ -51,7 +51,7 @@ def fsck_host(data_dir: str, host: str, time_col: str = "time") -> FsckReport:
             continue
         report.files_checked += 1
         abs_path = os.path.join(data_dir, rel)
-        rows, tmin, tmax = footer_time_stats(abs_path, time_col)
+        rows, tmin, tmax = footer_time_stats(abs_path)
         problems = []
         if rows != info.row_count:
             problems.append(f"rows {rows} != {info.row_count}")

@@ -20,7 +20,8 @@ any file moves. Then, group by group, the outputs move into place,
 ``metadata.commit`` swaps inputs for outputs, and the inputs are deleted
 and empty dirs pruned (C14).
 
-Dry-run is real (B1 fixed): plan + report, zero writes.
+Dry-run is real (B1 fixed): the real run's plan, outputs and refusals,
+and zero writes.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction.metadata import (
+    TIME_COL,
     ParquetFileInfo,
     _remove_empty_dirs_upward,
     commit,
@@ -118,14 +120,12 @@ class CompactionJob:
         hosts: list[str],
         config: CompactionConfig | None = None,
         dry_run: bool = False,
-        time_col: str = "time",
     ):
         self.spark = spark
         self.data_dir = data_dir
         self.hosts = hosts
         self.config = config or CompactionConfig()
         self.dry_run = dry_run
-        self.time_col = time_col
 
     # -- discovery ---------------------------------------------------------
     def validate_directories(self) -> None:
@@ -173,9 +173,9 @@ class CompactionJob:
         return os.path.join(self.data_dir, rel)
 
     def _prepare(self, group: CompactionGroup) -> _Merge | None:
-        """Driver-side work for one group, before anything is written:
-        skip missing inputs, then pick the outputs and refuse any that
-        would overwrite an input."""
+        """Driver-side work for one group, before anything is written and
+        the same in a dry run: skip missing inputs, then pick the outputs
+        and refuse any that would overwrite an input."""
         files = group.sorted_files()
         inputs = [f for f in files if os.path.exists(self._abs(f.path))]
         dropped = [f.path for f in files if not os.path.exists(self._abs(f.path))]
@@ -184,15 +184,10 @@ class CompactionJob:
         if len(inputs) <= 1:
             return None
 
-        out_rel = group.output_relpath()
-        if self.dry_run:
-            log.info("[dry-run] would merge %d files -> %s", len(inputs), out_rel)
-            return _Merge(group, inputs, dropped, [out_rel], [])
-
         tmin_in = min(f.min_time for f in inputs)
         tmax_in = max(f.max_time for f in inputs)
         cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes, self.config)
-        outputs = [group.output_relpath(i) for i in range(len(cuts) + 1)] if cuts else [out_rel]
+        outputs = [group.output_relpath(i) for i in range(len(cuts) + 1)] if cuts else [group.output_relpath()]
         # Writing over an input and then deleting the inputs would lose
         # the output too (a replayed WAL file named after a c_ file's
         # first sequence) — refuse before anything is written.
@@ -205,7 +200,7 @@ class CompactionJob:
         """Read every group, write all outputs in one staged write per
         distinct read schema, check row conservation, then move, commit
         and delete group by group in plan order."""
-        t = F.col(self.time_col)
+        t = F.col(TIME_COL)
         first = [0, *itertools.accumulate(len(m.outputs) for m in merges)]  # index of part 0
         by_schema: dict = {}
         for m, base in zip(merges, first):
@@ -218,11 +213,7 @@ class CompactionJob:
             staged: dict[str, str] = {}
             for dfs in by_schema.values():
                 union = functools.reduce(DataFrame.union, dfs)
-                staged.update(
-                    stack.enter_context(
-                        staged_write(union, _OUTPUT, self.data_dir, host, self.time_col, self.config)
-                    )
-                )
+                staged.update(stack.enter_context(staged_write(union, _OUTPUT, self.data_dir, host)))
             # a split part no row falls into stages no file
             placed = [
                 {rel: staged[str(i)] for i, rel in enumerate(m.outputs, start=base) if str(i) in staged}
@@ -230,7 +221,7 @@ class CompactionJob:
             ]
             for m, files in zip(merges, placed):
                 rows_in = sum(f.row_count for f in m.inputs)
-                rows_out = sum(footer_time_stats(p, self.time_col)[0] for p in files.values())
+                rows_out = sum(footer_time_stats(p)[0] for p in files.values())
                 if rows_in != rows_out:
                     raise RuntimeError(
                         f"row conservation violated for {m.outputs[0]}: "
@@ -243,7 +234,7 @@ class CompactionJob:
         inputs in the catalog, then delete the inputs (C14)."""
         added = [
             # C10: the output keeps the first input's chunk_time
-            dataclasses.replace(land(p, self.data_dir, rel, self.time_col), chunk_time=m.inputs[0].chunk_time)
+            dataclasses.replace(land(p, self.data_dir, rel), chunk_time=m.inputs[0].chunk_time)
             for rel, p in files.items()
         ]
         # a missing input's entry goes too, or it stays cataloged, dangling

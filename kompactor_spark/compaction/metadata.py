@@ -12,6 +12,11 @@ only union over the snapshot files and ``commit`` the only writer that
 changes what they hold. Both call ``read_snapshot`` /
 ``write_snapshot_atomic`` as globals of this module.
 
+The format's one schema contract is the reference's: every data file
+has an orderable int64 column named ``time`` (``TIME_COL``), the key of
+its one write, ``read_parquet([...]) ORDER BY time`` (kompactor.ts:107-111).
+A source whose time column has another name is renamed before ingest.
+
 Fixes over the reference:
 - B3: all ns epochs handled as Python int (arbitrary precision), never
   float (kompactor.ts:276-277 used Math.min/max over 1.7e18 > 2^53).
@@ -33,6 +38,8 @@ import re
 import tempfile
 from collections.abc import Iterable
 from dataclasses import dataclass, field
+
+TIME_COL = "time"  # the event-time column of every lake file (kompactor.ts:107-111)
 
 
 @dataclass
@@ -60,12 +67,12 @@ class ParquetFileInfo:
         )
 
     @classmethod
-    def from_file(cls, data_dir: str, rel: str, time_col: str = "time") -> ParquetFileInfo:
+    def from_file(cls, data_dir: str, rel: str) -> ParquetFileInfo:
         """The entry of the file at ``data_dir/rel``: its real size (B6)
         and its footer's rows and time range (0 for a file with no rows).
         ``commit`` assigns the id."""
         abs_path = os.path.join(data_dir, rel)
-        rows, tmin, tmax = footer_time_stats(abs_path, time_col)
+        rows, tmin, tmax = footer_time_stats(abs_path)
         return cls(
             id=0,
             path=rel,
@@ -306,8 +313,8 @@ def commit(
     return list(new.values())
 
 
-def footer_time_stats(path: str, time_col: str = "time") -> tuple[int, int | None, int | None]:
-    """(row_count, min, max) of ``time_col`` from the Parquet footer —
+def footer_time_stats(path: str) -> tuple[int, int | None, int | None]:
+    """(row_count, min, max) of ``TIME_COL`` from the Parquet footer —
     a metadata read, int-exact (B3). Reads the one column only when a
     row group lacks statistics, so a stats-less file still gets its
     true range; min/max are None only for a file with no rows."""
@@ -317,16 +324,16 @@ def footer_time_stats(path: str, time_col: str = "time") -> tuple[int, int | Non
     pf = pq.ParquetFile(path)
     md = pf.metadata
     col_idx = next(
-        (i for i in range(md.num_columns) if md.schema.column(i).path == time_col), None
+        (i for i in range(md.num_columns) if md.schema.column(i).path == TIME_COL), None
     )
     if col_idx is None:
-        raise ValueError(f"{path}: no {time_col!r} column")
+        raise ValueError(f"{path}: no {TIME_COL!r} column")
     if md.num_rows == 0:
         return 0, None, None
     stats = [md.row_group(rg).column(col_idx).statistics for rg in range(md.num_row_groups)]
     if all(st is not None and st.has_min_max for st in stats):
         return md.num_rows, min(int(st.min) for st in stats), max(int(st.max) for st in stats)
-    col = pf.read(columns=[time_col]).column(time_col)
+    col = pf.read(columns=[TIME_COL]).column(TIME_COL)
     return md.num_rows, int(pc.min(col).as_py()), int(pc.max(col).as_py())
 
 
@@ -354,7 +361,7 @@ def lake_files(data_dir: str, host: str) -> list[tuple[int, int, str]]:
     return found
 
 
-def adopt(data_dir: str, host: str, time_col: str = "time") -> list[ParquetFileInfo]:
+def adopt(data_dir: str, host: str) -> list[ParquetFileInfo]:
     """Catalog the files under ``<host>/dbs`` that ``load_manifest`` does
     not hold, with one ``commit`` per (db, table): the entry point for
     taking ownership of files an external ingester wrote. Returns the
@@ -364,6 +371,6 @@ def adopt(data_dir: str, host: str, time_col: str = "time") -> list[ParquetFileI
     adopted: list[ParquetFileInfo] = []
     # path order keeps each (db, table) contiguous
     for (db, table), entries in itertools.groupby(bare, key=lambda e: e[:2]):
-        added = [ParquetFileInfo.from_file(data_dir, rel, time_col) for _, _, rel in entries]
+        added = [ParquetFileInfo.from_file(data_dir, rel) for _, _, rel in entries]
         adopted += commit(data_dir, host, added=added, db=db, table=table)
     return adopted

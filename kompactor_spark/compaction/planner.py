@@ -45,14 +45,12 @@ _HOUR_DIR_RE = re.compile(r"(\d{2})-\d{2}")
 
 @dataclass
 class CompactionConfig:
-    """Reference constants (kompactor.ts:38-41,110)."""
+    """The planner's policy values D1-D4 (kompactor.ts:38-41)."""
 
     max_desired_file_size_bytes: int = 100 * 1024 * 1024  # D1
     percentage_max_file_size: int = 30  # D2
     split_percentage: int = 70  # D3
     time_window_hours: int = 24  # D4
-    row_group_rows: int = 100_000  # R4 ROW_GROUP_SIZE
-    compression: str = "zstd"
 
     @property
     def small_cutoff_bytes(self) -> int:

@@ -28,6 +28,7 @@ import os
 
 from kompactor_spark.compaction import metadata
 from kompactor_spark.compaction.metadata import (
+    TIME_COL,
     ParquetFileInfo,
     catalog_lock,
     load_manifest,
@@ -102,9 +103,9 @@ def read_table(
         )
     df = read_parquet(spark, *[os.path.join(data_dir, f.path) for f in files])
     if min_time_ns is not None:
-        df = df.where(F.col("time") >= min_time_ns)
+        df = df.where(F.col(TIME_COL) >= min_time_ns)
     if max_time_ns is not None:
-        df = df.where(F.col("time") <= max_time_ns)
+        df = df.where(F.col(TIME_COL) <= max_time_ns)
     return df
 
 

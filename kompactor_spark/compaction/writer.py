@@ -2,11 +2,15 @@
 layout all write through it.
 
 It is the reference's merge (kompactor.ts:107-111: ``read_parquet([...])
-ORDER BY time`` into one zstd file) done for many outputs at once. The
-caller tags each row with the output it belongs to: the hour bucket for
-ingest, or the group and split part for compaction. The writer gives one
-time-sorted zstd file per tag, staged as ``<tag>=<value>/part-*.parquet``
-(a null tag is ``__HIVE_DEFAULT_PARTITION__``, as Spark names it).
+ORDER BY time`` into one file, ``COMPRESSION 'ZSTD', ROW_GROUP_SIZE
+100000``) done for many outputs at once. The codec and the row-group
+size are fixed facts of the format, like the ``time`` column
+(``metadata.TIME_COL``): every file is zstd with ``ROW_GROUP_ROWS``-row
+row groups. The caller tags each row with the output it belongs to: the
+hour bucket for ingest, or the group and split part for compaction. The
+writer gives one time-sorted file per tag, staged as
+``<tag>=<value>/part-*.parquet`` (a null tag is
+``__HIVE_DEFAULT_PARTITION__``, as Spark names it).
 
 One rule picks the backend: Spark's optimizer estimate of the frame's
 size, which launches no job (for a Parquet read it is the files' bytes).
@@ -51,40 +55,34 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-from kompactor_spark.compaction.metadata import ParquetFileInfo
-from kompactor_spark.compaction.planner import CompactionConfig
+from kompactor_spark.compaction.metadata import TIME_COL, ParquetFileInfo
 
 LOCAL_WRITE_MAX_BYTES = 8 * 1024 * 1024  # largest size estimate written in-process
+ROW_GROUP_ROWS = 100_000  # R4: the reference's ROW_GROUP_SIZE
 
 
 @contextlib.contextmanager
-def staged_write(
-    df: DataFrame,
-    key: str,
-    data_dir: str,
-    host: str,
-    time_col: str = "time",
-    config: CompactionConfig | None = None,
-) -> Iterator[dict[str, str]]:
+def staged_write(df: DataFrame, key: str, data_dir: str, host: str) -> Iterator[dict[str, str]]:
     """Write ``df`` as one time-sorted file per distinct value of its
     ``key`` column; the files do not hold ``key``. Yields ``{key value
     as its directory name: staged file path}``."""
-    config = config or CompactionConfig()
     host_dir = os.path.join(data_dir, host)
     os.makedirs(host_dir, exist_ok=True)
     staging = tempfile.mkdtemp(prefix="_staging_", dir=host_dir)
     try:
         # Spark's optimizer estimate launches no job; Long.MaxValue when unknown
         if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= LOCAL_WRITE_MAX_BYTES:
-            _write_local(df.toArrow(), key, staging, time_col, config)
+            _write_local(df.toArrow(), key, staging)
         else:
+            # Spark has no row-count setting for row groups (they close
+            # by bytes), so here the value caps the rows per page
             (
                 df.repartition(key)
-                .sortWithinPartitions(key, time_col)
+                .sortWithinPartitions(key, TIME_COL)
                 .write.partitionBy(key)
                 .mode("overwrite")
-                .option("compression", config.compression)
-                .option("parquet.page.row.count.limit", str(config.row_group_rows))
+                .option("compression", "zstd")
+                .option("parquet.page.row.count.limit", str(ROW_GROUP_ROWS))
                 .parquet(staging)
             )
         staged: dict[str, str] = {}
@@ -104,10 +102,10 @@ def staged_write(
         shutil.rmtree(staging, ignore_errors=True)
 
 
-def _write_local(table: pa.Table, key: str, staging: str, time_col: str, config: CompactionConfig) -> None:
+def _write_local(table: pa.Table, key: str, staging: str) -> None:
     """The in-process backend: a stable sort by (key, time), nulls first
     as in Spark's ascending sort, then one file per run of equal keys."""
-    order = pc.sort_indices(table, [(key, "ascending"), (time_col, "ascending")], null_placement="at_start")
+    order = pc.sort_indices(table, [(key, "ascending"), (TIME_COL, "ascending")], null_placement="at_start")
     table = table.take(order)
     start = 0
     for run in pc.value_counts(table[key]):  # in order of appearance: sorted
@@ -119,9 +117,9 @@ def _write_local(table: pa.Table, key: str, staging: str, time_col: str, config:
         pq.write_table(
             part,
             os.path.join(part_dir, "part-00000.parquet"),
-            compression=config.compression,
-            compression_level=3 if config.compression == "zstd" else None,  # parquet-mr's default
-            row_group_size=config.row_group_rows,
+            compression="zstd",
+            compression_level=3,  # parquet-mr's default
+            row_group_size=ROW_GROUP_ROWS,
             use_dictionary=[
                 f.name
                 for f, col in zip(part.schema, part.columns)
@@ -130,9 +128,9 @@ def _write_local(table: pa.Table, key: str, staging: str, time_col: str, config:
         )
 
 
-def land(staged_path: str, data_dir: str, rel: str, time_col: str = "time") -> ParquetFileInfo:
+def land(staged_path: str, data_dir: str, rel: str) -> ParquetFileInfo:
     """Move a staged file to ``data_dir/rel``; returns its entry."""
     abs_path = os.path.join(data_dir, rel)
     os.makedirs(os.path.dirname(abs_path), exist_ok=True)
     os.replace(staged_path, abs_path)
-    return ParquetFileInfo.from_file(data_dir, rel, time_col)
+    return ParquetFileInfo.from_file(data_dir, rel)

@@ -18,10 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kompactor_spark.timeutil import ns_bucket
-
-NS_PER_HOUR = 3600 * 1_000_000_000
-HOURS_PER_DAY = 24
+from kompactor_spark.timeutil import NS_PER_HOUR, ns_bucket
 
 
 def hourly_rollup(

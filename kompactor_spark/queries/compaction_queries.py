@@ -21,6 +21,7 @@ from kompactor_spark.compaction.writer import land, staged_write
 from kompactor_spark.queries import register
 from kompactor_spark.sources import clear_scratch
 from kompactor_spark.tables import loader
+from kompactor_spark.timeutil import NS_PER_HOUR, ns_bucket
 
 _HOST = "host-q"
 
@@ -32,9 +33,8 @@ def _build_layout(spark, sf_dir: str, root: str) -> None:
     ev = T("events").select(
         F.col("ts").alias("time"), "event_id", "user_id", "event_type", "value"
     )
-    hour_ns = 3600 * 1_000_000_000
-    min_hour = ev.agg(F.min((F.col("time") - F.col("time") % hour_ns)).alias("h")).first()["h"]
-    rows = ev.where((F.col("time") >= min_hour) & (F.col("time") < min_hour + hour_ns))
+    min_hour = ev.agg(F.min(ns_bucket(F.col("time"), NS_PER_HOUR)).alias("h")).first()["h"]
+    rows = ev.where((F.col("time") >= min_hour) & (F.col("time") < min_hour + NS_PER_HOUR))
 
     hour_dir = GroupKey.for_hour(_HOST, 0, 1, min_hour).dir()
     with staged_write(rows.withColumn("_wal", F.col("event_id") % 3), "_wal", root, _HOST) as staged:
@@ -60,7 +60,7 @@ def k1_hour_compaction(spark, sf_dir):
     tag = sf_dir.rstrip("/").split("/")[-1]
     root = clear_scratch("k1_layout_" + tag)
     _build_layout(spark, sf_dir, root)
-    job = CompactionJob(spark, root, [_HOST], time_col="time")
+    job = CompactionJob(spark, root, [_HOST])
     (report,) = job.run()
     if report.compacted_groups != 1:  # loud under python -O too
         raise RuntimeError(f"expected one merged group, got {report}")

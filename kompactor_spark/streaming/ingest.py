@@ -9,6 +9,9 @@ writer (``compaction.writer.staged_write``) keyed on the hour bucket. A
 micro-batch read from files reports its size to Spark's optimizer, so a
 small one is written in this process; a rate source's reports none and
 takes the Spark write.
+A batch's event time is its int64 ns ``time`` column
+(``metadata.TIME_COL``); a source whose time column has another name is
+renamed before ingest (``withColumnRenamed(<name>, "time")``).
 Ordering: the files land first, then ``metadata.commit`` catalogs them,
 so a crash never catalogs a missing file.
 
@@ -24,10 +27,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, commit
+from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, TIME_COL, commit
 from kompactor_spark.compaction.planner import GroupKey
 from kompactor_spark.compaction.writer import land, staged_write
-from kompactor_spark.timeutil import NS_PER_HOUR
+from kompactor_spark.timeutil import NS_PER_HOUR, ns_bucket
 
 
 class IngestJob:
@@ -39,7 +42,6 @@ class IngestJob:
         host: str,
         db: int = 0,
         table: int = 0,
-        time_col: str = "time",
         auto_compact: bool = False,
         grace_ns: int = 0,
     ):
@@ -53,7 +55,6 @@ class IngestJob:
         self.host = host
         self.db = db
         self.table = table
-        self.time_col = time_col
         self.auto_compact = auto_compact
         self.grace_ns = int(grace_ns)
         self._max_seen_ns: int | None = None
@@ -84,15 +85,12 @@ class IngestJob:
         with no per-hour job loop. Every WAL path is built before the
         first file moves, so a row with a null time raises ``ValueError``
         and leaves the lake as it was."""
-        t = F.col(self.time_col)
-        # subtract-modulo, not `/`: ns epochs exceed double's 2^53, and
-        # the float path can misroute boundary rows into the wrong hour
-        with_bucket = df.withColumn("_hour_ns", (t - t % NS_PER_HOUR).cast("long"))
+        with_bucket = df.withColumn("_hour_ns", ns_bucket(F.col(TIME_COL), NS_PER_HOUR))
         wal = int(batch_id) + 1
-        with staged_write(with_bucket, "_hour_ns", self.data_dir, self.host, self.time_col) as staged:
+        with staged_write(with_bucket, "_hour_ns", self.data_dir, self.host) as staged:
             # every path before the first move: a bad key leaves no file in the lake
             rels = {path: self._wal_relpath(hour_key, wal) for hour_key, path in staged.items()}
-            new_infos = [land(path, self.data_dir, rel, self.time_col) for path, rel in rels.items()]
+            new_infos = [land(path, self.data_dir, rel) for path, rel in rels.items()]
         if new_infos:
             commit(self.data_dir, self.host, added=new_infos, db=self.db, table=self.table)
             batch_max = max(i.max_time for i in new_infos)
@@ -109,7 +107,7 @@ class IngestJob:
             hour_ns = int(hour_key)
         except ValueError:
             raise ValueError(
-                f"ingest batch has rows with a null {self.time_col!r} (staged hour key "
+                f"ingest batch has rows with a null {TIME_COL!r} (staged hour key "
                 f"{hour_key!r}); nothing was moved into the lake"
             ) from None
         key = GroupKey.for_hour(self.host, self.db, self.table, hour_ns)
@@ -123,6 +121,4 @@ class IngestJob:
 
         if self._max_seen_ns is None:
             return
-        CompactionJob(spark, self.data_dir, [self.host], time_col=self.time_col).run(
-            before_hour_ns=self._max_seen_ns - self.grace_ns
-        )
+        CompactionJob(spark, self.data_dir, [self.host]).run(before_hour_ns=self._max_seen_ns - self.grace_ns)

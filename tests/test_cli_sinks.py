@@ -139,6 +139,25 @@ def test_cli_fsck(spark, tmp_path, capsys):
     assert "stat mismatches" in capsys.readouterr().out
 
 
+def test_cli_catalog_modes_start_no_session(tmp_path, monkeypatch, capsys):
+    """--fsck, --retention-cutoff-ns and --expire-snapshots only read and
+    write metadata, so they start no Spark session."""
+    from kompactor_spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a catalog-only mode started a Spark session")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    root = str(tmp_path / "lake")
+    FX.basic_hour(root)
+    assert main([root, "--hosts", FX.HOST, "--fsck"]) == 0
+    assert "OK" in capsys.readouterr().out
+    assert main([root, "--hosts", FX.HOST, "--retention-cutoff-ns", "0"]) == 0
+    assert "pruned 0" in capsys.readouterr().out
+    assert main([root, "--hosts", FX.HOST, "--expire-snapshots"]) == 0
+    assert "kept=1" in capsys.readouterr().out
+
+
 def test_line_protocol_roundtrip(spark, tmp_path):
     """events → rendered line protocol → text file → parse → identical
     (measurement, tags, typed fields, ns time). All built-in

@@ -212,6 +212,34 @@ def test_dry_run_is_read_only(spark, tmp_path):
     assert open(glob.glob(os.path.join(root, FX.HOST, "snapshots", "*.json"))[0]).read() == before_snap
 
 
+def test_dry_run_reports_the_split_outputs(spark, tmp_path):
+    """A dry run previews the outputs the real run writes, split parts
+    included, and writes nothing."""
+    from kompactor_spark.compaction import CompactionConfig
+
+    root = str(tmp_path / "lake")
+    FX.basic_hour(root)
+    cfg = CompactionConfig(max_desired_file_size_bytes=4000)  # large cutoff 5200 B
+    before = _lake_bytes(root)
+    dry = run_job(spark, root, config=cfg, dry_run=True)
+    assert _lake_bytes(root) == before
+    real = run_job(spark, root, config=cfg)
+    assert [os.path.basename(p)[-11:] for p in real.results[0].output_paths] == ["_p0.parquet", "_p1.parquet"]
+    assert [r.output_paths for r in dry.results] == [r.output_paths for r in real.results]
+
+
+def test_dry_run_refuses_what_the_run_refuses(spark, tmp_path):
+    """An output that would overwrite an input is refused by the dry run
+    as by the real run, and neither touches the lake."""
+    root = str(tmp_path / "lake")
+    FX.replayed_first_input(root)
+    before = _lake_bytes(root)
+    for dry_run in (True, False):
+        with pytest.raises(RuntimeError, match="would overwrite one of its inputs"):
+            run_job(spark, root, dry_run=dry_run)
+        assert _lake_bytes(root) == before
+
+
 # -- K2: generation (daily) level ------------------------------------------
 
 

@@ -11,6 +11,7 @@ import os
 import shutil
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kompactor_spark.compaction import CompactionJob
 from kompactor_spark.compaction.metadata import adopt
@@ -18,6 +19,11 @@ from kompactor_spark.compaction.metadata import adopt
 from tests import fixtures_compaction as FX
 from tests.test_compaction import assert_invariants, disk_parquets
 from tests.test_streaming import BASE, EVENTS_SCHEMA, NS, _rows, _write_batches
+
+# the events schema as the lake takes it: event time in a column named ``time``
+LAKE_SCHEMA = T.StructType(
+    [T.StructField("time", f.dataType) if f.name == "ts" else f for f in EVENTS_SCHEMA.fields]
+)
 
 
 def test_ingest_bootstrap_compact(spark, tmp_path):
@@ -69,12 +75,12 @@ def test_ingest_bootstrap_compact(spark, tmp_path):
     assert_invariants(root)  # catalog ↔ disk agree from the start
 
     # 4. hour compaction over adopted files
-    job = CompactionJob(spark, root, [host], time_col="time")
+    job = CompactionJob(spark, root, [host])
     rep = job.run()[0]
     assert rep.compacted_groups >= 1
 
     # 5. generation pass
-    CompactionJob(spark, root, [host], time_col="time").run_generation()
+    CompactionJob(spark, root, [host]).run_generation()
 
     # end state: catalog integrity + row conservation + sortedness
     assert_invariants(root)
@@ -97,12 +103,12 @@ def test_ingest_job_writes_wal_layout(spark, tmp_path):
         _rows(100, BASE + 120 * NS, user=2, n=30, step_ns=60 * NS),
         _rows(200, BASE + 3600 * NS, user=3, n=20, step_ns=60 * NS),
     ]
-    _write_batches(spark, src, batches)
+    _write_batches(spark, src, batches, schema=LAKE_SCHEMA)
 
     root = str(tmp_path / "ilake")
-    job = IngestJob(root, FX.HOST, db=0, table=0, time_col="ts")
+    job = IngestJob(root, FX.HOST, db=0, table=0)
     stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
+        spark.readStream.schema(LAKE_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "*"))
     )
@@ -118,7 +124,7 @@ def test_ingest_job_writes_wal_layout(spark, tmp_path):
     snap_files = glob.glob(os.path.join(root, FX.HOST, "snapshots", "*.info.json"))
     assert len(snap_files) == 1
 
-    # catalog ↔ disk agree; rows conserved (time col is ts here)
+    # catalog ↔ disk agree; rows conserved
     from kompactor_spark.compaction.metadata import read_snapshot
 
     snap = read_snapshot(snap_files[0])
@@ -127,7 +133,7 @@ def test_ingest_job_writes_wal_layout(spark, tmp_path):
     assert cataloged == set(on_disk)
 
     # the compactor consumes it directly
-    rep = CompactionJob(spark, root, [FX.HOST], time_col="ts").run()[0]
+    rep = CompactionJob(spark, root, [FX.HOST]).run()[0]
     assert rep.compacted_groups >= 1
     snap2 = read_snapshot(snap_files[0])
     assert snap2.row_count == 80
@@ -140,8 +146,8 @@ def test_ingest_batch_replay_idempotent(spark, tmp_path):
     from kompactor_spark.streaming.ingest import IngestJob
 
     root = str(tmp_path / "rlake")
-    job = IngestJob(root, FX.HOST, db=0, table=0, time_col="ts")
-    rows = spark.createDataFrame(_rows(0, BASE, user=1, n=25, step_ns=60 * NS), EVENTS_SCHEMA)
+    job = IngestJob(root, FX.HOST, db=0, table=0)
+    rows = spark.createDataFrame(_rows(0, BASE, user=1, n=25, step_ns=60 * NS), LAKE_SCHEMA)
 
     job.write_batch(rows, 0)
     files_1 = sorted(disk_parquets(root))
@@ -151,7 +157,7 @@ def test_ingest_batch_replay_idempotent(spark, tmp_path):
     assert sorted(disk_parquets(root)) == files_1
     assert open(job.snapshot_path).read() == snap_1
 
-    job.write_batch(spark.createDataFrame(_rows(100, BASE + 60 * NS, user=2, n=5), EVENTS_SCHEMA), 1)
+    job.write_batch(spark.createDataFrame(_rows(100, BASE + 60 * NS, user=2, n=5), LAKE_SCHEMA), 1)
     assert len(disk_parquets(root)) == len(files_1) + len(
         {p for p in disk_parquets(root) if "0000000002" in p}
     )
@@ -166,16 +172,16 @@ def test_ingest_auto_compacts_closed_hours(spark, tmp_path):
     from kompactor_spark.streaming.ingest import IngestJob
 
     root = str(tmp_path / "alake")
-    job = IngestJob(root, FX.HOST, db=0, table=0, time_col="ts", auto_compact=True)
+    job = IngestJob(root, FX.HOST, db=0, table=0, auto_compact=True)
 
     # two batches inside hour A: nothing is closed yet -> no c_ files
-    job.write_batch(spark.createDataFrame(_rows(0, BASE, user=1, n=20, step_ns=60 * NS), EVENTS_SCHEMA), 0)
-    job.write_batch(spark.createDataFrame(_rows(50, BASE + 10 * NS, user=2, n=20, step_ns=60 * NS), EVENTS_SCHEMA), 1)
+    job.write_batch(spark.createDataFrame(_rows(0, BASE, user=1, n=20, step_ns=60 * NS), LAKE_SCHEMA), 0)
+    job.write_batch(spark.createDataFrame(_rows(50, BASE + 10 * NS, user=2, n=20, step_ns=60 * NS), LAKE_SCHEMA), 1)
     assert not [p for p in disk_parquets(root) if "/c_" in "/" + os.path.basename(p)]
 
     # batch in hour A+1 closes hour A -> its two WAL files merge
     job.write_batch(
-        spark.createDataFrame(_rows(100, BASE + 3700 * NS, user=3, n=10, step_ns=6 * NS), EVENTS_SCHEMA), 2
+        spark.createDataFrame(_rows(100, BASE + 3700 * NS, user=3, n=10, step_ns=6 * NS), LAKE_SCHEMA), 2
     )
     on_disk = sorted(disk_parquets(root))
     compacted = [p for p in on_disk if re.search(r"c_\d{10}_\d{10}_h\d+\.parquet$", p)]
@@ -205,7 +211,7 @@ def test_cli_ingest_auto_compact(spark, tmp_path):
         _rows(50, BASE + 10 * NS, user=2, n=20, step_ns=60 * NS),
         _rows(100, BASE + 3700 * NS, user=3, n=10, step_ns=6 * NS),
     ]
-    _write_batches(spark, src, batches)
+    _write_batches(spark, src, batches, schema=LAKE_SCHEMA)
 
     root = str(tmp_path / "clake")
     rc = cli_main(
@@ -215,8 +221,6 @@ def test_cli_ingest_auto_compact(spark, tmp_path):
             FX.HOST,
             "--ingest-source",
             os.path.join(src, "*"),
-            "--time-col",
-            "ts",
             "--auto-compact",
             "--max-files-per-trigger",
             "1",
@@ -301,11 +305,11 @@ def test_ingest_single_batch_spans_hours(spark, tmp_path, monkeypatch):
 
     hour_start = (BASE // (3600 * NS)) * 3600 * NS
     # 90 rows, 2 min apart: 3 full hours starting at an aligned boundary
-    df = spark.createDataFrame(_rows(0, hour_start, user=1, n=90, step_ns=120 * NS), EVENTS_SCHEMA)
+    df = spark.createDataFrame(_rows(0, hour_start, user=1, n=90, step_ns=120 * NS), LAKE_SCHEMA)
     for backend, limit in {"local": 2**63, "spark": -1}.items():
         monkeypatch.setattr(writer, "LOCAL_WRITE_MAX_BYTES", limit)
         root = str(tmp_path / backend)
-        job = IngestJob(root, FX.HOST, db=0, table=0, time_col="ts")
+        job = IngestJob(root, FX.HOST, db=0, table=0)
         job.write_batch(df, 0)
 
         on_disk = sorted(disk_parquets(root))
@@ -319,7 +323,7 @@ def test_ingest_single_batch_spans_hours(spark, tmp_path, monkeypatch):
             lo = hour_start + i * 3600 * NS
             assert f.min_time == lo and f.max_time == lo + 58 * 60 * NS
             # file content is time-sorted (the compactor's input invariant)
-            ts = pq.read_table(os.path.join(root, f.path), columns=["ts"]).column("ts").to_pylist()
+            ts = pq.read_table(os.path.join(root, f.path), columns=["time"]).column("time").to_pylist()
             assert ts == sorted(ts) and len(ts) == 30
         # staging is cleaned up
         assert not glob.glob(os.path.join(root, FX.HOST, "_staging_*"))

@@ -1,13 +1,19 @@
-"""The package's option surface: the environment variables it reads.
+"""The package's option surface: the environment variables it reads,
+the compaction config's fields, the CLI's flags and the lake entry
+points' parameters.
 
 Every knob is a code path someone has to keep working, so a new one
-needs an explicit decision: add it to ``ALLOWED`` with its reason, or
-keep the arm that won its A/B and delete the other.
+needs an explicit decision: add it here with its reason, or keep the
+arm that won its A/B and delete the other. The lake's format facts
+(the ``time`` column, zstd, 100,000-row row groups) are constants, not
+options.
 """
 
 from __future__ import annotations
 
 import ast
+import dataclasses
+import inspect
 import pathlib
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "kompactor_spark"
@@ -49,3 +55,44 @@ def _env_reads(path: pathlib.Path):
 def test_env_knobs_are_exactly_the_allowed_set():
     read = {name for p in sorted(PKG.rglob("*.py")) for name in _env_reads(p)}
     assert read == ALLOWED
+
+
+def test_compaction_config_is_the_planner_policy():
+    from kompactor_spark.compaction import CompactionConfig
+
+    assert [f.name for f in dataclasses.fields(CompactionConfig)] == [
+        "max_desired_file_size_bytes",  # D1
+        "percentage_max_file_size",  # D2
+        "split_percentage",  # D3
+        "time_window_hours",  # D4
+    ]
+
+
+CLI_FLAGS = {
+    "-h", "--help", "--hosts", "--dry-run", "--verbose",
+    "--generation", "--now-ns", "--time-window-hours", "--bootstrap",
+    "--fsck", "--retention-cutoff-ns", "--expire-snapshots",
+    "--ingest-source", "--ingest-format", "--auto-compact", "--grace-ns",
+    "--checkpoint", "--max-files-per-trigger", "--db", "--table",
+    "--export-zorder", "--zorder-cols", "--zorder-files",
+    "--export-rollup", "--rollup-value-col", "--rollup-key-cols",
+    "--skew-report",
+}
+
+
+def test_cli_flags_are_exactly_the_pinned_set():
+    from kompactor_spark.cli import build_parser
+
+    assert {s for a in build_parser()._actions for s in a.option_strings} == CLI_FLAGS
+
+
+def test_lake_entry_points_take_no_format_options():
+    from kompactor_spark.compaction import CompactionJob
+    from kompactor_spark.compaction.fsck import fsck_host
+    from kompactor_spark.compaction.metadata import ParquetFileInfo, adopt, footer_time_stats
+    from kompactor_spark.compaction.writer import land, staged_write
+    from kompactor_spark.streaming.ingest import IngestJob
+
+    for fn in (CompactionJob, IngestJob, fsck_host, adopt, staged_write, land, ParquetFileInfo.from_file, footer_time_stats):
+        assert "time_col" not in inspect.signature(fn).parameters, fn.__qualname__
+    assert list(inspect.signature(staged_write).parameters) == ["df", "key", "data_dir", "host"]

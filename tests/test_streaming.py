@@ -28,13 +28,13 @@ NS = 1_000_000_000
 BASE = 1_700_000_000 * NS
 
 
-def _write_batches(spark, path, batches):
+def _write_batches(spark, path, batches, schema=EVENTS_SCHEMA):
     import glob as _glob
     import time
 
     now = time.time()
     for i, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, EVENTS_SCHEMA)
+        df = spark.createDataFrame(rows, schema)
         d = os.path.join(path, f"b{i}")
         df.coalesce(1).write.mode("overwrite").parquet(d)
         # file source orders micro-batches by mtime — make it unambiguous
