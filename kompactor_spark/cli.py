@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             print(rep.summary())
         return 0
     if args.expire_snapshots:
-        from kompactor_spark.compaction.readers import expire_snapshots
+        from kompactor_spark.compaction.metadata import expire_snapshots
 
         for host in hosts:
             rep = expire_snapshots(args.data_dir, host)

@@ -7,8 +7,8 @@ implemented (D1-D4/D8: size cutoffs, 70/30 split, generation level).
 """
 
 from kompactor_spark.compaction.job import CompactionJob
-from kompactor_spark.compaction.metadata import ParquetFileInfo, SnapshotMetadata
-from kompactor_spark.compaction.readers import expire_snapshots, files_as_of, read_table, snapshot_ids
+from kompactor_spark.compaction.metadata import ParquetFileInfo, SnapshotMetadata, expire_snapshots
+from kompactor_spark.compaction.readers import files_as_of, read_table, snapshot_ids
 from kompactor_spark.compaction.planner import (
     CompactionConfig,
     CompactionPlan,

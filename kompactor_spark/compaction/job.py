@@ -16,12 +16,12 @@ written in this process, a large one by a Spark write.
 
 B7 fixed (the reference deleted sources BEFORE rewriting metadata): row
 conservation is checked for every group from the staged footers before
-any file moves. Then, group by group, the outputs move into place,
-``metadata.commit`` swaps inputs for outputs, and the inputs are deleted
-and empty dirs pruned (C14).
+any file moves. Then, group by group, the outputs move into place and
+``metadata.commit`` swaps inputs for outputs and deletes the inputs.
 
-Dry-run is real (B1 fixed): the real run's plan, outputs and refusals,
-and zero writes.
+Dry-run is real (B1 fixed): the real run's plan and refusals, every
+planned split part as an output (the real run writes none for a part no
+row falls into), and zero writes.
 """
 
 from __future__ import annotations
@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from kompactor_spark.compaction.metadata import (
     TIME_COL,
     ParquetFileInfo,
-    _remove_empty_dirs_upward,
     commit,
     footer_time_stats,
     load_manifest,
@@ -85,7 +84,7 @@ class CompactionReport:
 @dataclass
 class _Merge:
     """One planned group: its inputs on disk, and its outputs (one per
-    split part, cut at ``cuts``)."""
+    split part, cut at ``cuts``; none, and no merge, for ≤ 1 input)."""
 
     group: CompactionGroup
     inputs: list[ParquetFileInfo]
@@ -95,7 +94,8 @@ class _Merge:
 
     def result(self, outputs: list[ParquetFileInfo] | None = None) -> GroupResult:
         """The group's result: from the written ``outputs``, or, for a
-        dry run, from the inputs' catalog entries."""
+        dry run, from the inputs' catalog entries and every planned part
+        (a part no row falls into is not written)."""
         files = self.inputs if outputs is None else outputs
         k = self.group.key
         return GroupResult(
@@ -158,8 +158,16 @@ class CompactionJob:
         ]
 
     def _run_host(self, host: str, plan: CompactionPlan) -> CompactionReport:
-        merges = [m for m in map(self._prepare, plan.groups) if m is not None]
-        results = [m.result() for m in merges] if self.dry_run else self._merge(host, merges)
+        prepared = [self._prepare(g) for g in plan.groups]
+        merges = [m for m in prepared if m.outputs]
+        if self.dry_run:
+            results = [m.result() for m in merges]
+        else:
+            # an unmerged group's missing inputs would stay cataloged, dangling
+            dangling = [p for m in prepared if not m.outputs for p in m.dropped]
+            if dangling:
+                commit(self.data_dir, host, removed=dangling)
+            results = self._merge(host, merges)
         return CompactionReport(
             host=host,
             dry_run=self.dry_run,
@@ -172,17 +180,18 @@ class CompactionJob:
     def _abs(self, rel: str) -> str:
         return os.path.join(self.data_dir, rel)
 
-    def _prepare(self, group: CompactionGroup) -> _Merge | None:
+    def _prepare(self, group: CompactionGroup) -> _Merge:
         """Driver-side work for one group, before anything is written and
-        the same in a dry run: skip missing inputs, then pick the outputs
-        and refuse any that would overwrite an input."""
+        the same in a dry run: skip missing inputs, then, if more than one
+        is left, pick the outputs and refuse any that would overwrite an
+        input."""
         files = group.sorted_files()
         inputs = [f for f in files if os.path.exists(self._abs(f.path))]
         dropped = [f.path for f in files if not os.path.exists(self._abs(f.path))]
         for p in dropped:  # C13 semantics: warn and proceed
             log.warning("input missing on disk, skipping: %s", p)
         if len(inputs) <= 1:
-            return None
+            return _Merge(group, inputs, dropped, [], [])
 
         tmin_in = min(f.min_time for f in inputs)
         tmax_in = max(f.max_time for f in inputs)
@@ -198,8 +207,8 @@ class CompactionJob:
 
     def _merge(self, host: str, merges: list[_Merge]) -> list[GroupResult]:
         """Read every group, write all outputs in one staged write per
-        distinct read schema, check row conservation, then move, commit
-        and delete group by group in plan order."""
+        distinct read schema, check row conservation, then move and
+        commit group by group in plan order."""
         t = F.col(TIME_COL)
         first = [0, *itertools.accumulate(len(m.outputs) for m in merges)]  # index of part 0
         by_schema: dict = {}
@@ -230,8 +239,8 @@ class CompactionJob:
             return [self._commit(host, m, files) for m, files in zip(merges, placed)]
 
     def _commit(self, host: str, m: _Merge, files: dict[str, str]) -> GroupResult:
-        """Move a group's staged outputs into place, swap them for its
-        inputs in the catalog, then delete the inputs (C14)."""
+        """Move a group's staged outputs into place and swap them for its
+        inputs in the catalog, which deletes the inputs."""
         added = [
             # C10: the output keeps the first input's chunk_time
             dataclasses.replace(land(p, self.data_dir, rel), chunk_time=m.inputs[0].chunk_time)
@@ -239,7 +248,4 @@ class CompactionJob:
         ]
         # a missing input's entry goes too, or it stays cataloged, dangling
         commit(self.data_dir, host, removed=[f.path for f in m.inputs] + m.dropped, added=added)
-        for f in m.inputs:
-            os.unlink(self._abs(f.path))
-            _remove_empty_dirs_upward(os.path.dirname(self._abs(f.path)), os.path.join(self.data_dir, host, "dbs"))
         return m.result(added)

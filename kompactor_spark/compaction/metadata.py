@@ -7,9 +7,10 @@ These cannot round-trip through spark.read.json (no single element
 type), and the catalog is KBs — so this is driver-side Python by
 design (SURVEY §1.3).
 
-This module is the catalog's one code path: ``load_manifest`` is the
-only union over the snapshot files and ``commit`` the only writer that
-changes what they hold. Both call ``read_snapshot`` /
+This module is the catalog's one code path and the only one that
+deletes lake files: ``load_manifest`` is the only union over the
+snapshot files, ``commit`` the only writer that changes what they hold,
+and ``expire_snapshots`` folds them. All call ``read_snapshot`` /
 ``write_snapshot_atomic`` as globals of this module.
 
 The format's one schema contract is the reference's: every data file
@@ -20,9 +21,9 @@ A source whose time column has another name is renamed before ingest.
 Fixes over the reference:
 - B3: all ns epochs handled as Python int (arbitrary precision), never
   float (kompactor.ts:276-277 used Math.min/max over 1.7e18 > 2^53).
-- B7: writes are atomic (tmp + fsync + rename), and every caller of
-  ``commit`` deletes its files only after the commit (kompactor.ts
-  deleted first).
+- B7: writes are atomic (tmp + fsync + rename), and ``commit`` deletes
+  the files it uncatalogs only after it has written the snapshots
+  (kompactor.ts deleted first).
 """
 
 from __future__ import annotations
@@ -250,8 +251,9 @@ def commit(
     table: int = 0,
 ) -> list[ParquetFileInfo]:
     """The one catalog writer: drop the ``removed`` paths from every
-    snapshot and upsert ``added``, under ``catalog_lock`` on snapshots
-    re-read inside it. Returns ``added`` with their ids.
+    snapshot, upsert ``added``, then delete the removed files, all under
+    ``catalog_lock`` on snapshots re-read inside it. Returns ``added``
+    with their ids.
 
     - An added path already cataloged is replaced in place wherever it
       is and keeps its id; any other gets a fresh id above the largest
@@ -261,10 +263,11 @@ def commit(
       into (``db``, ``table``) of ``INGEST_SNAPSHOT``.
     - Only snapshots that changed are rewritten, each atomically, with
       exact totals.
+    - Then each removed path on disk, unless just added, is deleted and
+      empty dirs are pruned up to ``<host>/dbs``, which stays (C14).
 
-    Callers write their new files before the commit and delete the
-    removed ones after it, so a crash never leaves a cataloged path
-    missing on disk.
+    Callers write their new files before the commit, so a crash leaves
+    orphans for ``fsck``, never a cataloged path missing on disk (B7).
     """
     drop = set(removed)
     with catalog_lock(data_dir, host):
@@ -310,7 +313,33 @@ def commit(
         for sp in sorted(changed):
             snaps[sp].recompute_totals()
             write_snapshot_atomic(snaps[sp], sp)
+
+        dbs = os.path.join(data_dir, host, "dbs")
+        for rel in sorted(drop - new.keys()):
+            path = os.path.join(data_dir, rel)
+            if os.path.exists(path):
+                os.unlink(path)
+                _remove_empty_dirs_upward(os.path.dirname(path), dbs)
     return list(new.values())
+
+
+def expire_snapshots(data_dir: str, host: str) -> dict:
+    """Fold the host's snapshot history into one snapshot holding
+    ``load_manifest`` (Iceberg-style expire-snapshots): the state is
+    unchanged, and an ``as_of`` older than the new snapshot now raises,
+    the documented time-travel horizon. Under ``catalog_lock``, the new
+    snapshot is written atomically before the old ones are removed, so
+    the union over the snapshot files is the same at every step."""
+    with catalog_lock(data_dir, host):
+        paths = snapshot_paths(data_dir, host)
+        if len(paths) <= 1:
+            return {"merged": 0, "kept": len(paths)}
+        merged = snapshot_from_entries(load_manifest(data_dir, host), writer_id=host)
+        out = os.path.join(data_dir, host, "snapshots", f"{snapshot_id(paths[-1]) + 1:04d}.info.json")
+        write_snapshot_atomic(merged, out)
+        for sp in paths:
+            os.remove(sp)
+    return {"merged": len(paths), "kept": 1, "snapshot": out}
 
 
 def footer_time_stats(path: str) -> tuple[int, int | None, int | None]:

@@ -26,13 +26,10 @@ from __future__ import annotations
 
 import os
 
-from kompactor_spark.compaction import metadata
 from kompactor_spark.compaction.metadata import (
     TIME_COL,
     ParquetFileInfo,
-    catalog_lock,
     load_manifest,
-    snapshot_from_entries,
     snapshot_id,
     snapshot_paths,
 )
@@ -107,30 +104,3 @@ def read_table(
     if max_time_ns is not None:
         df = df.where(F.col(TIME_COL) <= max_time_ns)
     return df
-
-
-def expire_snapshots(data_dir: str, host: str) -> dict:
-    """Fold the host's snapshot history into ONE manifest file
-    (Iceberg-style expire-snapshots, the catalog-GC companion to
-    `read_table(as_of=...)`).
-
-    The fold is ``load_manifest`` written as one new snapshot: state is
-    unchanged, only history granularity is lost — after expiry,
-    ``as_of`` older than the merged snapshot raises, which IS the
-    documented time-travel horizon.
-
-    Ordering, under ``catalog_lock`` so no commit interleaves: the
-    merged snapshot is written (atomically) first, then the old ones
-    are unlinked; at any point in between the union over the remaining
-    snapshot files is the same.
-    """
-    with catalog_lock(data_dir, host):
-        paths = snapshot_paths(data_dir, host)
-        if len(paths) <= 1:
-            return {"merged": 0, "kept": len(paths)}
-        merged = snapshot_from_entries(load_manifest(data_dir, host), writer_id=host)
-        out = os.path.join(data_dir, host, "snapshots", f"{snapshot_id(paths[-1]) + 1:04d}.info.json")
-        metadata.write_snapshot_atomic(merged, out)  # via the module: a wrapper on it sees the write
-        for sp in paths:
-            os.remove(sp)
-    return {"merged": len(paths), "kept": 1, "snapshot": out}

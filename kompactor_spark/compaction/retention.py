@@ -4,11 +4,9 @@ The reference's domain is InfluxDB 3 Core, where retention policies
 expire whole data files once their newest point passes the cutoff.
 The reference itself never implements this; we add it as the natural
 companion to compaction — the planner side is pure metadata (like
-`planner.py`: zero data scans). Ordering: ``metadata.commit`` drops the
-expired entries first, then the data files are deleted and empty
-directories pruned, so a crash in between leaves orphans (found by
-`fsck`, harmless), never a catalog pointing at deleted data (the
-reference's failure mode, kompactor.ts:263-311 deletes first).
+`planner.py`: zero data scans). Retention is a filter over
+``metadata.load_manifest`` and one ``metadata.commit``, which drops the
+expired entries and then deletes their files (B7 order there).
 
 Expiry predicate: a file is pruned iff ``max_time < cutoff_ns`` — the
 whole file is past retention. Files straddling the cutoff are kept
@@ -21,7 +19,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from kompactor_spark.compaction.metadata import _remove_empty_dirs_upward, commit, load_manifest
+from kompactor_spark.compaction.metadata import commit, load_manifest
 
 
 @dataclass
@@ -51,9 +49,9 @@ def enforce_retention(
     """Prune fully-expired files (max_time < cutoff_ns) per host.
 
     Driver-only metadata operation: cost is O(#catalog entries), no
-    Spark job and no data scan — at 100 TB this walks KBs of JSON and
-    issues unlink()s. Idempotent: a second run with the same cutoff is
-    a no-op.
+    Spark job and no data scan — at 100 TB this walks KBs of JSON, and
+    the commit issues the unlink()s. Idempotent: a second run with the
+    same cutoff is a no-op.
     """
     reports: list[RetentionReport] = []
     for host in hosts:
@@ -63,17 +61,8 @@ def enforce_retention(
         rep.examined_files = len(manifest)
         rep.pruned_paths = sorted(expired)
         rep.freed_bytes = sum(expired.values())
-        if dry_run or not expired:
-            reports.append(rep)
-            continue
-        commit(data_dir, host, removed=rep.pruned_paths)
-        for rel in rep.pruned_paths:
-            abs_path = os.path.join(data_dir, rel)
-            if os.path.exists(abs_path):
-                os.unlink(abs_path)
-                # <host>/dbs stays: compaction requires it even when empty
-                _remove_empty_dirs_upward(os.path.dirname(abs_path), os.path.join(data_dir, host, "dbs"))
-            else:
-                rep.missing.append(rel)
+        if not dry_run and expired:
+            rep.missing = [rel for rel in rep.pruned_paths if not os.path.exists(os.path.join(data_dir, rel))]
+            commit(data_dir, host, removed=rep.pruned_paths)
         reports.append(rep)
     return reports

@@ -20,6 +20,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 
+from kompactor_spark.compaction.writer import ROW_GROUP_ROWS
+
 SCRATCH_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
@@ -34,8 +36,7 @@ def clear_scratch(*parts: str) -> str:
     return p
 
 
-def write_sorted_single_file(df: DataFrame, path: str, sort_col: str = "time",
-                             row_group_rows: int = 100_000) -> None:
+def write_sorted_single_file(df: DataFrame, path: str, sort_col: str = "time") -> None:
     """Reference R3-R4 semantics: one globally time-sorted zstd Parquet
     file with bounded row groups (kompactor.ts:107-111).
 
@@ -48,7 +49,7 @@ def write_sorted_single_file(df: DataFrame, path: str, sort_col: str = "time",
         .sortWithinPartitions(sort_col)
         .write.mode("overwrite")
         .option("compression", "zstd")
-        .option("parquet.page.row.count.limit", str(row_group_rows))
+        .option("parquet.page.row.count.limit", str(ROW_GROUP_ROWS))
         .parquet(path)
     )
 

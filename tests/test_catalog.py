@@ -1,10 +1,13 @@
 """The catalog's one code path: ``metadata.load_manifest`` and
 ``metadata.commit``. Commit rules, safety against a second process and
-against the compaction job's group threads, and the module-level hook
-through which a tracer counts snapshot reads and writes."""
+against the compaction job's group threads, the catalog-first order of
+a commit's deletes, and the module-level hook through which a tracer
+counts snapshot reads and writes."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import multiprocessing
 import os
 import sys
@@ -135,7 +138,8 @@ def test_every_catalog_path_goes_through_the_metadata_module(spark, tmp_path, mo
     catalog path, so a tracer patching the module counts them all."""
     from kompactor_spark.compaction import CompactionJob
     from kompactor_spark.compaction.fsck import fsck_host
-    from kompactor_spark.compaction.readers import expire_snapshots, files_as_of
+    from kompactor_spark.compaction.metadata import expire_snapshots
+    from kompactor_spark.compaction.readers import files_as_of
     from kompactor_spark.compaction.retention import enforce_retention
     from kompactor_spark.streaming.ingest import IngestJob
 
@@ -175,3 +179,78 @@ def test_every_catalog_path_goes_through_the_metadata_module(spark, tmp_path, mo
     reads, writes = counted(lambda: IngestJob(root, FX.HOST, db=0, table=3).write_batch(batch, 99))
     assert reads > 0 and writes > 0
     assert fsck_host(root, FX.HOST).ok
+
+
+@pytest.mark.parametrize("caller", ["compaction", "retention"])
+def test_failed_snapshot_write_deletes_nothing(spark, tmp_path, monkeypatch, caller):
+    """A commit whose snapshot write fails raises before it deletes a
+    file: every input stays on disk and cataloged and readers see the
+    same rows. Once the write works again, a rerun converges fsck-clean
+    (a failed compaction may leave its landed outputs as orphans)."""
+    from kompactor_spark.compaction import CompactionJob
+    from kompactor_spark.compaction.fsck import fsck_host
+    from kompactor_spark.compaction.readers import read_table
+    from kompactor_spark.compaction.retention import enforce_retention
+
+    root = str(tmp_path)
+    b = FX.basic_hour(root)
+    inputs = {e["info"]["path"] for e in b.files}
+    cutoff = sorted(e["info"]["max_time"] for e in b.files)[1]  # expires one file
+
+    def run():
+        if caller == "compaction":
+            return CompactionJob(spark, root, [FX.HOST]).run()
+        return enforce_retention(root, [FX.HOST], cutoff_ns=cutoff)
+
+    def rows():
+        return sorted(tuple(r) for r in read_table(spark, root, FX.HOST, 0, 3).collect())
+
+    def failing(meta, path):
+        raise OSError("injected snapshot write failure")
+
+    before = rows()
+    monkeypatch.setattr(metadata, "write_snapshot_atomic", failing)
+    with pytest.raises(OSError, match="injected"):
+        run()
+    assert all(os.path.exists(os.path.join(root, p)) for p in inputs)
+    assert {f.path for _, _, f in load_manifest(root, FX.HOST)} == inputs
+    assert rows() == before
+    assert not fsck_host(root, FX.HOST).dangling
+
+    monkeypatch.undo()
+    [rep] = run()
+    assert fsck_host(root, FX.HOST).ok
+    if caller == "compaction":
+        assert rep.compacted_groups == 1 and rows() == before
+    else:
+        assert len(rep.pruned_paths) == 1 and len(rows()) == len(before) - 50
+
+
+def test_only_the_metadata_module_deletes_lake_files():
+    """In the compaction package and the ingest job only ``metadata.py``
+    deletes files, prunes directories or takes the catalog lock, so the
+    B7 order (catalog first, deletes second) lives in ``commit`` alone.
+    The one exception is the writer removing its own staging directory."""
+    import kompactor_spark
+
+    pkg = os.path.dirname(kompactor_spark.__file__)
+    deletes = {("os", "unlink"), ("os", "remove"), ("os", "rmdir"), ("os", "removedirs"), ("shutil", "rmtree")}
+    private = {"catalog_lock", "_remove_empty_dirs_upward"}
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "compaction", "*.py"))) + [os.path.join(pkg, "streaming", "ingest.py")]:
+        name = os.path.relpath(path, pkg)
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name):
+                if (node.value.id, node.attr) in deletes:
+                    found.append((name, f"{node.value.id}.{node.attr}"))
+            if isinstance(node, ast.ImportFrom):
+                found += [(name, f"{node.module}.{a.name}") for a in node.names
+                          if (node.module, a.name) in deletes or a.name in private]
+            ident = getattr(node, "id", None) or getattr(node, "attr", None)
+            if isinstance(node, (ast.Name, ast.Attribute)) and ident in private:
+                found.append((name, ident))
+    assert [f for f in found if f[0] != os.path.join("compaction", "metadata.py")] == [
+        (os.path.join("compaction", "writer.py"), "shutil.rmtree")
+    ]

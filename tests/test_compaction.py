@@ -188,6 +188,37 @@ def test_missing_input_skipped(spark, tmp_path):
     assert fsck_host(root, FX.HOST).ok
 
 
+def test_lone_input_group_uncatalogs_its_missing_input(spark, tmp_path):
+    """An hour left with one input on disk is not merged, but the run
+    still uncatalogs its missing input, so the lake is fsck-clean and
+    readable after it; a dry run leaves the lake as it was."""
+    from kompactor_spark.compaction.fsck import fsck_host
+    from kompactor_spark.compaction.readers import read_table
+
+    root = str(tmp_path)
+    b = FX.LayoutBuilder(root)
+    hstart = (FX.BASE_NS // (3600 * FX.NS)) * 3600 * FX.NS
+    b.add_parquet(0, 3, "2025-01-26", 14, "0000000001.parquet", FX.make_rows(30, hstart, 2000 * FX.NS, seed=1))
+    b.add_metadata_entry(0, 3, {
+        "path": f"{b.host}/dbs/db-0/table-3/2025-01-26/14-00/0000000002.parquet",
+        "size_bytes": 1234,
+        "row_count": 10,
+        "chunk_time": hstart,
+        "min_time": hstart,
+        "max_time": hstart + 100 * FX.NS,
+    })
+    b.write_snapshot()
+    before = _lake_bytes(root)
+    dry = run_job(spark, root, dry_run=True)
+    assert (dry.planned_groups, dry.compacted_groups) == (1, 0)
+    assert _lake_bytes(root) == before
+    report = run_job(spark, root)
+    assert (report.planned_groups, report.compacted_groups) == (1, 0)
+    assert fsck_host(root, FX.HOST).ok
+    assert read_table(spark, root, FX.HOST, 0, 3).count() == 30
+    assert_invariants(root)
+
+
 def test_ns_precision_exact(spark, tmp_path):
     """B3 regression: adjacent-ns stats survive exactly."""
     root = str(tmp_path / "nsp")
@@ -311,7 +342,9 @@ def test_oversized_output_splits(spark, tmp_path):
 def test_split_empty_part_not_cataloged(spark, tmp_path):
     """A split part no row falls into (rows only at the hour's edges)
     writes no file and is not cataloged; the parts that are hold all
-    40 rows in disjoint time ranges, and the lake stays fsck-clean."""
+    40 rows in disjoint time ranges, and the lake stays fsck-clean. A
+    dry run lists every planned part: the real outputs are its outputs
+    without the empty parts."""
     from kompactor_spark.compaction import CompactionConfig, compute_split_cuts
     from kompactor_spark.compaction.fsck import fsck_host
 
@@ -326,9 +359,14 @@ def test_split_empty_part_not_cataloged(spark, tmp_path):
     infos = [e["info"] for e in b.files]
     cuts = compute_split_cuts(min(i["min_time"] for i in infos), max(i["max_time"] for i in infos),
                               sum(i["size_bytes"] for i in infos), cfg)
+    times = [t for i in infos for t in pq.read_table(os.path.join(root, i["path"]), columns=["time"])["time"].to_pylist()]
+    filled = {sum(t > c for c in cuts) for t in times}  # parts with a row: (lo, hi] bounds
+    dry = run_job(spark, root, config=cfg, dry_run=True)
     report = run_job(spark, root, config=cfg)
     outs = report.results[0].output_paths
     assert len(outs) < len(cuts) + 1  # at least one part got no rows
+    assert len(dry.results[0].output_paths) == len(cuts) + 1
+    assert outs == [p for i, p in enumerate(dry.results[0].output_paths) if i in filled]
     parts = sorted((f for _, _, _, f in catalog_files(root) if f.path in outs), key=lambda f: f.min_time)
     assert len(parts) == len(outs) >= 2
     assert all("_p" in os.path.basename(f.path) for f in parts)
@@ -512,12 +550,8 @@ def test_expire_snapshots_folds_history(spark, tmp_path):
     identical file manifest (state preserved, history horizon moved);
     fsck stays clean and pre-expiry as_of now raises."""
     from kompactor_spark.compaction.fsck import fsck_host
-    from kompactor_spark.compaction.readers import (
-        expire_snapshots,
-        files_as_of,
-        read_table,
-        snapshot_ids,
-    )
+    from kompactor_spark.compaction.metadata import expire_snapshots
+    from kompactor_spark.compaction.readers import files_as_of, read_table, snapshot_ids
 
     root = str(tmp_path)
     b = FX.LayoutBuilder(root)
