@@ -16,8 +16,9 @@ written in this process, a large one by a Spark write.
 
 B7 fixed (the reference deleted sources BEFORE rewriting metadata): row
 conservation is checked for every group from the staged footers before
-any file moves. Then, group by group, the outputs move into place and
-``metadata.commit`` swaps inputs for outputs and deletes the inputs.
+any file moves. Then every output moves into place, and one
+``metadata.commit`` per run swaps all inputs for outputs and deletes the
+inputs. A failed run commits no group (orphans for fsck); a rerun converges.
 
 Dry-run is real (B1 fixed): the real run's plan and refusals, every
 planned split part as an output (the real run writes none for a part no
@@ -40,6 +41,7 @@ from pyspark.sql import functions as F
 from kompactor_spark.compaction.metadata import (
     TIME_COL,
     ParquetFileInfo,
+    Swap,
     commit,
     footer_time_stats,
     load_manifest,
@@ -159,15 +161,7 @@ class CompactionJob:
 
     def _run_host(self, host: str, plan: CompactionPlan) -> CompactionReport:
         prepared = [self._prepare(g) for g in plan.groups]
-        merges = [m for m in prepared if m.outputs]
-        if self.dry_run:
-            results = [m.result() for m in merges]
-        else:
-            # an unmerged group's missing inputs would stay cataloged, dangling
-            dangling = [p for m in prepared if not m.outputs for p in m.dropped]
-            if dangling:
-                commit(self.data_dir, host, removed=dangling)
-            results = self._merge(host, merges)
+        results = [m.result() for m in prepared if m.outputs] if self.dry_run else self._merge(host, prepared)
         return CompactionReport(
             host=host,
             dry_run=self.dry_run,
@@ -205,10 +199,11 @@ class CompactionJob:
             raise RuntimeError(f"compaction output {self._abs(clash[0])} would overwrite one of its inputs")
         return _Merge(group, inputs, dropped, outputs, cuts)
 
-    def _merge(self, host: str, merges: list[_Merge]) -> list[GroupResult]:
+    def _merge(self, host: str, prepared: list[_Merge]) -> list[GroupResult]:
         """Read every group, write all outputs in one staged write per
-        distinct read schema, check row conservation, then move and
-        commit group by group in plan order."""
+        distinct read schema, check row conservation, land every output,
+        then commit a swap per group in one ``commit`` for the run."""
+        merges = [m for m in prepared if m.outputs]
         t = F.col(TIME_COL)
         first = [0, *itertools.accumulate(len(m.outputs) for m in merges)]  # index of part 0
         by_schema: dict = {}
@@ -236,16 +231,13 @@ class CompactionJob:
                         f"row conservation violated for {m.outputs[0]}: "
                         f"inputs={rows_in} output={rows_out}"
                     )
-            return [self._commit(host, m, files) for m, files in zip(merges, placed)]
-
-    def _commit(self, host: str, m: _Merge, files: dict[str, str]) -> GroupResult:
-        """Move a group's staged outputs into place and swap them for its
-        inputs in the catalog, which deletes the inputs."""
-        added = [
-            # C10: the output keeps the first input's chunk_time
-            dataclasses.replace(land(p, self.data_dir, rel), chunk_time=m.inputs[0].chunk_time)
-            for rel, p in files.items()
-        ]
-        # a missing input's entry goes too, or it stays cataloged, dangling
-        commit(self.data_dir, host, removed=[f.path for f in m.inputs] + m.dropped, added=added)
-        return m.result(added)
+            swaps = []
+            for m, files in zip(merges, placed):
+                # C10: an output keeps its group's first input's chunk_time
+                added = [dataclasses.replace(land(p, self.data_dir, rel), chunk_time=m.inputs[0].chunk_time)
+                         for rel, p in files.items()]
+                # a missing input's entry goes too, or it stays cataloged, dangling
+                swaps.append(Swap(removed=[f.path for f in m.inputs] + m.dropped, added=added))
+        swaps += [Swap(removed=m.dropped) for m in prepared if not m.outputs and m.dropped]
+        commit(self.data_dir, host, swaps)
+        return [m.result(sw.added) for m, sw in zip(merges, swaps)]

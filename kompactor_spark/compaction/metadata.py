@@ -32,13 +32,13 @@ import contextlib
 import dataclasses
 import fcntl
 import glob
-import itertools
 import json
 import os
-import re
 import tempfile
-from collections.abc import Iterable
+from collections.abc import Collection, Iterable
 from dataclasses import dataclass, field
+
+from kompactor_spark.compaction.planner import parse_group_key
 
 TIME_COL = "time"  # the event-time column of every lake file (kompactor.ts:107-111)
 
@@ -242,85 +242,97 @@ def catalog_lock(data_dir: str, host: str):
         yield  # closing the file releases the lock
 
 
-def commit(
-    data_dir: str,
-    host: str,
-    removed: Iterable[str] = (),
-    added: Iterable[ParquetFileInfo] = (),
-    db: int = 0,
-    table: int = 0,
-) -> list[ParquetFileInfo]:
-    """The one catalog writer: drop the ``removed`` paths from every
-    snapshot, upsert ``added``, then delete the removed files, all under
-    ``catalog_lock`` on snapshots re-read inside it. Returns ``added``
-    with their ids.
+@dataclass(frozen=True)
+class Swap:
+    """One change in a ``commit``: ``added`` files take the place of the
+    ``removed`` paths; with nothing removed, they go into (``db``,
+    ``table``) of ``INGEST_SNAPSHOT``."""
+
+    removed: Collection[str] = ()
+    added: Collection[ParquetFileInfo] = ()
+    db: int = 0
+    table: int = 0
+
+
+def commit(data_dir: str, host: str, swaps: list[Swap]) -> list[ParquetFileInfo]:
+    """The one catalog writer: apply ``swaps`` in order, write each
+    changed snapshot once, then delete the removed files, all under one
+    ``catalog_lock`` on snapshots read once inside it. Returns every
+    swap's added files with their ids, in swap order.
 
     - An added path already cataloged is replaced in place wherever it
-      is and keeps its id; any other gets a fresh id above the largest
-      id in any snapshot (B6: the reference reused an input's id).
-    - Added files go into every snapshot table that held a removed file
-      (B4: the rest of the table is kept); with nothing removed they go
-      into (``db``, ``table``) of ``INGEST_SNAPSHOT``.
-    - Only snapshots that changed are rewritten, each atomically, with
-      exact totals.
-    - Then each removed path on disk, unless just added, is deleted and
+      is and keeps its id. Any other gets a fresh id above the largest
+      id in any snapshot, counting up in swap order (B6: the reference
+      reused an input's id), and goes into every snapshot table that
+      held one of its swap's removed files (B4: the rest of the table
+      is kept). A swap that removes only uncataloged paths has no place
+      for new files and refuses the whole commit.
+    - Only changed snapshots are rewritten, atomically, with exact totals.
+    - Then each removed path no longer cataloged is deleted from disk and
       empty dirs are pruned up to ``<host>/dbs``, which stays (C14).
 
     Callers write their new files before the commit, so a crash leaves
     orphans for ``fsck``, never a cataloged path missing on disk (B7).
     """
-    drop = set(removed)
+    if not swaps:
+        return []
     with catalog_lock(data_dir, host):
         snaps = {sp: read_snapshot(sp) for sp in snapshot_paths(data_dir, host)}
-        ids = {f.path: f.id for s in snaps.values() for _, _, f in s.all_files()}
-        next_id = max(ids.values(), default=0)
-        new: dict[str, ParquetFileInfo] = {}
-        for info in added:
-            if info.path not in ids:
-                next_id += 1
-            new[info.path] = dataclasses.replace(info, id=ids.get(info.path, next_id))
+        tables: dict[tuple, dict[str, ParquetFileInfo]] = {}  # (snapshot, db, table) -> files by path
+        held: dict[str, list[tuple]] = {}  # path -> the tables holding it, in snapshot order
+        for sp, snap in snaps.items():
+            for db, tbls in snap.databases:
+                for tid, files in tbls.items():
+                    tables[sp, db, tid] = {f.path: f for f in files}
+                    for f in files:
+                        held.setdefault(f.path, []).append((sp, db, tid))
+        next_id = max((f.id for files in tables.values() for f in files.values()), default=0)
+        out: list[ParquetFileInfo] = []
+        for sw in swaps:
+            new: dict[str, ParquetFileInfo] = {}
+            for info in sw.added:
+                if info.path not in held:
+                    next_id += 1
+                old = held.get(info.path)  # the later snapshot's entry wins
+                new[info.path] = dataclasses.replace(info, id=tables[old[-1]][info.path].id if old else next_id)
+            fresh = [p for p in new if p not in held]
+            targets: dict[tuple, None] = {}  # the tables that held a removed file
+            for p in sw.removed:
+                for loc in held.pop(p, ()):
+                    del tables[loc][p]
+                    targets[loc] = None
+            if fresh and not targets:
+                if sw.removed:
+                    raise RuntimeError(
+                        f"commit: none of the removed files is cataloged for {host}; "
+                        f"{fresh} would be left out of the catalog"
+                    )
+                targets = {(os.path.join(data_dir, host, "snapshots", INGEST_SNAPSHOT), sw.db, sw.table): None}
+            for p, f in new.items():  # in place where held, else into the swap's targets
+                for loc in held.setdefault(p, list(targets)):
+                    tables.setdefault(loc, {})[p] = f
+            out += new.values()
 
         changed: set[str] = set()
-        placed = False  # did any table hold a removed file?
-        for sp, snap in snaps.items():
-            for _db_id, tables in snap.databases:
-                for tid, files in tables.items():
-                    kept = [new.get(f.path, f) for f in files if f.path not in drop]
-                    if len(kept) < len(files):
-                        placed = True
-                        have = {f.path for f in kept}
-                        kept += [f for p, f in new.items() if p not in have]
-                    if kept != files:
-                        tables[tid] = kept
-                        changed.add(sp)
-
-        fresh = [f for p, f in new.items() if p not in ids]
-        if fresh and not placed:
-            if drop:
-                raise RuntimeError(
-                    f"commit: none of the removed files is cataloged for {host}; "
-                    f"{[f.path for f in fresh]} would be left out of the catalog"
-                )
-            target = os.path.join(data_dir, host, "snapshots", INGEST_SNAPSHOT)
-            snap = snaps.setdefault(target, snapshot_from_entries([], writer_id=host))
-            tables = dict(snap.databases).get(db)
-            if tables is None:
-                tables = {}
-                snap.databases.append((db, tables))
-            tables.setdefault(table, []).extend(fresh)
-            changed.add(target)
-
+        for (sp, db, tid), files in tables.items():  # a new table comes last, in swap order
+            snap = snaps.setdefault(sp, snapshot_from_entries([], writer_id=host))
+            if db not in dict(snap.databases):
+                snap.databases.append((db, {}))
+            tbls = dict(snap.databases)[db]
+            if tbls.get(tid) != list(files.values()):
+                tbls[tid] = list(files.values())
+                changed.add(sp)
         for sp in sorted(changed):
             snaps[sp].recompute_totals()
             write_snapshot_atomic(snaps[sp], sp)
 
         dbs = os.path.join(data_dir, host, "dbs")
-        for rel in sorted(drop - new.keys()):
+        for rel in sorted({p for sw in swaps for p in sw.removed} - held.keys()):
             path = os.path.join(data_dir, rel)
             if os.path.exists(path):
                 os.unlink(path)
                 _remove_empty_dirs_upward(os.path.dirname(path), dbs)
-    return list(new.values())
+    return out
 
 
 def expire_snapshots(data_dir: str, host: str) -> dict:
@@ -378,28 +390,17 @@ def _remove_empty_dirs_upward(d: str, stop: str) -> None:
         d = os.path.dirname(d)
 
 
-def lake_files(data_dir: str, host: str) -> list[tuple[int, int, str]]:
-    """``(db, table, path)`` of every Parquet file under
-    ``<host>/dbs/db-N/table-N/``, in path order."""
-    found = []
-    for p in sorted(glob.glob(os.path.join(data_dir, host, "dbs", "**", "*.parquet"), recursive=True)):
-        rel = os.path.relpath(p, data_dir)
-        m = re.search(r"/db-(\d+)/table-(\d+)/", rel)
-        if m:
-            found.append((int(m.group(1)), int(m.group(2)), rel))
-    return found
-
-
 def adopt(data_dir: str, host: str) -> list[ParquetFileInfo]:
     """Catalog the files under ``<host>/dbs`` that ``load_manifest`` does
-    not hold, with one ``commit`` per (db, table): the entry point for
-    taking ownership of files an external ingester wrote. Returns the
-    adopted files with their ids; a second call adopts nothing."""
+    not hold and ``planner.parse_group_key`` reads, in one ``commit`` with
+    a swap per (db, table): the entry point for taking ownership of files
+    an external ingester wrote. Returns the adopted files with their ids;
+    a second call adopts nothing."""
     held = {f.path for _, _, f in load_manifest(data_dir, host)}
-    bare = [e for e in lake_files(data_dir, host) if e[2] not in held]
-    adopted: list[ParquetFileInfo] = []
-    # path order keeps each (db, table) contiguous
-    for (db, table), entries in itertools.groupby(bare, key=lambda e: e[:2]):
-        added = [ParquetFileInfo.from_file(data_dir, rel) for _, _, rel in entries]
-        adopted += commit(data_dir, host, added=added, db=db, table=table)
-    return adopted
+    bare: dict[tuple[int, int], list[ParquetFileInfo]] = {}
+    for p in sorted(glob.glob(os.path.join(data_dir, host, "dbs", "**", "*.parquet"), recursive=True)):
+        rel = os.path.relpath(p, data_dir)
+        key = parse_group_key(host, rel)
+        if key is not None and rel not in held:
+            bare.setdefault(key.table_ids(), []).append(ParquetFileInfo.from_file(data_dir, rel))
+    return commit(data_dir, host, [Swap(added=files, db=db, table=table) for (db, table), files in bare.items()])

@@ -5,13 +5,13 @@ This module alone knows the lake's path grammar (the reference's
 ``validateSourcePath``, D6, kompactor.ts:63-80, defined there but never
 called):
 
-    <host>/dbs/<db>/<table>/<YYYY-MM-DD>/<HH-MM>/<file>   hour level
-    <host>/dbs/<db>/<table>/<YYYY-MM-DD>/<file>           day level
+    <host>/dbs/db-<N>/table-<N>/<YYYY-MM-DD>/<HH-MM>/<file>   hour level
+    <host>/dbs/db-<N>/table-<N>/<YYYY-MM-DD>/<file>           day level
 
 ``parse_group_key`` reads these fixed positions and nothing else; a
 cataloged path of any other shape stays cataloged and readable but is
-never planned. ``GroupKey`` builds the same paths back, for the planner's
-outputs and for every writer of the layout.
+never planned, and a bare one is never adopted. ``GroupKey`` builds the
+same paths back, for the planner's outputs and every lake writer.
 
 Grouping fixes reference bug B5: the reference keyed groups by
 ``date_hour`` only (kompactor.ts:197-198), co-merging files of
@@ -31,15 +31,18 @@ import os
 import re
 from collections import defaultdict
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-from kompactor_spark.compaction.metadata import Entry, ParquetFileInfo
 from kompactor_spark.timeutil import NS_PER_DAY, NS_PER_HOUR, NS_PER_SECOND
+
+if TYPE_CHECKING:  # metadata.adopt reads paths through this module
+    from kompactor_spark.compaction.metadata import Entry, ParquetFileInfo
 
 # Filename grammar (kompactor.ts:86-96): raw WAL files and compacted
 # files at hour (h) or generation/day (g) level; split parts p<i>.
 RAW_FILE_RE = re.compile(r"(\d{10})\.parquet$")
 COMPACTED_FILE_RE = re.compile(r"c_(\d{10})_(\d{10})_[gh]\d+(?:_p\d+)?\.parquet$")
-_DATE_RE = re.compile(r"\d{4}-\d{2}-\d{2}")
+_KEY_DIRS_RE = re.compile(r"db-\d+/table-\d+/\d{4}-\d{2}-\d{2}")  # <db>/<table>/<date>
 _HOUR_DIR_RE = re.compile(r"(\d{2})-\d{2}")
 
 
@@ -96,6 +99,9 @@ class GroupKey:
         dt = datetime.datetime.fromtimestamp(hour_ns // NS_PER_SECOND, tz=datetime.timezone.utc)
         return cls(host, f"db-{db}", f"table-{table}", f"{dt:%Y-%m-%d}", f"{dt.hour:02d}")
 
+    def table_ids(self) -> tuple[int, int]:
+        return int(self.db_seg.removeprefix("db-")), int(self.table_seg.removeprefix("table-"))
+
     def start_ns(self) -> int:
         """UTC start of the key's hour (its day at day level) as an exact
         ns epoch (int math)."""
@@ -112,7 +118,7 @@ def parse_group_key(host: str, file_path: str) -> GroupKey | None:
     """A cataloged path's key: 7 segments give an hour-level key, 6 a
     day-level one (``hour=""``); any other path gives None."""
     parts = file_path.split("/")
-    if len(parts) not in (6, 7) or parts[0] != host or parts[1] != "dbs" or not _DATE_RE.fullmatch(parts[4]):
+    if len(parts) not in (6, 7) or parts[:2] != [host, "dbs"] or not _KEY_DIRS_RE.fullmatch("/".join(parts[2:5])):
         return None
     hour = ""
     if len(parts) == 7:

@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from kompactor_spark.compaction.metadata import commit, load_manifest
+from kompactor_spark.compaction.metadata import Swap, commit, load_manifest
 
 
 @dataclass
@@ -63,6 +63,6 @@ def enforce_retention(
         rep.freed_bytes = sum(expired.values())
         if not dry_run and expired:
             rep.missing = [rel for rel in rep.pruned_paths if not os.path.exists(os.path.join(data_dir, rel))]
-            commit(data_dir, host, removed=rep.pruned_paths)
+            commit(data_dir, host, [Swap(removed=rep.pruned_paths)])
         reports.append(rep)
     return reports

@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, TIME_COL, commit
+from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, TIME_COL, Swap, commit
 from kompactor_spark.compaction.planner import GroupKey
 from kompactor_spark.compaction.writer import land, staged_write
 from kompactor_spark.timeutil import NS_PER_HOUR, ns_bucket
@@ -92,7 +92,7 @@ class IngestJob:
             rels = {path: self._wal_relpath(hour_key, wal) for hour_key, path in staged.items()}
             new_infos = [land(path, self.data_dir, rel) for path, rel in rels.items()]
         if new_infos:
-            commit(self.data_dir, self.host, added=new_infos, db=self.db, table=self.table)
+            commit(self.data_dir, self.host, [Swap(added=new_infos, db=self.db, table=self.table)])
             batch_max = max(i.max_time for i in new_infos)
             self._max_seen_ns = (
                 batch_max if self._max_seen_ns is None else max(self._max_seen_ns, batch_max)

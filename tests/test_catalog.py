@@ -1,8 +1,9 @@
 """The catalog's one code path: ``metadata.load_manifest`` and
-``metadata.commit``. Commit rules, safety against a second process and
-against the compaction job's group threads, the catalog-first order of
-a commit's deletes, and the module-level hook through which a tracer
-counts snapshot reads and writes."""
+``metadata.commit``. Commit rules, safety against a second process, one
+commit per compaction run (one write per changed snapshot, all groups
+or none), the catalog-first order of a commit's deletes, and the
+module-level hook through which a tracer counts snapshot reads and
+writes."""
 
 from __future__ import annotations
 
@@ -10,12 +11,11 @@ import ast
 import glob
 import multiprocessing
 import os
-import sys
 
 import pytest
 
 from kompactor_spark.compaction import metadata
-from kompactor_spark.compaction.metadata import ParquetFileInfo, commit, load_manifest
+from kompactor_spark.compaction.metadata import ParquetFileInfo, Swap, commit, load_manifest
 
 from tests import fixtures_compaction as FX
 
@@ -35,15 +35,18 @@ def _info(name: str) -> ParquetFileInfo:
 def test_commit_rules(tmp_path):
     """Pure adds create the ingest snapshot; a cataloged path is replaced
     in place and keeps its id; added files go into every table that held
-    a removed one; fresh ids start above the largest id."""
+    a removed one; fresh ids start above the largest id and count up in
+    swap order; an empty commit reads nothing."""
     root = str(tmp_path)
-    [a, b] = commit(root, FX.HOST, added=[_info("a"), _info("b")], db=0, table=3)
+    assert commit(root, FX.HOST, []) == []
+    assert not os.path.exists(os.path.join(root, FX.HOST))
+    [a, b] = commit(root, FX.HOST, [Swap(added=[_info("a")], db=0, table=3), Swap(added=[_info("b")], db=0, table=3)])
     assert (a.id, b.id) == (1, 2)
     assert [p for p in os.listdir(os.path.join(root, FX.HOST, "snapshots")) if p.endswith(".json")] == [
         metadata.INGEST_SNAPSHOT
     ]
 
-    [a2] = commit(root, FX.HOST, added=[ParquetFileInfo(**{**vars(_info("a")), "row_count": 11})])
+    [a2] = commit(root, FX.HOST, [Swap(added=[ParquetFileInfo(**{**vars(_info("a")), "row_count": 11})])])
     assert a2.id == 1
     manifest = load_manifest(root, FX.HOST)
     assert [(f.path, f.id, f.row_count) for _, _, f in manifest] == [
@@ -54,7 +57,7 @@ def test_commit_rules(tmp_path):
     # a second snapshot holding b: the swap lands in both snapshots
     second = metadata.snapshot_from_entries([(0, 3, b)], writer_id=FX.HOST)
     metadata.write_snapshot_atomic(second, os.path.join(root, FX.HOST, "snapshots", "0002.info.json"))
-    [c] = commit(root, FX.HOST, removed=[b.path], added=[_info("c")])
+    [c] = commit(root, FX.HOST, [Swap(removed=[b.path], added=[_info("c")])])
     assert c.id == 3
     for sp in metadata.snapshot_paths(root, FX.HOST):
         snap = metadata.read_snapshot(sp)
@@ -62,8 +65,10 @@ def test_commit_rules(tmp_path):
         assert b.path not in paths and c.path in paths
         assert snap.row_count == sum(f.row_count for _, _, f in snap.all_files())
 
+    # one swap with nowhere to go refuses the whole commit
     with pytest.raises(RuntimeError, match="none of the removed files"):
-        commit(root, FX.HOST, removed=[b.path], added=[_info("d")])
+        commit(root, FX.HOST, [Swap(removed=[c.path], added=[_info("e")]), Swap(removed=[b.path], added=[_info("d")])])
+    assert {f.path for _, _, f in load_manifest(root, FX.HOST)} == {a.path, c.path}
 
 
 def test_load_manifest_as_of_and_later_wins(tmp_path):
@@ -82,7 +87,7 @@ def test_load_manifest_as_of_and_later_wins(tmp_path):
 
 def _commit_many(root: str, tag: str, n: int) -> None:
     for i in range(n):
-        commit(root, FX.HOST, added=[_info(f"{tag}{i:04d}")], db=0, table=3)
+        commit(root, FX.HOST, [Swap(added=[_info(f"{tag}{i:04d}")], db=0, table=3)])
 
 
 def test_commit_is_process_safe(tmp_path):
@@ -100,10 +105,26 @@ def test_commit_is_process_safe(tmp_path):
     assert len({f.id for f in files}) == 400
 
 
-def test_parallel_groups_commit_every_output(spark, tmp_path):
-    """Eight hour groups compacted in one run, with a short thread
-    switch interval: every output is cataloged once, with its own id,
-    and nothing else is."""
+def _count_catalog_calls(monkeypatch) -> dict[str, int]:
+    """From now on, count the calls of ``metadata.read_snapshot`` and
+    ``metadata.write_snapshot_atomic``, patched where a tracer patches
+    them."""
+    calls = {"read": 0, "write": 0}
+    for kind, name in (("read", "read_snapshot"), ("write", "write_snapshot_atomic")):
+
+        def wrapped(*args, _kind=kind, _fn=getattr(metadata, name), **kwargs):
+            calls[_kind] += 1
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(metadata, name, wrapped)
+    return calls
+
+
+def test_parallel_groups_commit_every_output(spark, tmp_path, monkeypatch):
+    """Eight hour groups compacted in one run of one snapshot make one
+    commit: every output is cataloged once, with its own id, nothing
+    else is, and the run reads the snapshot twice (plan and commit) and
+    writes it once."""
     from kompactor_spark.compaction import CompactionJob
     from kompactor_spark.compaction.fsck import fsck_host
 
@@ -118,12 +139,9 @@ def test_parallel_groups_commit_every_output(spark, tmp_path):
             wal += 1
     b.write_snapshot()
 
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-5)
-    try:
-        [report] = CompactionJob(spark, root, [FX.HOST]).run()
-    finally:
-        sys.setswitchinterval(interval)
+    calls = _count_catalog_calls(monkeypatch)
+    [report] = CompactionJob(spark, root, [FX.HOST]).run()
+    assert calls == {"read": 2, "write": 1}
     assert report.compacted_groups == 8
     outputs = {p for r in report.results for p in r.output_paths}
     files = [f for _, _, f in load_manifest(root, FX.HOST)]
@@ -143,17 +161,7 @@ def test_every_catalog_path_goes_through_the_metadata_module(spark, tmp_path, mo
     from kompactor_spark.compaction.retention import enforce_retention
     from kompactor_spark.streaming.ingest import IngestJob
 
-    calls = {"read": 0, "write": 0}
-
-    def counting(kind, fn):
-        def wrapped(*args, **kwargs):
-            calls[kind] += 1
-            return fn(*args, **kwargs)
-
-        return wrapped
-
-    monkeypatch.setattr(metadata, "read_snapshot", counting("read", metadata.read_snapshot))
-    monkeypatch.setattr(metadata, "write_snapshot_atomic", counting("write", metadata.write_snapshot_atomic))
+    calls = _count_catalog_calls(monkeypatch)
 
     root = str(tmp_path)
     b = FX.multi_hour(root)  # hours 10, 11, 12 with 1, 2, 4 files
@@ -181,49 +189,66 @@ def test_every_catalog_path_goes_through_the_metadata_module(spark, tmp_path, mo
     assert fsck_host(root, FX.HOST).ok
 
 
-@pytest.mark.parametrize("caller", ["compaction", "retention"])
+@pytest.mark.parametrize("caller", ["compaction", "retention", "compaction_multi_table", "land_fails"])
 def test_failed_snapshot_write_deletes_nothing(spark, tmp_path, monkeypatch, caller):
     """A commit whose snapshot write fails raises before it deletes a
     file: every input stays on disk and cataloged and readers see the
-    same rows. Once the write works again, a rerun converges fsck-clean
-    (a failed compaction may leave its landed outputs as orphans)."""
-    from kompactor_spark.compaction import CompactionJob
+    same rows. A compaction run makes one commit for all its groups, so
+    a failed run commits none of them, also when moving the last group's
+    output fails before the commit (``land_fails``): the outputs landed
+    so far are only orphans. Once the fault is gone, a rerun converges
+    fsck-clean with every group compacted."""
+    from kompactor_spark.compaction import CompactionJob, job
     from kompactor_spark.compaction.fsck import fsck_host
     from kompactor_spark.compaction.readers import read_table
     from kompactor_spark.compaction.retention import enforce_retention
 
     root = str(tmp_path)
-    b = FX.basic_hour(root)
+    b = FX.basic_hour(root) if caller in ("compaction", "retention") else FX.multi_table(root)
     inputs = {e["info"]["path"] for e in b.files}
+    tables = sorted({(e["db"], e["table"]) for e in b.files})
     cutoff = sorted(e["info"]["max_time"] for e in b.files)[1]  # expires one file
 
     def run():
-        if caller == "compaction":
-            return CompactionJob(spark, root, [FX.HOST]).run()
-        return enforce_retention(root, [FX.HOST], cutoff_ns=cutoff)
+        if caller == "retention":
+            return enforce_retention(root, [FX.HOST], cutoff_ns=cutoff)
+        return CompactionJob(spark, root, [FX.HOST]).run()
 
     def rows():
-        return sorted(tuple(r) for r in read_table(spark, root, FX.HOST, 0, 3).collect())
+        return sorted((db, t, *r) for db, t in tables for r in read_table(spark, root, FX.HOST, db, t).collect())
 
-    def failing(meta, path):
-        raise OSError("injected snapshot write failure")
+    def failing(*args):
+        raise OSError("injected fault")
+
+    real_land = job.land
+
+    def land_but_the_last_group(staged, data_dir, rel):
+        if f"/db-{tables[-1][0]}/table-{tables[-1][1]}/" in rel:
+            failing()
+        return real_land(staged, data_dir, rel)
 
     before = rows()
-    monkeypatch.setattr(metadata, "write_snapshot_atomic", failing)
+    if caller == "land_fails":
+        monkeypatch.setattr(job, "land", land_but_the_last_group)
+    else:
+        monkeypatch.setattr(metadata, "write_snapshot_atomic", failing)
     with pytest.raises(OSError, match="injected"):
         run()
     assert all(os.path.exists(os.path.join(root, p)) for p in inputs)
     assert {f.path for _, _, f in load_manifest(root, FX.HOST)} == inputs
     assert rows() == before
-    assert not fsck_host(root, FX.HOST).dangling
+    report = fsck_host(root, FX.HOST)
+    assert not report.dangling
+    landed = {"retention": 0, "land_fails": len(tables) - 1}.get(caller, len(tables))
+    assert len(report.orphans) == landed and all("/c_" in p for p in report.orphans)
 
     monkeypatch.undo()
     [rep] = run()
     assert fsck_host(root, FX.HOST).ok
-    if caller == "compaction":
-        assert rep.compacted_groups == 1 and rows() == before
-    else:
+    if caller == "retention":
         assert len(rep.pruned_paths) == 1 and len(rows()) == len(before) - 50
+    else:
+        assert rep.compacted_groups == len(tables) and rows() == before
 
 
 def test_only_the_metadata_module_deletes_lake_files():

@@ -146,6 +146,11 @@ def test_multi_table_isolation(spark, tmp_path):
     assert report.compacted_groups == 3
     keys = {r.key[1:3] for r in report.results}
     assert keys == {("db-0", "table-3"), ("db-0", "table-4"), ("db-1", "table-7")}
+    # one commit, placed per group: each output sits under its own
+    # (db, table) and nowhere else
+    entries = sorted((db, table, f.path) for _, db, table, f in catalog_files(root))
+    assert [e[:2] for e in entries] == [(0, 3), (0, 4), (1, 7)]
+    assert all(f"/db-{db}/table-{table}/" in p and "/c_" in p for db, table, p in entries)
 
 
 def test_recompact_picks_up_compacted(spark, tmp_path):
@@ -402,6 +407,7 @@ _H = FX.HOST + "/dbs/db-0/table-3/2025-01-26"
         (f"{FX.HOST}/dbs/db-0/table-3/latest/14-00/0000000001.parquet", None),  # not a date
         (f"{_H}/14/0000000001.parquet", None),  # hour dir not HH-MM
         (f"{_H}/14-00/extra/0000000001.parquet", None),  # 8 segments
+        (f"{FX.HOST}/dbs/mydb/table-3/2025-01-26/14-00/0000000001.parquet", None),  # db not db-N
     ],
 )
 def test_parse_group_key_grammar(path, hour):
@@ -456,7 +462,7 @@ def test_day_level_files_merge_at_generation_only(spark, tmp_path):
 
 def test_parallel_group_execution(spark, tmp_path):
     """Several groups compacted in one run: identical results +
-    invariants; fresh ids unique across the groups' commits."""
+    invariants; fresh ids unique across the run's groups."""
     root = str(tmp_path / "par")
     FX.multi_hour(root)
     before = rows_by_table(root)
@@ -464,7 +470,7 @@ def test_parallel_group_execution(spark, tmp_path):
     assert report.compacted_groups == 2
     assert rows_by_table(root) == before
     assert_invariants(root)
-    # fresh ids unique across concurrently-compacted groups
+    # fresh ids unique across the groups of one commit
     ids = [f.id for _, _, _, f in catalog_files(root)]
     assert len(ids) == len(set(ids))
 
@@ -579,7 +585,8 @@ def test_expire_snapshots_folds_history(spark, tmp_path):
 def test_stats_less_file_cataloged_and_checked(tmp_path):
     """A file written without column statistics still gets its true
     time range: adopt reads the time column instead of cataloging
-    [0, 0], and fsck_host checks the range against it."""
+    [0, 0], and fsck_host checks the range against it. A file outside
+    the planner's path grammar is not adopted and stays an orphan."""
     from kompactor_spark.compaction.fsck import fsck_host
     from kompactor_spark.compaction.metadata import adopt, write_snapshot_atomic
 
@@ -590,10 +597,13 @@ def test_stats_less_file_cataloged_and_checked(tmp_path):
     rows = FX.make_rows(2, FX.BASE_NS, 2000 * FX.NS, seed=1)
     pq.write_table(rows, os.path.join(root, rel), write_statistics=False)
     times = rows.column("time").to_pylist()
+    # outside the planner's path grammar: never planned, so never adopted
+    stray = f"{FX.HOST}/dbs/db-0/table-3/0000000002.parquet"
+    pq.write_table(rows, os.path.join(root, stray))
 
     [info] = adopt(root, FX.HOST)
     assert (info.min_time, info.max_time, info.row_count) == (min(times), max(times), 2)
-    assert fsck_host(root, FX.HOST).ok
+    assert fsck_host(root, FX.HOST).orphans == [stray]
 
     snap_path = os.path.join(root, FX.HOST, "snapshots", "0001.info.json")
     snap = read_snapshot(snap_path)
