@@ -63,8 +63,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--bootstrap",
         action="store_true",
-        help="before compacting, catalog the <host>/dbs files the catalog does not hold "
-        "(footer stats only, no data scan; a second run adopts nothing)",
+        help="before compacting, catalog the <host>/dbs files the catalog does not hold (footer stats only, "
+        "no data scan; a second run adopts nothing); rerun a failed compaction first, or its c_ outputs duplicate rows",
     )
     p.add_argument(
         "--retention-cutoff-ns",

@@ -233,10 +233,9 @@ class CompactionJob:
                     )
             swaps = []
             for m, files in zip(merges, placed):
-                # C10: an output keeps its group's first input's chunk_time
+                # C10: outputs keep the first input's chunk_time; a missing input's entry goes too (else dangling)
                 added = [dataclasses.replace(land(p, self.data_dir, rel), chunk_time=m.inputs[0].chunk_time)
                          for rel, p in files.items()]
-                # a missing input's entry goes too, or it stays cataloged, dangling
                 swaps.append(Swap(removed=[f.path for f in m.inputs] + m.dropped, added=added))
         swaps += [Swap(removed=m.dropped) for m in prepared if not m.outputs and m.dropped]
         commit(self.data_dir, host, swaps)

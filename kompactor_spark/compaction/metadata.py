@@ -395,7 +395,8 @@ def adopt(data_dir: str, host: str) -> list[ParquetFileInfo]:
     not hold and ``planner.parse_group_key`` reads, in one ``commit`` with
     a swap per (db, table): the entry point for taking ownership of files
     an external ingester wrote. Returns the adopted files with their ids;
-    a second call adopts nothing."""
+    a second call adopts nothing. Rerun a failed compaction first, or its
+    bare ``c_…`` outputs are adopted beside their inputs, duplicating rows."""
     held = {f.path for _, _, f in load_manifest(data_dir, host)}
     bare: dict[tuple[int, int], list[ParquetFileInfo]] = {}
     for p in sorted(glob.glob(os.path.join(data_dir, host, "dbs", "**", "*.parquet"), recursive=True)):

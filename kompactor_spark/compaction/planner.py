@@ -42,7 +42,7 @@ if TYPE_CHECKING:  # metadata.adopt reads paths through this module
 # files at hour (h) or generation/day (g) level; split parts p<i>.
 RAW_FILE_RE = re.compile(r"(\d{10})\.parquet$")
 COMPACTED_FILE_RE = re.compile(r"c_(\d{10})_(\d{10})_[gh]\d+(?:_p\d+)?\.parquet$")
-_KEY_DIRS_RE = re.compile(r"db-\d+/table-\d+/\d{4}-\d{2}-\d{2}")  # <db>/<table>/<date>
+_KEY_DIRS_RE = re.compile(r"db-\d+/table-\d+/\d{4}-\d{2}-\d{2}")  # the layout's dirs (SURVEY.md §1.1, FIXTURES.md §2)
 _HOUR_DIR_RE = re.compile(r"(\d{2})-\d{2}")
 
 

@@ -603,7 +603,8 @@ def test_stats_less_file_cataloged_and_checked(tmp_path):
 
     [info] = adopt(root, FX.HOST)
     assert (info.min_time, info.max_time, info.row_count) == (min(times), max(times), 2)
-    assert fsck_host(root, FX.HOST).orphans == [stray]
+    report = fsck_host(root, FX.HOST)
+    assert report.orphans == [stray] and not report.stat_mismatches and not report.dangling
 
     snap_path = os.path.join(root, FX.HOST, "snapshots", "0001.info.json")
     snap = read_snapshot(snap_path)
