@@ -10,7 +10,7 @@ Catalyst-optimized declarative plans, Structured Streaming, pandas UDFs
 only where built-ins cannot express the semantics.
 """
 
-from kompactor_spark.compaction import CompactionConfig, CompactionJob
+from kompactor_spark.compaction import CompactionJob
 from kompactor_spark.compaction.fsck import fsck_host
 from kompactor_spark.compaction.retention import enforce_retention
 from kompactor_spark import functions as chsql  # ClickHouse-compat surface (R5)
@@ -19,7 +19,6 @@ from kompactor_spark.sql_api import run_sql
 from kompactor_spark.tables import TABLES, load_table
 
 __all__ = [
-    "CompactionConfig",
     "CompactionJob",
     "TABLES",
     "chsql",

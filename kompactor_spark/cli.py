@@ -21,8 +21,9 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from kompactor_spark.compaction import CompactionConfig, CompactionJob
+from kompactor_spark.compaction import CompactionJob
 from kompactor_spark.compaction.metadata import TIME_COL
+from kompactor_spark.timeutil import NS_PER_HOUR
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -43,8 +44,8 @@ def build_parser() -> argparse.ArgumentParser:
         "--now-ns",
         type=int,
         default=None,
-        help="generation-pass clock (ns epoch); days newer than 24h before this are skipped. "
-        "Omit to compact every day (backfill).",
+        help="generation-pass clock (ns epoch); days newer than --time-window-hours before "
+        "this are skipped. Omit to compact every day (backfill).",
     )
     p.add_argument(
         "--time-window-hours",
@@ -311,14 +312,13 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 files = adopt(args.data_dir, host)
                 print(f"{host}: bootstrapped catalog ({sum(f.row_count for f in files)} rows, "
                       f"{len(files)} files)")
-        job = CompactionJob(
-            spark,
-            args.data_dir,
-            hosts,
-            config=CompactionConfig(time_window_hours=args.time_window_hours),
-            dry_run=args.dry_run,
-        )
-        reports = job.run_generation(now_ns=args.now_ns) if args.generation else job.run()
+        job = CompactionJob(spark, args.data_dir, hosts, dry_run=args.dry_run)
+        if args.generation:
+            # D4: a day is cold once its newest row is a full window before the clock
+            before_ns = None if args.now_ns is None else args.now_ns - args.time_window_hours * NS_PER_HOUR
+            reports = job.run_generation(before_ns=before_ns)
+        else:
+            reports = job.run()
         for rep in reports:
             mode = "dry-run" if rep.dry_run else "compacted"
             print(

@@ -10,7 +10,6 @@ from kompactor_spark.compaction.job import CompactionJob
 from kompactor_spark.compaction.metadata import ParquetFileInfo, SnapshotMetadata, expire_snapshots
 from kompactor_spark.compaction.readers import files_as_of, read_table, snapshot_ids
 from kompactor_spark.compaction.planner import (
-    CompactionConfig,
     CompactionPlan,
     compute_split_cuts,
     plan_compaction,
@@ -19,7 +18,6 @@ from kompactor_spark.compaction.planner import (
 
 __all__ = [
     "CompactionJob",
-    "CompactionConfig",
     "CompactionPlan",
     "ParquetFileInfo",
     "SnapshotMetadata",

@@ -43,11 +43,9 @@ from kompactor_spark.compaction.metadata import (
     ParquetFileInfo,
     Swap,
     commit,
-    footer_time_stats,
     load_manifest,
 )
 from kompactor_spark.compaction.planner import (
-    CompactionConfig,
     CompactionGroup,
     CompactionPlan,
     compute_split_cuts,
@@ -120,13 +118,11 @@ class CompactionJob:
         spark: SparkSession,
         data_dir: str,
         hosts: list[str],
-        config: CompactionConfig | None = None,
         dry_run: bool = False,
     ):
         self.spark = spark
         self.data_dir = data_dir
         self.hosts = hosts
-        self.config = config or CompactionConfig()
         self.dry_run = dry_run
 
     # -- discovery ---------------------------------------------------------
@@ -148,14 +144,14 @@ class CompactionJob:
             for h in self.hosts
         ]
 
-    def run_generation(self, now_ns: int | None = None) -> list[CompactionReport]:
+    def run_generation(self, before_ns: int | None = None) -> list[CompactionReport]:
         """K2: merge each eligible day's files (hour-compacted + stray
         raw) into generation-level ``c_…_g<day>`` outputs with size
-        cutoffs + splits (reference D1-D4/D8). ``now_ns`` gates on the
-        24 h window; None = backfill every day."""
+        cutoffs + splits (reference D1-D4/D8). A day whose newest row is
+        after ``before_ns`` is skipped; None = backfill every day."""
         self.validate_directories()
         return [
-            self._run_host(h, plan_generation(h, load_manifest(self.data_dir, h), self.config, now_ns=now_ns))
+            self._run_host(h, plan_generation(h, load_manifest(self.data_dir, h), before_ns=before_ns))
             for h in self.hosts
         ]
 
@@ -189,7 +185,7 @@ class CompactionJob:
 
         tmin_in = min(f.min_time for f in inputs)
         tmax_in = max(f.max_time for f in inputs)
-        cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes, self.config)
+        cuts = compute_split_cuts(tmin_in, tmax_in, group.total_size_bytes)
         outputs = [group.output_relpath(i) for i in range(len(cuts) + 1)] if cuts else [group.output_relpath()]
         # Writing over an input and then deleting the inputs would lose
         # the output too (a replayed WAL file named after a c_ file's
@@ -218,14 +214,22 @@ class CompactionJob:
             for dfs in by_schema.values():
                 union = functools.reduce(DataFrame.union, dfs)
                 staged.update(stack.enter_context(staged_write(union, _OUTPUT, self.data_dir, host)))
-            # a split part no row falls into stages no file
+            # each output's entry, read once from its staged footer; a split
+            # part no row falls into stages no file. C10: outputs keep the
+            # first input's chunk_time.
             placed = [
-                {rel: staged[str(i)] for i, rel in enumerate(m.outputs, start=base) if str(i) in staged}
+                {
+                    staged[str(i)]: dataclasses.replace(
+                        ParquetFileInfo.from_file(staged[str(i)], rel), chunk_time=m.inputs[0].chunk_time
+                    )
+                    for i, rel in enumerate(m.outputs, start=base)
+                    if str(i) in staged
+                }
                 for m, base in zip(merges, first)
             ]
             for m, files in zip(merges, placed):
                 rows_in = sum(f.row_count for f in m.inputs)
-                rows_out = sum(footer_time_stats(p)[0] for p in files.values())
+                rows_out = sum(f.row_count for f in files.values())
                 if rows_in != rows_out:
                     raise RuntimeError(
                         f"row conservation violated for {m.outputs[0]}: "
@@ -233,10 +237,10 @@ class CompactionJob:
                     )
             swaps = []
             for m, files in zip(merges, placed):
-                # C10: outputs keep the first input's chunk_time; a missing input's entry goes too (else dangling)
-                added = [dataclasses.replace(land(p, self.data_dir, rel), chunk_time=m.inputs[0].chunk_time)
-                         for rel, p in files.items()]
-                swaps.append(Swap(removed=[f.path for f in m.inputs] + m.dropped, added=added))
+                for p, f in files.items():
+                    land(p, self.data_dir, f.path)
+                # a missing input's entry goes too (else dangling)
+                swaps.append(Swap(removed=[f.path for f in m.inputs] + m.dropped, added=list(files.values())))
         swaps += [Swap(removed=m.dropped) for m in prepared if not m.outputs and m.dropped]
         commit(self.data_dir, host, swaps)
         return [m.result(sw.added) for m, sw in zip(merges, swaps)]

@@ -68,16 +68,15 @@ class ParquetFileInfo:
         )
 
     @classmethod
-    def from_file(cls, data_dir: str, rel: str) -> ParquetFileInfo:
-        """The entry of the file at ``data_dir/rel``: its real size (B6)
-        and its footer's rows and time range (0 for a file with no rows).
-        ``commit`` assigns the id."""
-        abs_path = os.path.join(data_dir, rel)
-        rows, tmin, tmax = footer_time_stats(abs_path)
+    def from_file(cls, path: str, rel: str) -> ParquetFileInfo:
+        """The entry cataloging the file at ``path`` as ``rel``: its real
+        size (B6) and its footer's rows and time range (0 for a file with
+        no rows). ``commit`` assigns the id."""
+        rows, tmin, tmax = footer_time_stats(path)
         return cls(
             id=0,
             path=rel,
-            size_bytes=os.path.getsize(abs_path),
+            size_bytes=os.path.getsize(path),
             row_count=rows,
             chunk_time=tmin or 0,
             min_time=tmin or 0,
@@ -193,7 +192,8 @@ def snapshot_id(path: str) -> int:
     return int(os.path.basename(path).split(".")[0])
 
 
-# Pure adds (ingest) land in this snapshot, created on first use.
+# Pure adds (ingest, adopt) go into the snapshot with the largest id;
+# on a host with no snapshot yet, into this one.
 INGEST_SNAPSHOT = "0001.info.json"
 
 Entry = tuple[int, int, ParquetFileInfo]  # (db_id, table_id, file)
@@ -246,7 +246,8 @@ def catalog_lock(data_dir: str, host: str):
 class Swap:
     """One change in a ``commit``: ``added`` files take the place of the
     ``removed`` paths; with nothing removed, they go into (``db``,
-    ``table``) of ``INGEST_SNAPSHOT``."""
+    ``table``) of the newest snapshot (``INGEST_SNAPSHOT`` on a host with
+    none), so no older ``as_of`` sees them."""
 
     removed: Collection[str] = ()
     added: Collection[ParquetFileInfo] = ()
@@ -278,6 +279,7 @@ def commit(data_dir: str, host: str, swaps: list[Swap]) -> list[ParquetFileInfo]
         return []
     with catalog_lock(data_dir, host):
         snaps = {sp: read_snapshot(sp) for sp in snapshot_paths(data_dir, host)}
+        newest = max(snaps, key=snapshot_id, default=os.path.join(data_dir, host, "snapshots", INGEST_SNAPSHOT))
         tables: dict[tuple, dict[str, ParquetFileInfo]] = {}  # (snapshot, db, table) -> files by path
         held: dict[str, list[tuple]] = {}  # path -> the tables holding it, in snapshot order
         for sp, snap in snaps.items():
@@ -307,7 +309,7 @@ def commit(data_dir: str, host: str, swaps: list[Swap]) -> list[ParquetFileInfo]
                         f"commit: none of the removed files is cataloged for {host}; "
                         f"{fresh} would be left out of the catalog"
                     )
-                targets = {(os.path.join(data_dir, host, "snapshots", INGEST_SNAPSHOT), sw.db, sw.table): None}
+                targets = {(newest, sw.db, sw.table): None}
             for p, f in new.items():  # in place where held, else into the swap's targets
                 for loc in held.setdefault(p, list(targets)):
                     tables.setdefault(loc, {})[p] = f
@@ -403,5 +405,5 @@ def adopt(data_dir: str, host: str) -> list[ParquetFileInfo]:
         rel = os.path.relpath(p, data_dir)
         key = parse_group_key(host, rel)
         if key is not None and rel not in held:
-            bare.setdefault(key.table_ids(), []).append(ParquetFileInfo.from_file(data_dir, rel))
+            bare.setdefault(key.table_ids(), []).append(ParquetFileInfo.from_file(p, rel))
     return commit(data_dir, host, [Swap(added=files, db=db, table=table) for (db, table), files in bare.items()])

@@ -17,9 +17,11 @@ Grouping fixes reference bug B5: the reference keyed groups by
 ``date_hour`` only (kompactor.ts:197-198), co-merging files of
 different dbs/tables; we key by (host, db, table, date, hour).
 
-Policy constants implement the reference's declared-but-dead intent
-(kompactor.ts:26-41,53-57 — SURVEY §2.A.3 D1-D4/D8): 100 MiB target,
-30/130 MiB cutoffs, 70/30 time split, 24 h generation window.
+The size policy is the reference's declared-but-dead intent as two
+constants (kompactor.ts:38-40, SURVEY §2.A.3 D1-D3): a projected output
+above ``LARGE_CUTOFF_BYTES`` splits 70/30 by time (``SPLIT_PERCENT``).
+The generation window (D4, kompactor.ts:41) is the caller's cutoff, as
+the hour pass's is.
 """
 
 from __future__ import annotations
@@ -45,28 +47,10 @@ COMPACTED_FILE_RE = re.compile(r"c_(\d{10})_(\d{10})_[gh]\d+(?:_p\d+)?\.parquet$
 _KEY_DIRS_RE = re.compile(r"db-\d+/table-\d+/\d{4}-\d{2}-\d{2}")  # the layout's dirs (SURVEY.md §1.1, FIXTURES.md §2)
 _HOUR_DIR_RE = re.compile(r"(\d{2})-\d{2}")
 
-
-@dataclass
-class CompactionConfig:
-    """The planner's policy values D1-D4 (kompactor.ts:38-41)."""
-
-    max_desired_file_size_bytes: int = 100 * 1024 * 1024  # D1
-    percentage_max_file_size: int = 30  # D2
-    split_percentage: int = 70  # D3
-    time_window_hours: int = 24  # D4
-
-    @property
-    def small_cutoff_bytes(self) -> int:
-        """Files below this are 'small' → always worth compacting."""
-        return self.max_desired_file_size_bytes * self.percentage_max_file_size // 100
-
-    @property
-    def large_cutoff_bytes(self) -> int:
-        """Projected outputs above this get a 70/30 time split."""
-        return (
-            self.max_desired_file_size_bytes
-            + self.max_desired_file_size_bytes * self.percentage_max_file_size // 100
-        )
+# D1 + D2 (kompactor.ts:38-39): the 100 MiB target plus 30 %; a projected
+# output above this splits, and a generation file at or above it is full.
+LARGE_CUTOFF_BYTES = 130 * 1024 * 1024
+SPLIT_PERCENT = 70  # D3 (kompactor.ts:40): the leading part of a split, by time
 
 
 def extract_wal_sequence(filename: str) -> int:
@@ -202,25 +186,24 @@ def plan_compaction(
     return CompactionPlan(groups=groups, skipped_singletons=skipped)
 
 
-def compute_split_cuts(
-    min_time: int, max_time: int, total_bytes: int, config: CompactionConfig
-) -> list[int]:
+def compute_split_cuts(min_time: int, max_time: int, total_bytes: int) -> list[int]:
     """Split points for an oversized output (reference D3 intent,
-    kompactor.ts:40): while the projected output exceeds the large
-    cutoff, cut the remaining time range at split_percentage — the
-    leading part targets ~max_desired size, the 30% tail is re-examined.
+    kompactor.ts:40): while the projected output exceeds
+    ``LARGE_CUTOFF_BYTES``, cut the remaining time range at
+    ``SPLIT_PERCENT`` — the leading part targets ~100 MiB, the 30% tail
+    is re-examined.
     Byte density is assumed uniform over time (the only stat available
     without scanning). Returns [] when no split is needed. Cut points
     use exact int math (B3 discipline).
     """
     cuts: list[int] = []
     lo, remaining = min_time, total_bytes
-    while remaining > config.large_cutoff_bytes and lo < max_time:
-        cut = lo + (max_time - lo) * config.split_percentage // 100
+    while remaining > LARGE_CUTOFF_BYTES and lo < max_time:
+        cut = lo + (max_time - lo) * SPLIT_PERCENT // 100
         if cut <= lo or cut >= max_time:
             break
         cuts.append(cut)
-        remaining -= remaining * config.split_percentage // 100
+        remaining -= remaining * SPLIT_PERCENT // 100
         lo = cut
     return cuts
 
@@ -230,27 +213,21 @@ def is_generation_file(filename: str) -> bool:
     return bool(m) and "_g" in os.path.basename(filename)[m.start() : m.end()]
 
 
-def plan_generation(
-    host: str,
-    manifest: list[Entry],
-    config: CompactionConfig,
-    now_ns: int | None = None,
-) -> CompactionPlan:
+def plan_generation(host: str, manifest: list[Entry], before_ns: int | None = None) -> CompactionPlan:
     """Group ALL of a day's files (hour-compacted + stray raw) by
-    (host, db, table, date). A day is eligible when its newest data is
-    older than the compaction window (time_window_hours before now_ns) —
-    pass now_ns=None to compact every day (manual/backfill mode).
-    Files already at generation level and >= large cutoff are left
-    alone (D2: no value re-writing a full-size file)."""
-    window_ns = config.time_window_hours * NS_PER_HOUR
+    (host, db, table, date). A day whose newest row is after
+    ``before_ns`` is skipped — the caller's clock minus the generation
+    window (D4) — and None compacts every day (backfill). Files already
+    at generation level and >= ``LARGE_CUTOFF_BYTES`` are left alone
+    (D2: no value re-writing a full-size file)."""
     groups, skipped = [], 0
     for key, day_files in _group(host, manifest, by_day=True).items():
         files = [
             f
             for f in day_files
-            if not (is_generation_file(f.path) and f.size_bytes >= config.large_cutoff_bytes)
+            if not (is_generation_file(f.path) and f.size_bytes >= LARGE_CUTOFF_BYTES)
         ]
-        if now_ns is not None and files and max(f.max_time for f in files) > now_ns - window_ns:
+        if before_ns is not None and files and max(f.max_time for f in files) > before_ns:
             skipped += 1
             continue
         if len(files) <= 1:

@@ -55,7 +55,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 
-from kompactor_spark.compaction.metadata import TIME_COL, ParquetFileInfo
+from kompactor_spark.compaction.metadata import TIME_COL
 
 LOCAL_WRITE_MAX_BYTES = 8 * 1024 * 1024  # largest size estimate written in-process
 ROW_GROUP_ROWS = 100_000  # R4: the reference's ROW_GROUP_SIZE
@@ -128,9 +128,10 @@ def _write_local(table: pa.Table, key: str, staging: str) -> None:
         )
 
 
-def land(staged_path: str, data_dir: str, rel: str) -> ParquetFileInfo:
-    """Move a staged file to ``data_dir/rel``; returns its entry."""
+def land(staged_path: str, data_dir: str, rel: str) -> None:
+    """Move a staged file to ``data_dir/rel``. Callers take its entry
+    (``ParquetFileInfo.from_file``) from the staged file, before any
+    file moves."""
     abs_path = os.path.join(data_dir, rel)
     os.makedirs(os.path.dirname(abs_path), exist_ok=True)
     os.replace(staged_path, abs_path)
-    return ParquetFileInfo.from_file(data_dir, rel)

@@ -71,6 +71,12 @@ def to_units(col: Column | str, scale: int = 2) -> Column:
     return F.round(c * F.lit(10**scale)).cast("long")
 
 
+def dec(col: Column | str, scale: int = 2, prec: int = 18) -> Column:
+    """Money/measure discipline: exact ``decimal(prec, scale)`` before any SUM."""
+    c = F.col(col) if isinstance(col, str) else col
+    return c.cast(f"decimal({prec},{scale})")
+
+
 def limb_split(units: Column, limb_bits: int = LIMB_BITS) -> tuple[Column, Column]:
     """(hi, lo) with ``units == hi*2^limb_bits + lo`` exactly,
     ``0 <= lo < 2^limb_bits``.

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import functions as F
 
 from kompactor_spark.compaction import CompactionJob
-from kompactor_spark.compaction.metadata import Swap, commit
+from kompactor_spark.compaction.metadata import ParquetFileInfo, Swap, commit
 from kompactor_spark.compaction.planner import GroupKey
 from kompactor_spark.compaction.writer import land, staged_write
 from kompactor_spark.queries import register
@@ -38,7 +38,9 @@ def _build_layout(spark, sf_dir: str, root: str) -> None:
 
     hour_dir = GroupKey.for_hour(_HOST, 0, 1, min_hour).dir()
     with staged_write(rows.withColumn("_wal", F.col("event_id") % 3), "_wal", root, _HOST) as staged:
-        infos = [land(path, root, f"{hour_dir}/{int(i) + 1:010d}.parquet") for i, path in staged.items()]
+        infos = [ParquetFileInfo.from_file(path, f"{hour_dir}/{int(i) + 1:010d}.parquet") for i, path in staged.items()]
+        for path, info in zip(staged.values(), infos):
+            land(path, root, info.path)
     commit(root, _HOST, [Swap(added=infos, db=0, table=1)])
 
 

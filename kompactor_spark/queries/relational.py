@@ -11,16 +11,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kompactor_spark import fixedpoint as fx
+from kompactor_spark.fixedpoint import dec
 from kompactor_spark.operators.asof import asof_join_split
 from kompactor_spark.queries import register
 from kompactor_spark.session import dim_broadcast
 from kompactor_spark.tables import loader
-
-
-def dec(col, scale: int = 2, prec: int = 18) -> F.Column:
-    """Money/measure discipline: exact decimal before any SUM."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
 
 
 # --------------------------------------------------------------------------

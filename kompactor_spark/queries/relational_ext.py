@@ -8,14 +8,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kompactor_spark.fixedpoint import dec
 from kompactor_spark.queries import register
-from kompactor_spark.session import bounded_broadcast
 from kompactor_spark.tables import loader
-
-
-def dec(col, scale: int = 2, prec: int = 18) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
 
 
 # --------------------------------------------------------------------------
@@ -1694,11 +1689,12 @@ def j19_nearest_value_join(spark, sf_dir):
         .repartitionByRange("l_orderkey", "l_linenumber")
     )
     return (
-        # bounded_broadcast: cells = DISTINCT p_retailprice — bounded by
-        # the price DOMAIN (~2M values at saturation), not by SF; see
-        # session.bounded_broadcast for why this side must never lose
-        # its hint (non-equi join + the sort-below-join order contract).
-        f.join(bounded_broadcast(cells), (F.col("up") >= F.col("lo")) & (F.col("up") < F.col("hi")))
+        # cells = DISTINCT p_retailprice, bounded by the price domain
+        # (~2M values at saturation), not by SF, so the hint always
+        # holds; without it this non-equi join can plan a
+        # CartesianProduct, which repartitions the fact side and breaks
+        # the sort-below-join order.
+        f.join(F.broadcast(cells), (F.col("up") >= F.col("lo")) & (F.col("up") < F.col("hi")))
         .select(
             "l_orderkey",
             "l_linenumber",

@@ -9,14 +9,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kompactor_spark.fixedpoint import dec
 from kompactor_spark.operators.skew import salted_agg, salted_broadcast_dim_join
 from kompactor_spark.queries import register
 from kompactor_spark.tables import loader
-
-
-def dec(col, scale: int = 2, prec: int = 18) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
 
 
 # --------------------------------------------------------------------------

@@ -15,14 +15,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from kompactor_spark.fixedpoint import dec
 from kompactor_spark.queries import register
 from kompactor_spark.session import dim_broadcast
 from kompactor_spark.tables import loader
-
-
-def dec(col, scale: int = 2, prec: int = 18) -> F.Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({prec},{scale})")
 
 
 _REV = "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(4,2)) - CAST(l_discount AS DECIMAL(4,2)))"

@@ -10,8 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from kompactor_spark.fixedpoint import dec
 from kompactor_spark.queries import register
-from kompactor_spark.queries.relational import dec
 from kompactor_spark.tables import loader
 
 

@@ -159,31 +159,3 @@ def dim_broadcast(df):
     if os.environ.get("KOMPACTOR_DIM_BROADCAST", "force") == "auto":
         return df
     return F.broadcast(df)
-
-
-def bounded_broadcast(df):
-    """Broadcast hint for a DOMAIN-BOUNDED side — the audit's third lane
-    (round 15, closing VERDICT r14 "what's wrong" #5).
-
-    The round-14 audit split broadcast sites into TRUE constants (keep
-    ``F.broadcast``) and SF-proportional dimension sides (route through
-    :func:`dim_broadcast`, env-switchable). A few sides fit neither
-    bucket: they derive from an SF-proportional table but are bounded
-    by a VALUE DOMAIN, not by row count — j19's Voronoi cells are
-    DISTINCT ``p_retailprice`` (the TPC-H price formula admits ~2M
-    distinct values regardless of SF, ~50 MB of (p, lo, hi) rows at
-    saturation — comfortably broadcastable forever). These sides keep
-    an unconditional hint BY POLICY rather than by per-site comment:
-    routing them through ``dim_broadcast`` would be wrong, because in
-    ``auto`` mode dropping the hint on a NON-EQUI join (no equi-keys →
-    only BroadcastNestedLoop or Cartesian are plannable) lets the
-    planner fall back to a CartesianProduct once the side outgrows
-    ``autoBroadcastJoinThreshold`` — both catastrophic AND, for j19's
-    sort-below-join shape, silently order-destroying (the cartesian
-    repartitions the fact side). A helper call instead of a bare
-    ``F.broadcast`` marks the site as audited-and-classified; the
-    classification itself (domain-boundedness) is the caller's burden
-    and is stated at each call site."""
-    from pyspark.sql import functions as F
-
-    return F.broadcast(df)

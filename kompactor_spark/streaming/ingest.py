@@ -27,7 +27,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, TIME_COL, Swap, commit
+from kompactor_spark.compaction.metadata import TIME_COL, ParquetFileInfo, Swap, commit
 from kompactor_spark.compaction.planner import GroupKey
 from kompactor_spark.compaction.writer import land, staged_write
 from kompactor_spark.timeutil import NS_PER_HOUR, ns_bucket
@@ -61,10 +61,6 @@ class IngestJob:
         os.makedirs(os.path.join(data_dir, host, "snapshots"), exist_ok=True)
         os.makedirs(os.path.join(data_dir, host, "dbs"), exist_ok=True)
 
-    @property
-    def snapshot_path(self) -> str:
-        return os.path.join(self.data_dir, self.host, "snapshots", INGEST_SNAPSHOT)
-
     def attach(self, stream: DataFrame, checkpoint: str):
         """Wire this sink into a streaming DataFrame; returns the query."""
         return (
@@ -88,9 +84,10 @@ class IngestJob:
         with_bucket = df.withColumn("_hour_ns", ns_bucket(F.col(TIME_COL), NS_PER_HOUR))
         wal = int(batch_id) + 1
         with staged_write(with_bucket, "_hour_ns", self.data_dir, self.host) as staged:
-            # every path before the first move: a bad key leaves no file in the lake
-            rels = {path: self._wal_relpath(hour_key, wal) for hour_key, path in staged.items()}
-            new_infos = [land(path, self.data_dir, rel) for path, rel in rels.items()]
+            # every entry before the first move: a bad key leaves no file in the lake
+            new_infos = [ParquetFileInfo.from_file(path, self._wal_relpath(k, wal)) for k, path in staged.items()]
+            for path, info in zip(staged.values(), new_infos):
+                land(path, self.data_dir, info.path)
         if new_infos:
             commit(self.data_dir, self.host, [Swap(added=new_infos, db=self.db, table=self.table)])
             batch_max = max(i.max_time for i in new_infos)

@@ -14,7 +14,7 @@ import duckdb
 import pyarrow.parquet as pq
 import pytest
 
-from kompactor_spark.compaction import CompactionJob
+from kompactor_spark.compaction import CompactionJob, planner
 from kompactor_spark.compaction.metadata import read_snapshot
 
 from tests import fixtures_compaction as FX
@@ -248,18 +248,16 @@ def test_dry_run_is_read_only(spark, tmp_path):
     assert open(glob.glob(os.path.join(root, FX.HOST, "snapshots", "*.json"))[0]).read() == before_snap
 
 
-def test_dry_run_reports_the_split_outputs(spark, tmp_path):
+def test_dry_run_reports_the_split_outputs(spark, tmp_path, monkeypatch):
     """A dry run previews the outputs the real run writes, split parts
     included, and writes nothing."""
-    from kompactor_spark.compaction import CompactionConfig
-
     root = str(tmp_path / "lake")
     FX.basic_hour(root)
-    cfg = CompactionConfig(max_desired_file_size_bytes=4000)  # large cutoff 5200 B
+    monkeypatch.setattr(planner, "LARGE_CUTOFF_BYTES", 5200)  # a 4000 B target + 30 %
     before = _lake_bytes(root)
-    dry = run_job(spark, root, config=cfg, dry_run=True)
+    dry = run_job(spark, root, dry_run=True)
     assert _lake_bytes(root) == before
-    real = run_job(spark, root, config=cfg)
+    real = run_job(spark, root)
     assert [os.path.basename(p)[-11:] for p in real.results[0].output_paths] == ["_p0.parquet", "_p1.parquet"]
     assert [r.output_paths for r in dry.results] == [r.output_paths for r in real.results]
 
@@ -312,22 +310,21 @@ def test_generation_window_gating(spark, tmp_path):
     max_t = max(f.max_time for s in snaps for _, _, f in s.all_files())
 
     job = CompactionJob(spark, root, [FX.HOST])
-    hot = job.run_generation(now_ns=max_t + 3600 * FX.NS)[0]  # 1 h later: still hot
+    window = 24 * 3600 * FX.NS
+    hot = job.run_generation(before_ns=max_t + 3600 * FX.NS - window)[0]  # 1 h later: still hot
     assert hot.compacted_groups == 0
-    cold = job.run_generation(now_ns=max_t + 25 * 3600 * FX.NS)[0]  # past the window
+    cold = job.run_generation(before_ns=max_t + 25 * 3600 * FX.NS - window)[0]  # past the window
     assert cold.compacted_groups == 1
 
 
-def test_oversized_output_splits(spark, tmp_path):
+def test_oversized_output_splits(spark, tmp_path, monkeypatch):
     """D2/D3: projected output above the large cutoff splits 70/30 by
     time into _p<i> parts; conservation + invariants hold."""
-    from kompactor_spark.compaction import CompactionConfig
-
     root = str(tmp_path / "split")
     FX.basic_hour(root)
     before = rows_by_table(root)
-    cfg = CompactionConfig(max_desired_file_size_bytes=4000)  # large cutoff 5200 B
-    report = run_job(spark, root, config=cfg)
+    monkeypatch.setattr(planner, "LARGE_CUTOFF_BYTES", 5200)  # a 4000 B target + 30 %
+    report = run_job(spark, root)
     assert report.compacted_groups == 1
     outs = report.results[0].output_paths
     assert len(outs) >= 2, f"expected a split, got {outs}"
@@ -344,13 +341,13 @@ def test_oversized_output_splits(spark, tmp_path):
         assert hi1 < lo2
 
 
-def test_split_empty_part_not_cataloged(spark, tmp_path):
+def test_split_empty_part_not_cataloged(spark, tmp_path, monkeypatch):
     """A split part no row falls into (rows only at the hour's edges)
     writes no file and is not cataloged; the parts that are hold all
     40 rows in disjoint time ranges, and the lake stays fsck-clean. A
     dry run lists every planned part: the real outputs are its outputs
     without the empty parts."""
-    from kompactor_spark.compaction import CompactionConfig, compute_split_cuts
+    from kompactor_spark.compaction import compute_split_cuts
     from kompactor_spark.compaction.fsck import fsck_host
 
     root = str(tmp_path)
@@ -360,14 +357,14 @@ def test_split_empty_part_not_cataloged(spark, tmp_path):
         b.add_parquet(0, 3, "2025-01-26", 14, f"{wal:010d}.parquet",
                       FX.make_rows(20, t0, FX.NS, seed=wal))
     b.write_snapshot()
-    cfg = CompactionConfig(max_desired_file_size_bytes=1000)
+    monkeypatch.setattr(planner, "LARGE_CUTOFF_BYTES", 1300)  # a 1000 B target + 30 %
     infos = [e["info"] for e in b.files]
     cuts = compute_split_cuts(min(i["min_time"] for i in infos), max(i["max_time"] for i in infos),
-                              sum(i["size_bytes"] for i in infos), cfg)
+                              sum(i["size_bytes"] for i in infos))
     times = [t for i in infos for t in pq.read_table(os.path.join(root, i["path"]), columns=["time"])["time"].to_pylist()]
     filled = {sum(t > c for c in cuts) for t in times}  # parts with a row: (lo, hi] bounds
-    dry = run_job(spark, root, config=cfg, dry_run=True)
-    report = run_job(spark, root, config=cfg)
+    dry = run_job(spark, root, dry_run=True)
+    report = run_job(spark, root)
     outs = report.results[0].output_paths
     assert len(outs) < len(cuts) + 1  # at least one part got no rows
     assert len(dry.results[0].output_paths) == len(cuts) + 1
@@ -384,13 +381,13 @@ def test_split_empty_part_not_cataloged(spark, tmp_path):
 
 
 def test_compute_split_cuts_unit():
-    from kompactor_spark.compaction import CompactionConfig, compute_split_cuts
+    from kompactor_spark.compaction import compute_split_cuts
 
-    cfg = CompactionConfig()  # 100 MiB target, 130 MiB large cutoff
-    assert compute_split_cuts(0, 1000, 50 * 1024 * 1024, cfg) == []
-    cuts = compute_split_cuts(0, 1000, 200 * 1024 * 1024, cfg)
+    # 100 MiB target, 130 MiB large cutoff
+    assert compute_split_cuts(0, 1000, 50 * 1024 * 1024) == []
+    cuts = compute_split_cuts(0, 1000, 200 * 1024 * 1024)
     assert cuts == [700]  # one 70/30 cut; 30% tail (60 MiB) fits
-    big = compute_split_cuts(0, 10_000, 1000 * 1024 * 1024, cfg)
+    big = compute_split_cuts(0, 10_000, 1000 * 1024 * 1024)
     assert len(big) >= 2 and big == sorted(big)
 
 
@@ -554,7 +551,8 @@ def test_catalog_read_consistent_through_compaction(spark, tmp_path):
 def test_expire_snapshots_folds_history(spark, tmp_path):
     """Snapshot expiry folds N snapshot files into one with an
     identical file manifest (state preserved, history horizon moved);
-    fsck stays clean and pre-expiry as_of now raises."""
+    fsck stays clean and pre-expiry as_of now raises, also after a
+    later ingest."""
     from kompactor_spark.compaction.fsck import fsck_host
     from kompactor_spark.compaction.metadata import expire_snapshots
     from kompactor_spark.compaction.readers import files_as_of, read_table, snapshot_ids
@@ -580,6 +578,19 @@ def test_expire_snapshots_folds_history(spark, tmp_path):
         read_table(spark, root, FX.HOST, 0, 3, as_of=2)  # horizon moved
     # idempotent second call is a no-op
     assert expire_snapshots(root, FX.HOST) == {"merged": 0, "kept": 1}
+
+    # a later ingest goes into the folded snapshot: no snapshot id below
+    # the horizon comes back, so as_of=2 still raises
+    from kompactor_spark.streaming.ingest import IngestJob
+
+    new = FX.make_rows(10, h10 + 2 * 3600 * FX.NS, 2000 * FX.NS, seed=3)
+    IngestJob(root, FX.HOST, db=0, table=3).write_batch(spark.createDataFrame(new.to_pandas()), 9)
+    assert snapshot_ids(root, FX.HOST) == [3]
+    with pytest.raises(FileNotFoundError):
+        read_table(spark, root, FX.HOST, 0, 3, as_of=2)
+    latest = [r.time for r in read_table(spark, root, FX.HOST, 0, 3).select("time").collect()]
+    assert len(latest) == 60 and set(new.column("time").to_pylist()) <= set(latest)
+    assert fsck_host(root, FX.HOST).ok
 
 
 def test_stats_less_file_cataloged_and_checked(tmp_path):

@@ -14,11 +14,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kompactor_spark.compaction import CompactionJob
-from kompactor_spark.compaction.metadata import adopt
+from kompactor_spark.compaction.metadata import INGEST_SNAPSHOT, adopt
 
 from tests import fixtures_compaction as FX
 from tests.test_compaction import assert_invariants, disk_parquets
 from tests.test_streaming import BASE, EVENTS_SCHEMA, NS, _rows, _write_batches
+
+
+def ingest_snapshot(root):
+    """The snapshot an ingest into a fresh lake writes."""
+    return os.path.join(root, FX.HOST, "snapshots", INGEST_SNAPSHOT)
+
 
 # the events schema as the lake takes it: event time in a column named ``time``
 LAKE_SCHEMA = T.StructType(
@@ -151,11 +157,11 @@ def test_ingest_batch_replay_idempotent(spark, tmp_path):
 
     job.write_batch(rows, 0)
     files_1 = sorted(disk_parquets(root))
-    snap_1 = open(job.snapshot_path).read()
+    snap_1 = open(ingest_snapshot(root)).read()
 
     job.write_batch(rows, 0)  # replay of batch 0
     assert sorted(disk_parquets(root)) == files_1
-    assert open(job.snapshot_path).read() == snap_1
+    assert open(ingest_snapshot(root)).read() == snap_1
 
     job.write_batch(spark.createDataFrame(_rows(100, BASE + 60 * NS, user=2, n=5), LAKE_SCHEMA), 1)
     assert len(disk_parquets(root)) == len(files_1) + len(
@@ -192,7 +198,7 @@ def test_ingest_auto_compacts_closed_hours(spark, tmp_path):
     # catalog tracks the merge exactly; rows conserved
     from kompactor_spark.compaction.metadata import read_snapshot
 
-    snap = read_snapshot(job.snapshot_path)
+    snap = read_snapshot(ingest_snapshot(root))
     assert snap.row_count == 50
     assert {f.path for _, _, f in snap.all_files()} == set(on_disk)
 
@@ -316,7 +322,7 @@ def test_ingest_single_batch_spans_hours(spark, tmp_path, monkeypatch):
         assert len(on_disk) == 3, on_disk  # one file per hour, same wal number
         assert all(os.path.basename(p) == "0000000001.parquet" for p in on_disk)
 
-        snap = read_snapshot(job.snapshot_path)
+        snap = read_snapshot(ingest_snapshot(root))
         infos = sorted((f for _, _, f in snap.all_files()), key=lambda f: f.min_time)
         assert [f.row_count for f in infos] == [30, 30, 30]
         for i, f in enumerate(infos):

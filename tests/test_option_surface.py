@@ -1,18 +1,18 @@
 """The package's option surface: the environment variables it reads,
-the compaction config's fields, the CLI's flags and the lake entry
+the compaction planner's parameters, the CLI's flags and the lake entry
 points' parameters.
 
 Every knob is a code path someone has to keep working, so a new one
 needs an explicit decision: add it here with its reason, or keep the
 arm that won its A/B and delete the other. The lake's format facts
-(the ``time`` column, zstd, 100,000-row row groups) are constants, not
-options.
+(the ``time`` column, zstd, 100,000-row row groups) and the planner's
+size policy (the 130 MiB split cutoff, the 70/30 split) are constants,
+not options.
 """
 
 from __future__ import annotations
 
 import ast
-import dataclasses
 import inspect
 import pathlib
 
@@ -57,15 +57,18 @@ def test_env_knobs_are_exactly_the_allowed_set():
     assert read == ALLOWED
 
 
-def test_compaction_config_is_the_planner_policy():
-    from kompactor_spark.compaction import CompactionConfig
+def test_planner_takes_no_policy_parameter():
+    """D1-D3 are ``planner`` constants; the generation window (D4) is the
+    caller's cutoff, as the hour pass's is."""
+    from kompactor_spark.compaction import CompactionJob, compute_split_cuts, plan_generation
 
-    assert [f.name for f in dataclasses.fields(CompactionConfig)] == [
-        "max_desired_file_size_bytes",  # D1
-        "percentage_max_file_size",  # D2
-        "split_percentage",  # D3
-        "time_window_hours",  # D4
-    ]
+    def params(fn):
+        return list(inspect.signature(fn).parameters)
+
+    assert params(CompactionJob) == ["spark", "data_dir", "hosts", "dry_run"]
+    assert params(CompactionJob.run_generation) == ["self", "before_ns"]
+    assert params(plan_generation) == ["host", "manifest", "before_ns"]
+    assert params(compute_split_cuts) == ["min_time", "max_time", "total_bytes"]
 
 
 CLI_FLAGS = {
